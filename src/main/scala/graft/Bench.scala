@@ -130,7 +130,7 @@ object Bench {
       // the bypass writer's M×R shuffle files dominated small-stage
       // cost on the bench rig — see RipSession for the profile.
       // Env-overridable for A/Bs (VERDICT r16 #5 asked for one on the
-      // TPC-H cluster; the r17 A/B is recorded in OPTIMIZATION_r17.md).
+      // TPC-H cluster).
       .config("spark.shuffle.sort.bypassMergeThreshold",
         sys.env.getOrElse("SPARK_GRAFT_BYPASS", "2"))
       // AQE partition coalescing honors DATA VOLUME, not core count
@@ -202,7 +202,7 @@ object Bench {
           val lvl = e.blockUpdatedInfo.storageLevel
           // a cached RDD block DEMOTED out of memory to disk is the
           // storage-eviction signature (registry frames persist
-          // MEMORY_AND_DISK — Dedup.cachedPersist documents the
+          // MEMORY_AND_DISK — FrameCache.persist documents the
           // invariant). Non-RDD blocks (broadcast/shuffle
           // housekeeping) never count (ADVICE r14).
           if (e.blockUpdatedInfo.blockId.isRDD && lvl.isValid &&
@@ -274,8 +274,10 @@ object Bench {
     // every frame the query uses (recorded per-run in queries_reg as
     // miss_by_run=[N,0,0]) and median-of-3 reports the steady-state cost
     // of runs 2-3 — the rebuild is charged inside a timed, recorded run
-    // instead of hidden in warmup. Cross-query warm serving is gone by
-    // construction, so `warm_suspect` should now stay empty. trimKeep
+    // instead of hidden in warmup. Registry-driven cross-query warmth is
+    // gone by construction; any remaining `warm_suspect` flags come from
+    // sources outside the registry (driver-side artifacts in FrameCache,
+    // Spark's own caches, JIT and OS page-cache warmth). trimKeep
     // stays env-tunable for debugging (SPARK_GRAFT_TRIM=96 restores the
     // old basis for A/Bs) but defaults to 0 = honest.
     val trimKeep =
@@ -286,12 +288,12 @@ object Bench {
     // trim-initiated NONE block update is stamped deliberate and only
     // BlockManager-initiated loss counts outside it
     def deliberateTrim(): Unit = evictTracker.deliberately {
-      operators.Dedup.trimCachesTo(trimKeep, blocking = true)
+      FrameCache.trimTo(trimKeep, blocking = true)
       System.gc()
       drainListenerBus()
     }
     deliberateTrim() // shed the warmup pass's full set
-    operators.Dedup.resetRegistryPeak() // peak measures SWEEP demand
+    FrameCache.resetPeak() // peak measures SWEEP demand
     val regDebug = sys.env.contains("SPARK_GRAFT_REG_DEBUG")
     // per-run (wall, cpu, ok, registry-miss Δ, registry-evict Δ,
     // block-loss Δ): the state deltas turn "did the cached state
@@ -299,14 +301,13 @@ object Bench {
     def instrumentedRun(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Double, Boolean, Long, Long, Long) = {
-      val (h0, m0, e0, b0) = (operators.Dedup.registryHits,
-        operators.Dedup.registryMisses, operators.Dedup.registryEvictions,
-        evictTracker.lost)
+      val (s0, b0) = (FrameCache.stats, evictTracker.lost)
       val (dt, cpu, ok) = timedRun(fn)
-      val (mD, eD, bD) = (operators.Dedup.registryMisses - m0,
-        operators.Dedup.registryEvictions - e0, evictTracker.lost - b0)
+      val s1 = FrameCache.stats
+      val (mD, eD, bD) = (s1.misses - s0.misses,
+        s1.evictions - s0.evictions, evictTracker.lost - b0)
       if (regDebug && dt > 0.5)
-        System.err.println(f"REGDBG $name%s $dt%.3f s hits+${operators.Dedup.registryHits - h0} miss+$mD evict+$eD blockloss+$bD")
+        System.err.println(f"REGDBG $name%s $dt%.3f s hits+${s1.hits - s0.hits} miss+$mD evict+$eD blockloss+$bD")
       (dt, cpu, ok, mD, eD, bD)
     }
     val results = selected.map { case (name, fn) =>
@@ -318,17 +319,15 @@ object Bench {
       // across otherwise-identical runs.
       deliberateTrim()
       val (g0, s0, d0) = (gcMs.get(), spillBytes.get(), memDrops.get())
-      val (h0, m0, e0, b0) = (operators.Dedup.registryHits,
-        operators.Dedup.registryMisses, operators.Dedup.registryEvictions,
-        evictTracker.lost)
+      val (st0, b0) = (FrameCache.stats, evictTracker.lost)
       val runs = (1 to 3).map(_ => instrumentedRun(name, fn))
       val times = runs.map(_._1).sorted
       val cpus = runs.map(_._2).sorted
+      val st1 = FrameCache.stats
       val evidence = SweepEvidence(
         gcMs.get() - g0, spillBytes.get() - s0, memDrops.get() - d0,
-        operators.Dedup.registryHits - h0,
-        operators.Dedup.registryMisses - m0,
-        operators.Dedup.registryEvictions - e0,
+        st1.hits - st0.hits, st1.misses - st0.misses,
+        st1.evictions - st0.evictions,
         evictTracker.lost - b0,
         runs.map(_._4))
       (name, times(1), times.head, cpus(1), runs.forall(_._3), evidence)
@@ -435,26 +434,26 @@ object Bench {
     // reuse set (the r8 thrash signature) — surfaced here so the next
     // one is a one-glance read instead of a round of timing forensics.
     val registryJson = {
-      val st = operators.Dedup.cacheStats(spark).collect().head
-      System.err.println(s"dedup registry: hits=${st.getLong(0)} " +
-        s"misses=${st.getLong(1)} evictions=${st.getLong(2)} " +
-        s"entries=${st.getLong(3)} cap=${st.getLong(4)} " +
-        s"trims=${operators.Dedup.registryTrims} " +
-        s"peak=${operators.Dedup.registryPeakEntries} trimKeep=$trimKeep " +
+      val st = FrameCache.stats
+      System.err.println(s"dedup registry: hits=${st.hits} " +
+        s"misses=${st.misses} evictions=${st.evictions} " +
+        s"entries=${st.frames} cap=${FrameCache.maxCached} " +
+        s"trims=${st.trims} " +
+        s"peak=${st.peakFrames} trimKeep=$trimKeep " +
         s"blockLoss=${evictTracker.lost} " +
         s"classifierMemoHits=${operators.Curate.classifierMemoHits}")
       // machine-readable in bench_full.json: evictions>0 during a sweep
       // is the thrash signature (VERDICT r12 #1) — the judge and the
       // next round's tripwire can now read it without log archaeology.
       // trims = deliberate between-query hygiene (NOT thrash);
-      // peak_entries/trim_keep record the resident-set margin
-      // (VERDICT r15 #8 — RegistrySweepSpec pins entries ≤ trim_keep−8);
+      // peak_entries/trim_keep record the resident-set demand
+      // (VERDICT r15 #8);
       // block_loss = BlockManager-initiated cached-block removals,
       // deliberate teardown excluded (VERDICT r15 #2).
-      s"""{"hits":${st.getLong(0)},"misses":${st.getLong(1)},"evictions":${
-        st.getLong(2)},"entries":${st.getLong(3)},"cap":${st.getLong(4)},"trims":${
-        operators.Dedup.registryTrims},"peak_entries":${
-        operators.Dedup.registryPeakEntries},"trim_keep":$trimKeep,"block_loss":${
+      s"""{"hits":${st.hits},"misses":${st.misses},"evictions":${
+        st.evictions},"entries":${st.frames},"cap":${FrameCache.maxCached},"trims":${
+        st.trims},"peak_entries":${
+        st.peakFrames},"trim_keep":$trimKeep,"block_loss":${
         evictTracker.lost}}"""
     }
     // Weather-proofing (VERDICT r10 #1, upgraded per r11 #1): every
@@ -569,10 +568,7 @@ object Bench {
       "q225_bpe_merges", "q226_bpe_segments", "q243_bpe_fertility")
     val coldAll = sys.env.get("SPARK_GRAFT_COLD").contains("1")
     def coldReset(): Unit = {
-      operators.Dedup.clearDedupCaches()
-      operators.Curate.clearClassifierMemo()
-      operators.Similarity.clearKmeansMemo()
-      functions.Bpe.clearMergesMemo()
+      FrameCache.clear()
       val pairTable = "graft_pairs_" + sfDir.replaceAll("[^a-zA-Z0-9]", "_")
       try spark.sql(s"DROP TABLE IF EXISTS `$pairTable`")
       catch { case _: Throwable => () }

@@ -142,7 +142,7 @@ object Tables {
     val bytes = try {
       val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
       p.getFileSystem(sc.hadoopConfiguration).getFileStatus(p).getLen
-    } catch { case _: Throwable => Long.MaxValue }
+    } catch { case _: Throwable => return raw } // size unknown: no floor
     val want = math.min(sc.defaultParallelism.toLong,
       math.max(1L, (bytes + target - 1) / target)).toInt
     val splits = math.max(1L, (bytes + maxSplit - 1) / maxSplit)

@@ -79,7 +79,7 @@ object Bpe {
   private def wordSyms(docs: DataFrame, textCol: String): DataFrame = {
     val symInit = concat(lit(S + S), concat_ws(S + S,
       filter(split(col("w"), ""), x => x =!= lit(""))), lit(S + S))
-    graft.operators.Dedup.registryPersist(docs
+    graft.FrameCache.persist(docs
       .select(explode(TextFns.tokens(col(textCol))).as("w"))
       .filter(length(col("w")) > 0 && col("w").rlike("^[ -~]+$"))
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
@@ -168,79 +168,52 @@ object Bpe {
     require(lookahead >= 1, s"lookahead must be >= 1, got $lookahead")
     val spark = docs.sparkSession
     val src = wordSyms(docs, textCol)
-    // Session memo (kmeans/classifier-memo contract): the merge table
-    // is a pure function of (word-frequency slice, rounds, lookahead)
-    // and training is a DRIVER-SEQUENCED job chain — the expensive
-    // part no registry frame can absorb. Consumers that re-train per
-    // call (q226 segments, q243 fertility) pay it once per session;
-    // the bench cold lane clears this so the build cost stays
-    // measured, and Models.ensureBpeMerges remains the cross-SESSION
-    // warm path. Deterministic plans only (the kmMemo rule).
-    val memoKey = (spark, src.queryExecution.analyzed.canonicalized,
-      rounds, lookahead)
-    val memoizable = !graft.operators.GraftPlanUtil.nondeterministic(
-      docs.queryExecution.analyzed)
-    // single-lock read: containsKey + get under separate locks raced
-    // with a concurrent put+LRU-evict in between (ADVICE r13 — the get
-    // could return null and parallelize(null) would NPE)
-    val cached =
-      if (memoizable) mergesMemo.synchronized(Option(mergesMemo.get(memoKey)))
-      else None
-    cached.foreach { rows =>
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), outSchema)
-    }
-    var cur = src
-    val merges = scala.collection.mutable.ArrayBuffer[Row]()
-    val mergedSet = scala.collection.mutable.Set[String]()
-    var sinceCheckpoint = 0
-    var exhausted = false
-    while (merges.size < rounds && !exhausted) {
-      val top = pairTable(cur).limit(lookahead + 1).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
-      if (top.isEmpty) exhausted = true
-      else {
-        val nextCount = if (top.size > lookahead) top.last._3 else 0L
-        val selected = safePrefix(top.take(lookahead), nextCount,
-          mergedSet.toSet).take(rounds - merges.size)
-        selected.foreach { case (l, r, c) =>
-          merges += Row(merges.size + 1, l, r, l + r, c)
-          mergedSet += (l + r)
-        }
-        cur = cur.withColumn("sym", selected.foldLeft(col("sym")) {
-          case (s, (l, r, _)) => applyMerge(s, l, r)
-        })
-        // Bound plan/expression depth for deep vocabularies: the merge
-        // chain is one nested `replace` per learned merge, so truncate
-        // lineage every few rounds. Lazy — materializes inside the
-        // next round's collect, adding no extra job. (Single-JVM
-        // caveat: localCheckpoint blocks don't survive executor loss;
-        // on a long-lived cluster trainer prefer reliable checkpoints.)
-        sinceCheckpoint += 1
-        if (sinceCheckpoint >= 8 && merges.size < rounds) {
-          cur = cur.localCheckpoint(false); sinceCheckpoint = 0
+    // The merge table is a pure function of (word-frequency slice,
+    // rounds, lookahead) and training is a driver-sequenced job chain
+    // no persisted frame can absorb: consumers that re-train per call
+    // (q226 segments, q243 fertility) pay it once per session.
+    // Models.ensureBpeMerges remains the cross-session warm path.
+    val rows = graft.FrameCache.memo("bpeMerges", src)(rounds, lookahead) {
+      var cur = src
+      val merges = scala.collection.mutable.ArrayBuffer[Row]()
+      val mergedSet = scala.collection.mutable.Set[String]()
+      var sinceCheckpoint = 0
+      var exhausted = false
+      while (merges.size < rounds && !exhausted) {
+        val top = pairTable(cur).limit(lookahead + 1).collect()
+          .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
+        if (top.isEmpty) exhausted = true
+        else {
+          val nextCount = if (top.size > lookahead) top.last._3 else 0L
+          val selected = safePrefix(top.take(lookahead), nextCount,
+            mergedSet.toSet).take(rounds - merges.size)
+          selected.foreach { case (l, r, c) =>
+            merges += Row(merges.size + 1, l, r, l + r, c)
+            mergedSet += (l + r)
+          }
+          cur = cur.withColumn("sym", selected.foldLeft(col("sym")) {
+            case (s, (l, r, _)) => applyMerge(s, l, r)
+          })
+          // Bound plan/expression depth for deep vocabularies: the merge
+          // chain is one nested `replace` per learned merge, so truncate
+          // lineage every few rounds. Lazy — materializes inside the
+          // next round's collect, adding no extra job. (Single-JVM
+          // caveat: localCheckpoint blocks don't survive executor loss;
+          // on a long-lived cluster trainer prefer reliable checkpoints.)
+          sinceCheckpoint += 1
+          if (sinceCheckpoint >= 8 && merges.size < rounds) {
+            cur = cur.localCheckpoint(false); sinceCheckpoint = 0
+          }
         }
       }
+      merges.toSeq
     }
-    if (memoizable) mergesMemo.synchronized {
-      mergesMemo.put(memoKey, merges.toSeq)
-      while (mergesMemo.size > 32)
-        mergesMemo.remove(mergesMemo.keySet.iterator.next())
-    }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(merges.toSeq, 1), outSchema)
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), outSchema)
   }
 
-  /** Learned-merge memo for [[bpeMerges]] — (session, canonicalized
-    * word-frequency plan, rounds, lookahead), deterministic plans
-    * only, LRU-capped. */
-  private val mergesMemo =
-    new java.util.LinkedHashMap[Any, Seq[Row]](16, 0.75f, true)
-
-  /** Drop every memoized merge table — the bench cold lane uses this
-    * so the BPE family pays the full driver-sequenced training cost,
-    * measuring what a first-call production user pays. */
-  def clearMergesMemo(): Unit = mergesMemo.synchronized(mergesMemo.clear())
+  /** Drop every cached merge table. Kept for
+    * perfbench/src/Harness.scala; empties the whole [[graft.FrameCache]]. */
+  def clearMergesMemo(): Unit = graft.FrameCache.clear()
 
   /** Batched (approximate) BPE merge learning — the 32k-vocab scale
     * path. Each driver round collects the top `lookahead` viable pairs

@@ -190,7 +190,7 @@ object TextFns {
     // the unigram LM is consumed twice (normalizer + scoring join) —
     // persisted so the token explode backing it runs once (r16);
     // vocab-sized
-    val freqs = graft.operators.Dedup.registryPersist(
+    val freqs = graft.FrameCache.persist(
       terms.groupBy(col("term")).agg(count(lit(1)).as("tf")))
     val total = freqs.agg(sum(col("tf")).cast("double").as("tot"))
     terms.join(freqs, Seq("term"))
@@ -231,7 +231,7 @@ object TextFns {
     // reference re-expanded the tokenize+pair explode (4 corpus passes
     // total, measured 6.6 s CPU on q171); persisted it builds once
     // (r16). Bigram-vocab-sized — spills at scale like the q169 index.
-    val c2 = graft.operators.Dedup.registryPersist(
+    val c2 = graft.FrameCache.persist(
       bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2")))
     val c1 = c2.groupBy(col("w1")).agg(sum(col("c2")).as("c1"))
     val v = c2.agg(count_distinct(col("w2")).cast("double").as("v"))
@@ -300,7 +300,7 @@ object TextFns {
                     textCol: String): org.apache.spark.sql.DataFrame = {
     // groups × |alphabet| rows consumed by the totals AND the entropy
     // fold — persisted so the corpus char explode runs once (r16)
-    val counts = graft.operators.Dedup.registryPersist(docs
+    val counts = graft.FrameCache.persist(docs
       .select(col(byCol), explode(split(col(textCol), "")).as("__c"))
       .filter(col("__c") =!= "")
       .groupBy(col(byCol), col("__c")).agg(count(lit(1)).as("__n")))
@@ -355,7 +355,7 @@ object TextFns {
     // tf (the inverted index) feeds doc lengths, document frequency,
     // AND the scoring projection — three re-expansions of the token
     // explode unpersisted; one build persisted (r16)
-    val tf = graft.operators.Dedup.registryPersist(
+    val tf = graft.FrameCache.persist(
       terms.groupBy(col("doc_id"), col("term"))
         .agg(count(lit(1)).as("n")))
     val docLen = tf.groupBy(col("doc_id")).agg(sum(col("n")).as("len"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.FrameCache
 
 /** Duplicate-cluster assembly: connected components over a near-dup
   * pair set. (Builder-brief extension beyond the riptable surface —
@@ -100,55 +101,23 @@ object Cluster {
                           maxIter: Int = 30): DataFrame =
     connectedComponentsWithRounds(pairs, idA, idB, maxIter)._1
 
-  // Call-level memo: the star loop is an EAGER driver loop (one action
-  // per round), so lazy-plan caching cannot share it — q119/q122/q176/
-  // q186 all cluster the SAME pair set and would each pay the full
-  // O(log² n) rounds. Keyed by (session, canonicalized input plan,
-  // idA, idB, maxIter) — the id columns are part of the GRAPH, not
-  // just the frame, so two clusterings of one frame on different edge
-  // columns must not collide. The memoized result is pinned via
-  // localCheckpoint and the loop's intermediate blocks are freed, so a
-  // hit costs one cached-frame scan. LRU-capped; entries from stopped
-  // sessions are dropped. Evicted results are REMOVED but their
-  // blocks are NOT force-freed: a localCheckpoint truncates lineage,
-  // so unpersisting blocks an earlier caller still references would
-  // make that caller's lazy frame unrecomputable (hard job failure);
-  // the ContextCleaner reclaims the blocks once the last reference is
-  // GC'd, which is the correct lifetime.
-  private val ccMemo = new java.util.LinkedHashMap[
-    (org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      String, String, Int),
-    (DataFrame, Int)](16, 0.75f, true)
-  private val maxMemo = 4
-
   /** Same as connectedComponents, additionally returning the number of
     * star rounds executed before the edge set reached its fixpoint —
     * the empirical handle for the O(log² n) convergence contract (the
     * scale-stress spec drives a ≥500k-vertex giant component through
     * this and asserts the bound held).
     *
-    * Concurrency: the memo lock covers only lookup/insert, never the
-    * multi-round compute — concurrent callers with DIFFERENT pair sets
-    * cluster in parallel; two racing callers with the SAME key may
-    * both compute (harmless — last insert wins, both results correct).
+    * Cached in [[FrameCache]]: the star loop is an EAGER driver loop
+    * (one action per round), so lazy-plan caching cannot share it, and
+    * q119/q122/q176/q186 all cluster the same pair set. The id columns
+    * and `maxIter` are key parameters — two clusterings of one frame on
+    * different edge columns must not collide. A hit costs one scan of
+    * the pinned result; the result is an artifact, never unpersisted,
+    * so an earlier caller's lazy frame over it stays recomputable.
     */
   def connectedComponentsWithRounds(pairs: DataFrame, idA: String, idB: String,
-                                    maxIter: Int = 30): (DataFrame, Int) = {
-    val analyzed = pairs.queryExecution.analyzed
-    // Memo precondition: canonicalized-plan equality only implies
-    // result equality for DETERMINISTIC plans. A pair frame built via
-    // rand()/sample/uuid canonicalizes identically across two
-    // materializations that produce different edges — a memo hit would
-    // silently return the FIRST run's clustering. Such plans bypass
-    // the memo entirely (compute every time, still correct).
-    val memoizable = !GraftPlanUtil.nondeterministic(analyzed)
-    val key = (pairs.sparkSession, analyzed.canonicalized, idA, idB, maxIter)
-    val hit = if (!memoizable) None else ccMemo.synchronized {
-      ccMemo.entrySet().removeIf(e => e.getKey._1.sparkContext.isStopped)
-      Option(ccMemo.get(key))
-    }
-    hit.getOrElse {
+                                    maxIter: Int = 30): (DataFrame, Int) =
+    FrameCache.memo("connectedComponents", pairs)(idA, idB, maxIter) {
       val (out, rounds) = computeCC(pairs, idA, idB, maxIter)
       // pin the RESULT (vertex-count rows), then free the loop's
       // final frames — consumers only ever need the pinned output.
@@ -159,15 +128,8 @@ object Cluster {
       // long-lived service holding results across hours).
       val pinned = pin(out, eager = true)
       freeLocalCheckpoint(out)
-      val entry = (pinned, rounds)
-      if (memoizable) ccMemo.synchronized {
-        ccMemo.put(key, entry)
-        while (ccMemo.size > maxMemo)
-          ccMemo.remove(ccMemo.keySet.iterator.next())
-      }
-      entry
+      (pinned, rounds)
     }
-  }
 
   private def computeCC(pairs: DataFrame, idA: String, idB: String,
                         maxIter: Int): (DataFrame, Int) = {

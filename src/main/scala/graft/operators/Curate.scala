@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.FrameCache
 
 /** Corpus-curation operators for training-data pipelines (builder-brief
   * extension): deterministic source mixing, sequential sequence packing,
@@ -69,7 +70,7 @@ object Curate {
     // join and the undershot detection) — persist so each reference
     // doesn't re-run the caller's counts aggregate over the corpus
     // (r16; q182's executed plan ran it twice)
-    val b = Dedup.registryPersist(budgets)
+    val b = FrameCache.persist(budgets)
     val withB = df.join(broadcast(b), Seq(keyCol))
       .withColumn("__h", h)
       .withColumn("__t", thresh)
@@ -138,7 +139,7 @@ object Curate {
     // aggregate and the weight projection) — unpersisted, the corpus
     // count aggregate ran once per reference (two full scans in r16's
     // executed q182 plan); persisted, the corpus folds once
-    val counts = Dedup.registryPersist(
+    val counts = FrameCache.persist(
       df.groupBy(col(sourceCol)).agg(count(lit(1)).as("n")))
     val tot = counts.agg(sum(col("n")).as("__N"),
       sum(pow(col("n").cast("double"), lit(alpha))).as("__W"))
@@ -315,7 +316,7 @@ object Curate {
     // below used to be a fourth full gram scan; they now fold the ≤B-row
     // bucket aggregates). Frame is (id, bool, bucket) per gram — tiny
     // relative to text; spills at scale; clearDedupCaches() reclaims.
-    val grams = Dedup.registryPersist(df
+    val grams = FrameCache.persist(df
       .withColumn("__tgt", targetFilter)
       .select(col(idCol), col("__tgt"),
         graft.functions.TextFns.tokens(col(textCol)).as("__t"))
@@ -495,7 +496,7 @@ object Curate {
     // |sources|-bounded but referenced THREE times (the budget total and
     // both `staged` consumers below) — persisted so the corpus token
     // aggregate folds once instead of once per reference (r17)
-    val perSrc = Dedup.registryPersist(df.groupBy(col(sourceCol))
+    val perSrc = FrameCache.persist(df.groupBy(col(sourceCol))
       .agg(sum(tokens).cast("double").as("tokens"))
       .withColumn("cap", col("tokens") * lit(epochCap)))
     val tot = perSrc.agg((sum(col("tokens")) * lit(budgetFrac)).as("__B"),
@@ -599,14 +600,14 @@ object Curate {
     // null label ⇒ negative class (a doc with no label is "not the
     // target"), keeping y total so n and the gradient stay exact
     import org.apache.spark.sql.expressions.Window
-    val base = Dedup.registryPersist(
+    val base = FrameCache.persist(
       df.select(col(idCol).as("__id"),
           coalesce(label.cast("boolean"), lit(false))
             .cast("int").cast("long").as("__y"))
         .repartition(col("__id")))
     // id-partitioned AND id-sorted so every iteration's window sum runs
     // with no exchange and no sort on the persisted blocks
-    val x = Dedup.registryPersist(
+    val x = FrameCache.persist(
       df.select(col(idCol).as("__id"),
           explode(graft.functions.TextFns.tokens(col(textCol))).as("__t"))
         .select(col("__id"),
@@ -627,47 +628,40 @@ object Curate {
       dfm.collect().foreach(r => out(r.getLong(0).toInt) = r.getLong(1))
       out
     }
-    val memoKey = (df.sparkSession,
-      x.queryExecution.analyzed.canonicalized,
-      base.queryExecution.analyzed.canonicalized,
-      buckets, iters, lrNum, lrDen)
-    val memoizable = !GraftPlanUtil.nondeterministic(
-      df.queryExecution.analyzed)
+    def train(): Array[Long] = {
+      // constant across iterations: the label term gy_b = Σ_i y_i·x_ib
+      // — one join + one model-sized aggregate, hoisted out of the loop
+      val gy = modelSized(x.join(base, Seq("__id"))
+        .groupBy(col("__b"))
+        .agg(sum(col("__cnt") * col("__y")).as("__gy")))
+      var cur = Array.fill(buckets)(0L)
+      for (_ <- 1 to iters) {
+        // single join-free, sort-free pass over x per iteration:
+        // margin (window sum over the persisted id layout) and the
+        // positive gradient term gp_b = Σ_i P_i·x_ib in one scan;
+        // grad_b = gp_b − 4e6·gy_b exactly (docs with no tokens have
+        // no x rows and contribute 0 to both terms)
+        val gp = modelSized(
+          x.withColumn("__z", sum(col("__cnt") * wAt(cur)).over(byId))
+            .select(col("__b"), (col("__cnt") *
+              least(greatest(col("__z") + lit(2 * U), lit(0L)), lit(4 * U)))
+              .as("__gp"))
+            .groupBy(col("__b")).agg(sum(col("__gp")).as("__g")))
+        cur = Array.tabulate(buckets)(b => cur(b) -
+          Math.floorDiv(lrNum * (gp(b) - 4L * U * gy(b)), 4L * n * lrDen))
+      }
+      cur
+    }
     // n == 0 ⇒ nothing to fit (and the floorDiv denominator would be
     // 0): skip the update loop, weights stay 0, result is empty anyway
     val w: Array[Long] =
       if (n == 0 || iters == 0) Array.fill(buckets)(0L)
-      else if (memoizable && wMemo.synchronized(wMemo.containsKey(memoKey))) {
-        classifierMemoHits += 1
-        wMemo.synchronized(wMemo.get(memoKey))
-      }
       else {
-        // constant across iterations: the label term gy_b = Σ_i y_i·x_ib
-        // — one join + one model-sized aggregate, hoisted out of the loop
-        val gy = modelSized(x.join(base, Seq("__id"))
-          .groupBy(col("__b"))
-          .agg(sum(col("__cnt") * col("__y")).as("__gy")))
-        var cur = Array.fill(buckets)(0L)
-        for (_ <- 1 to iters) {
-          // single join-free, sort-free pass over x per iteration:
-          // margin (window sum over the persisted id layout) and the
-          // positive gradient term gp_b = Σ_i P_i·x_ib in one scan;
-          // grad_b = gp_b − 4e6·gy_b exactly (docs with no tokens have
-          // no x rows and contribute 0 to both terms)
-          val gp = modelSized(
-            x.withColumn("__z", sum(col("__cnt") * wAt(cur)).over(byId))
-              .select(col("__b"), (col("__cnt") *
-                least(greatest(col("__z") + lit(2 * U), lit(0L)), lit(4 * U)))
-                .as("__gp"))
-              .groupBy(col("__b")).agg(sum(col("__gp")).as("__g")))
-          cur = Array.tabulate(buckets)(b => cur(b) -
-            Math.floorDiv(lrNum * (gp(b) - 4L * U * gy(b)), 4L * n * lrDen))
-        }
-        if (memoizable) wMemo.synchronized {
-          wMemo.put(memoKey, cur)
-          while (wMemo.size > 32) wMemo.remove(wMemo.keySet.iterator.next())
-        }
-        cur
+        var trained = false
+        val cached = FrameCache.memo("textClassifier", x, base)(
+          buckets, iters, lrNum, lrDen) { trained = true; train() }
+        if (!trained) classifierMemoHits += 1
+        cached
       }
     val scored = base.join(margins(w), Seq("__id"), "left")
       .select(col("__id").as(idCol),
@@ -717,23 +711,14 @@ object Curate {
           .as("correct"))
   }
 
-  /** Trained-weight memo for [[trainTextClassifier]]: keyed by (session,
-    * canonicalized feature/label plans, hyperparams) — deterministic
-    * plans only (the persist registry's own precondition), LRU-capped.
-    * A composing query (the q234 gate over q232's trainer) re-scores
-    * with the memoized model instead of re-running the GD loop.
-    */
-  private val wMemo =
-    new java.util.LinkedHashMap[Any, Array[Long]](16, 0.75f, true)
-
-  /** Observability twin of Dedup.registryHits — spec'd, and a cheap
-    * sanity probe that composed queries really skip re-training. */
+  /** Calls of [[trainTextClassifier]] served from [[FrameCache]]
+    * without re-running the GD loop — a composing query (the q234 gate
+    * over q232's trainer) re-scores with the cached model. */
   @volatile var classifierMemoHits: Long = 0L
 
-  /** Drop every memoized classifier weight vector — the bench cold lane
-    * (SPARK_GRAFT_COLD) uses this so q232/q234 pay the full GD training
-    * cost, measuring what a first-call production user pays. */
-  def clearClassifierMemo(): Unit = wMemo.synchronized(wMemo.clear())
+  /** Drop every cached weight vector. Kept for
+    * perfbench/src/Harness.scala; empties the whole [[FrameCache]]. */
+  def clearClassifierMemo(): Unit = FrameCache.clear()
 
   /** DSIR-style importance weights (Xie et al. 2023, "Data Selection
     * for Language Models via Importance Resampling"): score every raw
@@ -794,7 +779,7 @@ object Curate {
     // (4 of q257's 5 corpus token passes, 9.9 s CPU measured r16);
     // persisted, each pool folds once
     def bucketCounts(df: DataFrame, out: String): DataFrame =
-      Dedup.registryPersist(
+      FrameCache.persist(
         df.select(explode(graft.functions.TextFns.tokens(col(textCol))).as("__tk"))
           .withColumn("__b", pmod(Dedup.portableHash64(col("__tk")), b))
           .groupBy(col("__b")).agg(count(lit(1)).as(out)))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.FrameCache
 import graft.functions.TextFns
 
 /** Deduplication for web-scale corpora: exact, MinHash+LSH, SimHash,
@@ -19,248 +20,59 @@ object Dedup {
 
   private val log = org.slf4j.LoggerFactory.getLogger("graft.operators.Dedup")
 
-  /** Session-scoped registry of the persisted intermediate frames the
-    * dedup pipelines build (shingle sets, simhash signatures), keyed by
-    * canonicalized plan. Two jobs it does:
-    *  - identical calls SHARE one persisted frame instead of calling
-    *    `.persist` again on an equivalent plan (the source of the
-    *    "Asked to cache already cached data" warnings in long sessions);
-    *  - an LRU cap (`maxCached`) unpersists the oldest frame once a
-    *    session has swept more corpora than the cap, so a long-lived
-    *    session mixing many datasets cannot accumulate cache entries
-    *    without bound. `clearDedupCaches()` releases everything.
-    */
-  // Cap default sized ABOVE the full 257-query registry sweep's reuse
-  // set (the r12 driver bench showed entries=31 at cap=32 with the
-  // regressions clustered exactly on registry-dependent queries — the
-  // documented thrash signature). Frames are MEMORY_AND_DISK, so a
-  // generous cap degrades to disk, never to recompute; the cap's only
-  // job is bounding a long-lived session that sweeps UNRELATED corpora.
-  private val maxCached =
-    try sys.props.getOrElse("graft.dedup.maxCached", "512").toInt
-    catch { case _: NumberFormatException => 512 }
-  // keyed by (session, canonicalized plan, output field names): the
-  // registry is JVM-global but entries never cross SparkSessions, so LRU
-  // eviction can't call unpersist on a frame owned by a stopped context
-  // from a newer session's call. `safeUnpersist` is belt-and-braces for
-  // the session that DID own the frame being stopped mid-flight. The
-  // field names are part of the key because canonicalization erases
-  // output aliases: two frames identical up to column names (e.g.
-  // dsirDictDf's __t vs __r bucket histograms over canonically-equal
-  // token streams) must NOT collide — a hit returning the wrong-named
-  // frame breaks every downstream column reference (VERDICT r16 #1).
-  private val cacheReg =
-    new java.util.LinkedHashMap[(org.apache.spark.sql.SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Seq[String]), DataFrame](16, 0.75f, true)
+  // The names from registryPersist to cacheStats forward to
+  // graft.FrameCache, the engine's one plan-keyed cache. They stay
+  // because perfbench/src/Harness.scala and the registry specs read
+  // them; engine code calls FrameCache directly. The registry counters
+  // cover persisted frames only.
 
-  private def safeUnpersist(df: DataFrame, blocking: Boolean = false): Unit =
-    try {
-      if (!df.sparkSession.sparkContext.isStopped) df.unpersist(blocking)
-    } catch { case scala.util.control.NonFatal(_) => () }
+  /** Persist through [[graft.FrameCache.persist]] (registry specs). */
+  private[graft] def registryPersist(df: DataFrame): DataFrame = FrameCache.persist(df)
 
-  /** Diagnostic: cumulative registry cache hits in this JVM. A consumer
-    * chain that SHOULD share a frame (e.g. q122's keep-selection reusing
-    * q119's verified pair set) is assertable: hits must grow across the
-    * second call (ClusterSpec pins it).
-    */
-  @volatile var registryHits: Long = 0L
+  /** Empty [[graft.FrameCache]], both value kinds (Harness, specs). */
+  def clearDedupCaches(): Unit = FrameCache.clear()
 
-  /** Diagnostics for sizing `maxCached` to a workload's working set: a
-    * bench pass whose evictions keep climbing while hits stall is
-    * thrashing — the cap is below the set of frames the queries re-use
-    * (the r8 driver bench showed exactly this: 225 queries vs cap 8 →
-    * q28's shingle frame rebuilt 17× slower than its warm cost).
-    */
-  @volatile var registryMisses: Long = 0L
-  @volatile var registryEvictions: Long = 0L
+  /** Cumulative persisted-frame hits (Harness `cache.hits`, specs). */
+  def registryHits: Long = FrameCache.stats.hits
 
-  /** High-water mark of resident registry entries since the last
-    * [[resetRegistryPeak]] (VERDICT r15 #8): the between-query trim
-    * clamps the END-of-sweep entry count at `keep`, so "entries == keep"
-    * cannot distinguish "demand exactly keep" from "demand above keep,
-    * silently converting hits into rebuilds". The peak is the true
-    * demand signal — the bench emits it beside trim_keep so the margin
-    * is monitored (RegistrySweepSpec pins entries ≤ trimKeep − 8 on the
-    * committed bench_full.json).
-    */
-  @volatile var registryPeakEntries: Long = 0L
-  def resetRegistryPeak(): Unit =
-    cacheReg.synchronized { registryPeakEntries = cacheReg.size().toLong }
+  /** Cumulative persisted-frame misses (Harness `cache.misses`, specs). */
+  def registryMisses: Long = FrameCache.stats.misses
 
-  private def cachedPersist(df: DataFrame): DataFrame = cacheReg.synchronized {
-    val analyzed = df.queryExecution.analyzed
-    // Registry precondition (same as the CC memo's): canonicalized-plan
-    // equality only implies frame equality for DETERMINISTIC plans — a
-    // rand()/sample-derived frame must not be served from the registry
-    // across materializations. Hand it back unpersisted: its consumers
-    // see exactly the semantics the nondeterministic plan already has.
-    if (GraftPlanUtil.nondeterministic(analyzed)) return df
-    val key = (df.sparkSession, analyzed.canonicalized,
-      df.schema.fieldNames.toSeq)
-    // entries from stopped sessions are dead weight — drop them first
-    cacheReg.entrySet().removeIf(e => e.getKey._1.sparkContext.isStopped)
-    Option(cacheReg.get(key)).map { hit => registryHits += 1; hit }.getOrElse {
-      registryMisses += 1
-      // MEMORY_AND_DISK is the INVARIANT the bench's storage-eviction
-      // tripwire leans on (ADVICE r15): real memory pressure surfaces
-      // as a valid disk-only demotion on an RDD block, never as a
-      // silent full eviction — a MEMORY_ONLY frame evicted under
-      // pressure posts StorageLevel.NONE, which the tracker can only
-      // attribute via its previously-seen-in-memory set. Change the
-      // level here and the Bench listener's demotion counter goes
-      // blind; BlockEvictionTracker's NONE path is the backstop.
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cacheReg.put(key, df)
-      if (cacheReg.size().toLong > registryPeakEntries)
-        registryPeakEntries = cacheReg.size().toLong
-      while (cacheReg.size > maxCached) {
-        val eldest = cacheReg.keySet.iterator.next()
-        registryEvictions += 1
-        log.info(s"dedup registry evicting LRU frame (size ${cacheReg.size} > cap $maxCached)")
-        safeUnpersist(cacheReg.remove(eldest))
-      }
-      df
-    }
-  }
+  /** Frames evicted by the LRU cap — the thrash signal (specs). */
+  def registryEvictions: Long = FrameCache.stats.evictions
 
-  /** Share the LRU registry with sibling curation operators whose
-    * pipelines consume one expensive exploded frame several times
-    * (Curate.dsirLogWeights' gram stream, substringDupStats' span set,
-    * Bpe's word-frequency slice, Drift's count frames).
-    */
-  private[graft] def registryPersist(df: DataFrame): DataFrame =
-    cachedPersist(df)
+  /** Frames released by [[trimCachesTo]] (specs). */
+  def registryTrims: Long = FrameCache.stats.trims
 
-  /** Cumulative frames released by [[trimCachesTo]] — kept SEPARATE from
-    * `registryEvictions` (whose non-zero reading is the LRU-cap thrash
-    * tripwire the bench health check greps for): a deliberate
-    * between-family trim is hygiene, not thrash.
-    */
-  @volatile var registryTrims: Long = 0L
+  /** Resident-frame high-water mark since [[resetRegistryPeak]] (specs). */
+  def registryPeakEntries: Long = FrameCache.stats.peakFrames
 
-  /** Unpersist all but the `keep` most-recently-used registry frames.
-    * The bench sweep calls this between queries (VERDICT r14 #5): with
-    * a 512 cap nothing was evicted across a 260-query sweep, so every
-    * persisted frame of every family stayed heap-resident and the
-    * flagged queries showed 0.1–17 s of sweep task-GC with zero
-    * spill/evictions — heap churn, not plans. Access-ordered trim keeps
-    * family locality (a frame consumers just touched stays; q256's
-    * gate frames survive through q262/q264) while stale families free
-    * their memory at the source instead of through GC pressure.
-    */
+  /** Restart the peak at the current frame count (specs). */
+  def resetRegistryPeak(): Unit = FrameCache.resetPeak()
+
+  /** Unpersist all but the `keep` most recently used frames (specs). */
   def trimCachesTo(keep: Int, blocking: Boolean = false): Unit =
-    cacheReg.synchronized {
-      require(keep >= 0, s"keep must be >= 0: $keep")
-      while (cacheReg.size > keep) {
-        val eldest = cacheReg.keySet.iterator.next()
-        registryTrims += 1
-        // `blocking = true` lets the bench drain the teardown's block
-        // events INSIDE its deliberate-unpersist window, so the
-        // eviction tracker never mistakes trim hygiene for
-        // BlockManager-initiated cache loss (VERDICT r15 #2).
-        safeUnpersist(cacheReg.remove(eldest), blocking)
-      }
-    }
+    FrameCache.trimTo(keep, blocking)
 
-  /** Unpersist every dedup intermediate this session registered. */
-  def clearDedupCaches(): Unit = {
-    cacheReg.synchronized {
-      cacheReg.values.forEach(df => safeUnpersist(df))
-      cacheReg.clear()
-    }
-    bloomMemo.synchronized(bloomMemo.clear())
-    frameMemo.synchronized(frameMemo.clear())
-  }
-
-  /** Session memo for BUILT bloom bitmaps (the kmMemo/classifier-memo
-    * contract applied to Bloom.bitmapFor): the bitmap is a pure
-    * function of (deterministic key plan, geometry) and its build is a
-    * blocking driver job — q256/q262/q264 all gate against the SAME
-    * eval-suite filter, so per-query rebuilds were pure waste (VERDICT
-    * r13 #2). Bounded: each entry is mBits/8 bytes (32 KiB at the
-    * 2^18 default); LRU-capped at 16 entries; cleared with the dedup
-    * registry so the bench cold lane still measures the real build.
-    */
-  private val bloomMemo = new java.util.LinkedHashMap[
-    (org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int),
-    Array[Long]](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[
-      (org.apache.spark.sql.SparkSession,
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int),
-      Array[Long]]): Boolean = size() > 16
-  }
-
-  /** Session memo for operator OUTPUT frames whose plans embed object
-    * closures (mapPartitions lambdas): a capturing lambda is a fresh
-    * instance per call, so two structurally identical builds produce
-    * plans that never compare canonically equal — which silently
-    * defeats every plan-keyed cache DOWNSTREAM of the closure (the
-    * bench's queries_reg channel surfaced q267_image_neardup's dHash
-    * frame rebuilding on every run for exactly this reason). Keying on
-    * (session, tag, INPUT canonicalized plan) instead restores
-    * stability: repeat calls return the IDENTICAL output DataFrame, so
-    * downstream plans share the same lambda instance and registry
-    * persistence works again. Only valid for deterministic inputs and
-    * builds that are pure functions of (input, tag) — the tag must
-    * encode every non-plan parameter.
-    */
-  private val frameMemo = new java.util.LinkedHashMap[
-    (org.apache.spark.sql.SparkSession, String,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-    DataFrame](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[
-      (org.apache.spark.sql.SparkSession, String,
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-      DataFrame]): Boolean = size() > 64
-  }
-
-  private[graft] def memoizedFrame(tag: String, input: DataFrame)(
-      build: DataFrame => DataFrame): DataFrame = {
-    val analyzed = input.queryExecution.analyzed
-    if (GraftPlanUtil.nondeterministic(analyzed)) return build(input)
-    val key = (input.sparkSession, tag, analyzed.canonicalized)
-    val hit = frameMemo.synchronized {
-      frameMemo.entrySet().removeIf(e => e.getKey._1.sparkContext.isStopped)
-      Option(frameMemo.get(key))
-    }
-    hit.getOrElse {
-      // build outside the lock (plan analysis inside can be slow);
-      // a concurrent double-build is benign — last put wins
-      val out = build(input)
-      frameMemo.synchronized(frameMemo.put(key, out))
-      out
-    }
-  }
-
-  private[graft] def memoizedBitmap(keys: DataFrame, keyCol: String,
-                                    mBits: Int, kHashes: Int): Array[Long] = {
-    val analyzed = keys.queryExecution.analyzed
-    if (GraftPlanUtil.nondeterministic(analyzed))
-      return Bloom.bitmapFor(keys, keyCol, mBits, kHashes)
-    val key = (keys.sparkSession, analyzed.canonicalized, mBits, kHashes)
-    val cached = bloomMemo.synchronized(Option(bloomMemo.get(key)))
-    cached.getOrElse {
-      val bm = Bloom.bitmapFor(keys, keyCol, mBits, kHashes)
-      bloomMemo.synchronized(bloomMemo.put(key, bm))
-      bm
-    }
-  }
-
-  /** Session-level registry observability (VERDICT r10 #7): cumulative
-    * hits / misses / evictions plus the CURRENT entry count and cap, as
-    * a one-row DataFrame. The r8 registry thrash (cap 8 vs a 225-query
-    * working set → q28's shingle frame rebuilt every call) took a round
-    * to diagnose from timings alone; this makes it a one-glance read —
-    * `evictions` climbing while `hits` stall means the cap is below the
-    * workload's reuse set. Bench prints it at sweep end.
+  /** One row (hits, misses, evictions, entries, cap) over persisted
+    * frames (specs).
     */
   def cacheStats(spark: org.apache.spark.sql.SparkSession): DataFrame = {
     import spark.implicits._
-    val entries = cacheReg.synchronized(cacheReg.size())
-    Seq((registryHits, registryMisses, registryEvictions,
-      entries.toLong, maxCached.toLong))
+    val s = FrameCache.stats
+    Seq((s.hits, s.misses, s.evictions, s.frames, FrameCache.maxCached.toLong))
       .toDF("hits", "misses", "evictions", "entries", "cap")
   }
+
+  /** The bloom bitmap of `keys.keyCol`, built once per (key plan,
+    * schema, key column, geometry) per session: q256/q260/q262/q264 all
+    * gate against the same eval-suite filter, and the build is a
+    * blocking driver job. Each entry is mBits/8 bytes.
+    */
+  private[graft] def memoizedBitmap(keys: DataFrame, keyCol: String,
+                                    mBits: Int, kHashes: Int): Array[Long] =
+    FrameCache.memo("bloomBitmap", keys)(keyCol, mBits, kHashes)(
+      Bloom.bitmapFor(keys, keyCol, mBits, kHashes))
 
   /** Distinct 64-bit shingle hashes per doc as (id, sh) rows. Tokenizes
     * ONCE into a named array column, then builds every n-gram with a
@@ -511,11 +323,11 @@ object Dedup {
     }.reduce((a, b) => a.bitwiseOR(b))
     // signatures persist under a FIXED internal name so every consumer
     // of the same (docs, hashFn) — raw signatures, banded pairs,
-    // verified pairs — shares one cache entry via the cachedPersist
-    // registry (no double-persist warnings, LRU-capped); the token-hash
+    // verified pairs — shares one FrameCache entry (no double-persist
+    // warnings, LRU-capped); the token-hash
     // pass (md5 in portable mode) dominates and runs once. Frame is one
     // long per doc; `clearDedupCaches()` reclaims.
-    val sigs = cachedPersist(
+    val sigs = FrameCache.persist(
       toks.groupBy(col(idCol)).agg(votes.head, votes.tail: _*)
         .select(col(idCol), bits.as("__simhash")))
     sigs.withColumnRenamed("__simhash", out)
@@ -563,7 +375,7 @@ object Dedup {
     * at sf0.1). The frame is distinct-HASHES-per-doc sized (8 B per
     * shingle), far smaller than the corpus, and spills to disk at
     * scale; identical calls in one session share ONE cache entry via
-    * the cachedPersist registry, which also LRU-evicts old corpora.
+    * FrameCache, which also LRU-evicts old corpora.
     * Callers needing the memory back use `clearDedupCaches()`.
     */
   private def shingleSets(docs: DataFrame, idCol: String, textCol: String,
@@ -571,7 +383,7 @@ object Dedup {
     val exploded = shingleHashes(docs, idCol, textCol, shingleN)
       .withColumnRenamed(idCol, "id")
     val dfreq = exploded.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-    cachedPersist(exploded.join(dfreq, Seq("sh"))
+    FrameCache.persist(exploded.join(dfreq, Seq("sh"))
       .groupBy(col("id"))
       .agg(transform(sort_array(collect_list(struct(col("df"), col("sh")))),
         x => x.getField("sh")).as("shs"))
@@ -728,9 +540,9 @@ object Dedup {
       .withColumnRenamed(idCol, "id")
     val exO = shingleHashes(oldDocs, idCol, textCol, shingleN)
       .withColumnRenamed(idCol, "id")
-    val dfreq = registryPersist(
+    val dfreq = FrameCache.persist(
       exO.groupBy(col("sh")).agg(count(lit(1)).as("df")))
-    def mkSets(ex: DataFrame): DataFrame = cachedPersist(
+    def mkSets(ex: DataFrame): DataFrame = FrameCache.persist(
       ex.join(dfreq, Seq("sh"), "left")
         .groupBy(col("id"))
         .agg(transform(sort_array(collect_list(
@@ -819,7 +631,7 @@ object Dedup {
     * pins that it fires on a pathological corpus). The default is OFF
     * (MaxValue) so the exact-oracle contract holds untouched.
     * Verification intersects the persisted shingle-set arrays (shared
-    * with every other dedup consumer via the cachedPersist registry).
+    * with every other dedup consumer via FrameCache).
     */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
                        shingleN: Int = 3,
@@ -922,7 +734,7 @@ object Dedup {
     // scoring join — unpersisted, the md5-shingle explode ran twice
     // (measured 5.1 s CPU on q184); persisted it runs once (r16).
     // Same (doc, gram) shape and spill story as q169's perDocGram.
-    val grams = registryPersist(
+    val grams = FrameCache.persist(
       shingleHashes(docs, idCol, textCol, shingleN))
     val firstSeen = grams.groupBy(col("sh")).agg(min(col(idCol)).as("__first"))
     grams.join(firstSeen, Seq("sh"))
@@ -962,7 +774,7 @@ object Dedup {
     // document-frequency aggregate and the scoring join — materialize it
     // once through the shared registry (measured 2.1 s → ~1.4 s on q169
     // at sf0.1; frame is (doc, gram-hash, cnt) sized, spills at scale)
-    val perDocGram = registryPersist(grams.groupBy(col(idCol), col("__g"))
+    val perDocGram = FrameCache.persist(grams.groupBy(col(idCol), col("__g"))
       .agg(count(lit(1)).as("__cnt")))
     // perDocGram is distinct on (doc, gram) → count = document frequency.
     // Only grams with __nd > 1 matter to the dup side, so the join's
@@ -1011,7 +823,7 @@ object Dedup {
     // the md5-span explode feeds BOTH the doc-frequency aggregate and
     // the span join — one registry-persisted pass (q169's measured
     // pattern); frame is (id, pos, gram-hash)-sized, spills at scale
-    val grams = registryPersist(toks.filter(col("__nt") >= k)
+    val grams = FrameCache.persist(toks.filter(col("__nt") >= k)
       .select(col(idCol), posexplode(gramHashArr(k)).as(Seq("__i", "__g"))))
     val docFreq = grams.select(col(idCol), col("__g")).distinct()
       .groupBy(col("__g")).agg(count(lit(1)).as("__nd"))
@@ -1136,7 +948,7 @@ object Dedup {
                       idCol: String, textCol: String,
                       k: Int = 8): DataFrame = {
     val toks = tokensFrame(train, idCol, textCol)
-    val grams = registryPersist(toks.filter(col("__nt") >= k)
+    val grams = FrameCache.persist(toks.filter(col("__nt") >= k)
       .select(col(idCol), posexplode(gramHashArr(k)).as(Seq("__i", "__g"))))
     val evalGrams = tokensFrame(evalDocs, idCol, textCol)
       .filter(col("__nt") >= k)
@@ -1178,7 +990,7 @@ object Dedup {
 
   def winnowDupStats(docs: DataFrame, idCol: String, textCol: String,
                      k: Int = 8, w: Int = 4): DataFrame = {
-    val fps = registryPersist(winnowFingerprintsDf(docs, idCol, textCol, k, w))
+    val fps = FrameCache.persist(winnowFingerprintsDf(docs, idCol, textCol, k, w))
     val docFreq = fps.groupBy(col("__fp")).agg(count(lit(1)).as("__nd"))
     fps.join(docFreq, Seq("__fp"))
       .groupBy(col(idCol))
@@ -1199,7 +1011,7 @@ object Dedup {
     // same two-consumer shape as noveltyStats (df index + scoring
     // join): persist the shingle frame so the md5 explode runs once
     // (measured 4.2 s CPU on q120 unpersisted, r16)
-    val sh = registryPersist(
+    val sh = FrameCache.persist(
       shingleHashes(docs, idCol, textCol, shingleN))
     val dfreq = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
     sh.join(dfreq, Seq("sh"))
@@ -1319,7 +1131,7 @@ object Dedup {
       .filter(col("__df") > maxBucket).select(col("i"), col("seg"))
     val hotB = bKeys.groupBy("i", "seg").agg(count(lit(1)).as("__df"))
       .filter(col("__df") > maxBucket * (2L * k + 1L)).select(col("i"), col("seg"))
-    val hot = cachedPersist(hotA.unionByName(hotB).distinct())
+    val hot = FrameCache.persist(hotA.unionByName(hotB).distinct())
     this.synchronized { lastHotFrame = Some(hot); lastHotCount = None }
     val aK = aKeys.join(broadcast(hot), Seq("i", "seg"), "left_anti")
     val bK = bKeys.join(broadcast(hot), Seq("i", "seg"), "left_anti")
@@ -1362,7 +1174,7 @@ object Dedup {
     // components, cluster representatives) — persist it through the
     // same LRU registry as the shingle sets so the banded join +
     // verify run once per (corpus, τ), not once per consumer
-    cachedPersist(verifyJaccard(cand, sets, threshold))
+    FrameCache.persist(verifyJaccard(cand, sets, threshold))
   }
 
   /** Benchmark-decontamination gate (cross-corpus containment): which
@@ -1476,7 +1288,7 @@ object Dedup {
     // q256 orders it, q262 folds max-per-doc, q264 folds one go/no-go
     // row — and the candidate join + exact intersect verify is the
     // expensive part. True matches only, so the frame is audit-sized.
-    cachedPersist(pref.join(corpusEx, Seq("sh"))
+    FrameCache.persist(pref.join(corpusEx, Seq("sh"))
       .select(col("id_eval"), col("id_doc")).distinct()
       .join(setsE.select(col("id").as("id_eval"), col("shs").as("shs_e"),
         col("sz").as("sz_e")), Seq("id_eval"))

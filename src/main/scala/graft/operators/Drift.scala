@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.FrameCache
 
 /** Corpus drift monitoring — distribution-shift metrics between two
   * sources (or two crawl snapshots) of one corpus, and the
@@ -49,7 +50,7 @@ object Drift {
     // registry-persisted: the totals branch and the metric branch both
     // consume this vocab-sized frame — without the persist each would
     // re-run the corpus scan + token aggregate (two full passes)
-    val counts = Dedup.registryPersist(df
+    val counts = FrameCache.persist(df
       .filter((sourceCol === srcA || sourceCol === srcB) && catCol.isNotNull)
       .groupBy(catCol.as("cat"))
       .agg(sum(when(sourceCol === srcA, 1L).otherwise(0L)).as("ca"),
@@ -99,7 +100,7 @@ object Drift {
                   srcA: String, srcB: String): DataFrame = {
     // registry-persisted for the same two-consumer reason as
     // categoricalDrift (totals + cumulative walk)
-    val counts = Dedup.registryPersist(df
+    val counts = FrameCache.persist(df
       .filter((sourceCol === srcA || sourceCol === srcB) && valCol.isNotNull)
       .groupBy(valCol.as("v"))
       .agg(sum(when(sourceCol === srcA, 1L).otherwise(0L)).as("ca"),
@@ -217,7 +218,7 @@ object Drift {
 
   def categoricalDriftMatrix(df: DataFrame, catCol: Column,
                              sourceCol: Column): DataFrame = {
-    val counts = Dedup.registryPersist(df
+    val counts = FrameCache.persist(df
       .filter(catCol.isNotNull && sourceCol.isNotNull)
       .groupBy(sourceCol.as("src"), catCol.as("cat"))
       .agg(count(lit(1)).as("c")))
@@ -275,7 +276,7 @@ object Drift {
     */
   def ksMatrix(df: DataFrame, valCol: Column,
                sourceCol: Column): DataFrame = {
-    val counts = Dedup.registryPersist(df
+    val counts = FrameCache.persist(df
       .filter(valCol.isNotNull && sourceCol.isNotNull)
       .groupBy(sourceCol.as("src"), valCol.as("v"))
       .agg(count(lit(1)).as("c")))
@@ -289,7 +290,7 @@ object Drift {
     // registry-persisted: both sides of the value-keyed pair join read
     // this frame — without the persist the grid build + window cumsum
     // would execute twice per action
-    val ecdf = Dedup.registryPersist(dense
+    val ecdf = FrameCache.persist(dense
       .withColumn("__f", sum(col("__c")).over(w).cast("double") / col("n"))
       .select(col("src"), col("v"), col("__f"), col("n")))
     val a = ecdf.select(col("src").as("src_a"), col("v"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.FrameCache
 
 /** Link-graph centrality for crawl curation — the quality-weighting
   * step web-scale training pipelines run between crawl ingest and
@@ -66,7 +67,7 @@ object Graph {
     require(iters >= 1 && iters <= 50, s"iters out of range: $iters")
     require(damping > 0.0 && damping < 1.0, s"bad damping: $damping")
     val w = weightCol.map(col).getOrElse(lit(1L))
-    val withDeg = Dedup.registryPersist(
+    val withDeg = FrameCache.persist(
       edges.join(
         edges.groupBy(col(srcCol)).agg(sum(w).as("__od")),
         Seq(srcCol)))
@@ -77,7 +78,7 @@ object Graph {
         val s = seeds.select(col(idCol)).distinct()
         val ns = s.count().toDouble
         require(ns > 0, "teleport seed set is empty")
-        Dedup.registryPersist(nodes.select(col(idCol))
+        FrameCache.persist(nodes.select(col(idCol))
           .join(s.withColumn("__p", lit(1.0) / lit(ns)), Seq(idCol), "left")
           .select(col(idCol), coalesce(col("__p"), lit(0.0)).as("__p")))
       case None =>

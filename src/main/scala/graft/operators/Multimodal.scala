@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.FrameCache
 
 /** Multimodal (image/audio/video) column plumbing — builder-brief
   * extension. Media payloads are opaque `binary` columns plus typed
@@ -346,17 +347,17 @@ object Multimodal {
     */
   def imageDHash(df: DataFrame, payloadCol: String,
                  out: String = "phash"): DataFrame =
-    // memoized per (session, input plan): the mapPartitions closure is
-    // a fresh lambda instance per call, so without the memo two
+    // cached per (input, payloadCol, out): the mapPartitions closure is
+    // a fresh lambda instance per call, so without the cache two
     // identical builds yield canonically UNEQUAL plans and every
-    // plan-keyed cache downstream (the dedup registry persisting the
-    // hashed frame in imageNearDupPairs) misses on every call
-    Dedup.memoizedFrame(s"imageDHash:$payloadCol:$out", df) { in =>
+    // plan-keyed cache downstream (the persisted hashed frame in
+    // imageNearDupPairs) misses on every call
+    FrameCache.memo("imageDHash", df)(payloadCol, out) {
       import org.apache.spark.sql.{Encoders, Row}
       import org.apache.spark.sql.types.LongType
-      val idx = in.schema.fieldIndex(payloadCol)
-      val outSchema = in.schema.add(out, LongType)
-      in.mapPartitions { it =>
+      val idx = df.schema.fieldIndex(payloadCol)
+      val outSchema = df.schema.add(out, LongType)
+      df.mapPartitions { it =>
         val d = new ImageDHashDecoder
         it.map { r =>
           val bytes = r.get(idx) match {
@@ -394,7 +395,7 @@ object Multimodal {
       df.select(col(idCol), col(payloadCol)), payloadCol, "__ph")
       .filter(col("__ph") =!= Long.MinValue)
       .select(col(idCol), col("__ph"))
-    val persisted = Dedup.registryPersist(hashed)
+    val persisted = FrameCache.persist(hashed)
     val banded = persisted.select(col(idCol), posexplode(array(
       (0 until 4).map(b =>
         shiftright(col("__ph"), b * 16).bitwiseAND(lit(0xFFFFL))): _*)))

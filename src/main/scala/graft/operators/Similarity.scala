@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.FrameCache
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`Array[Float]`) — builder-brief extension.
@@ -548,7 +549,7 @@ object Similarity {
     * and composing queries pay the quantize scan once. */
   private def unitsOf(df: DataFrame, idCol: String,
                       vecCol: String): DataFrame =
-    Dedup.registryPersist(df.select(col(idCol).as("__id"),
+    FrameCache.persist(df.select(col(idCol).as("__id"),
       transform(col(vecCol),
         x => floor(x.cast("double") * lit(1e6)).cast("long")).as("__u")))
 
@@ -564,13 +565,8 @@ object Similarity {
                            k: Int, iters: Int): Array[Array[Long]] = {
     require(k >= 1 && iters >= 0, "need k >= 1, iters >= 0")
     val units = unitsOf(df, idCol, vecCol)
-    val memoKey = (df.sparkSession,
-      units.queryExecution.analyzed.canonicalized, k, iters)
-    val memoizable =
-      !GraftPlanUtil.nondeterministic(df.queryExecution.analyzed)
-    if (memoizable && kmMemo.synchronized(kmMemo.containsKey(memoKey)))
-      kmMemo.synchronized(kmMemo.get(memoKey))
-    else {
+    // q238's balanced sample reuses q237's Lloyd work through the memo
+    FrameCache.memo("kmeansCentroids", units)(k, iters) {
       var cur: Array[Array[Long]] = units
         .withColumn("__h", Dedup.portableHash64(col("__id").cast("string")))
         .orderBy(col("__h"), col("__id")).limit(k)
@@ -593,28 +589,14 @@ object Similarity {
             }.toMap
           cur = cur.indices.map(c => upd.getOrElse(c, cur(c))).toArray
         }
-        if (memoizable) kmMemo.synchronized {
-          kmMemo.put(memoKey, cur)
-          while (kmMemo.size > 32)
-            kmMemo.remove(kmMemo.keySet.iterator.next())
-        }
       }
       cur
     }
   }
 
-  /** Centroid memo for [[kmeansAssign]] — same contract as the
-    * classifier's weight memo: (session, canonicalized unit plan, k,
-    * iters), deterministic plans only, LRU-capped. q238's balanced
-    * sample reuses q237's Lloyd work through it.
-    */
-  private val kmMemo =
-    new java.util.LinkedHashMap[Any, Array[Array[Long]]](16, 0.75f, true)
-
-  /** Drop every memoized centroid set — the bench cold lane
-    * (SPARK_GRAFT_COLD) uses this so q237–q239/q242 pay the full Lloyd
-    * training cost, measuring what a first-call production user pays. */
-  def clearKmeansMemo(): Unit = kmMemo.synchronized(kmMemo.clear())
+  /** Drop every cached centroid set. Kept for
+    * perfbench/src/Harness.scala; empties the whole [[FrameCache]]. */
+  def clearKmeansMemo(): Unit = FrameCache.clear()
 
   /** The trained centroids themselves (integer units), for deployment
     * outside the training query — the train-batch / serve-stream split
@@ -859,7 +841,7 @@ object Similarity {
     // eval side — VERDICT r13 #2), and a self-join banding computes it
     // twice per call. The frame is (id, band, bandval) — bands×n rows,
     // far smaller than the vectors it derives from.
-    val canonical = graft.operators.Dedup.registryPersist(
+    val canonical = graft.FrameCache.persist(
       df.select(col(idCol).as("__bsid"), posexplode(
         array({
           val sig = lshSignature(col(vecCol), bits)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.functions._
+import graft.FrameCache
 
 /** Deterministic, oracle-reproducible cardinality sketching.
   *
@@ -54,7 +55,7 @@ object Sketch {
   def kmvWithExact(df: DataFrame, groupCols: Seq[String], value: Column,
                    k: Int): DataFrame = {
     val gs = groupCols.map(col)
-    val distinctPairs = Dedup.registryPersist(
+    val distinctPairs = FrameCache.persist(
       df.select(gs ++ Seq(
           Dedup.portableHash64(value.cast("string")).as("__h"),
           Dedup.portableHash64(concat(lit("kmv2:"), value.cast("string")))
@@ -136,7 +137,7 @@ object Sketch {
     // the raw stream and feeds BOTH the CM table and the exact top-k —
     // persist through the shared LRU registry so it runs once (same
     // pattern as kmvWithExact; distinct-values-sized, spills at scale)
-    val counts = Dedup.registryPersist(
+    val counts = FrameCache.persist(
       df.groupBy(gs :+ value.cast("string").as("__v"): _*)
         .agg(count(lit(1)).as("__n")))
     val cm = counts
@@ -192,7 +193,7 @@ object Sketch {
     val v = value.cast("double")
     // stats feeds the binning pass AND the crossing locator — persist
     // so each reference doesn't re-run the min/max/count scan (r16)
-    val stats = Dedup.registryPersist(
+    val stats = FrameCache.persist(
       df.agg(min(v).as("__lo"), max(v).as("__hi"),
         count(v).as("__n")))
     val binned = df.select(v.as("__x")).where(col("__x").isNotNull)
@@ -239,7 +240,7 @@ object Sketch {
     // the crossing locator; without a persist each reference re-expands
     // the whole aggregate subtree (measured r16: zero ReusedExchange in
     // the executed plan). |groups| rows — registry-persist is bounded.
-    val stats = Dedup.registryPersist(
+    val stats = FrameCache.persist(
       df.groupBy(gs: _*).agg(min(v).as("__lo"),
         max(v).as("__hi"), count(v).as("__n")))
     val binned = df.select(gs :+ v.as("__x"): _*)
@@ -293,7 +294,7 @@ object Sketch {
     // with them the corpus is scanned 3× — stats, bin counts,
     // candidates — the documented design minimum. Both frames are
     // |groups|-bounded.
-    val stats = Dedup.registryPersist(
+    val stats = FrameCache.persist(
       df.groupBy(gs: _*).agg(min(v).as("__lo"),
         max(v).as("__hi"), count(v).as("__n")))
     def binOf(x: Column): Column =
@@ -316,7 +317,7 @@ object Sketch {
         least(ceil(col("__pos")) + 1, col("__n")).cast("long"))
     val targets = ks.select(gs ++ Seq(col("q"), col("__pos"),
       explode(array(col("__k1"), col("__k2"))).as("__k")): _*)
-    val located = Dedup.registryPersist(targets
+    val located = FrameCache.persist(targets
       .join(binned, groupCols)
       .filter(col("__cum") >= col("__k"))
       .withColumn("__rn", row_number().over(
@@ -376,7 +377,7 @@ object Sketch {
         col("__w") > 0)
     // same multi-reference persists as exactQuantilesBy (r16): stats
     // and located are each consumed twice; both |groups|-bounded
-    val stats = Dedup.registryPersist(
+    val stats = FrameCache.persist(
       base.groupBy(gs: _*).agg(min(col("__x")).as("__lo"),
         max(col("__x")).as("__hi"), sum(col("__w")).as("__tw")))
     def binOf(x: Column): Column =
@@ -408,7 +409,7 @@ object Sketch {
       .filter(col("__rn") === 1)
       .select(gs ++ Seq(col("q"), col("__t"), col("__b"),
         (col("__cum") - col("__c")).as("__below")): _*)
-      .transform(Dedup.registryPersist)
+      .transform(FrameCache.persist)
     val neededBins = located.select(gs :+ col("__b"): _*).distinct()
     // distinct values within the crossing bins, weights pre-summed —
     // the cumulative walk is over values, never rows
@@ -579,7 +580,7 @@ object Sketch {
     // target builder AND the candidate pass; `located` feeds the
     // needed-bin broadcast AND the final pick join. Both are bounded
     // (1 row / ≤ 2·|qs| rows).
-    val stats = Dedup.registryPersist(
+    val stats = FrameCache.persist(
       df.agg(min(v).as("__lo"), max(v).as("__hi"),
         count(v).as("__n")))
     def binOf(x: Column): Column =
@@ -605,7 +606,7 @@ object Sketch {
     val targets = ks.select(col("q"), col("__pos"), col("__n"),
         explode(array(col("__k1"), col("__k2"))).as("__k"))
     // locate each k's bin: first bin whose cumulative count reaches k
-    val located = Dedup.registryPersist(
+    val located = FrameCache.persist(
       targets.join(binned, col("__cum") >= col("__k"))
       .withColumn("__rn", row_number().over(
         Window.partitionBy(col("q"), col("__k")).orderBy(col("__b"))))
@@ -661,7 +662,7 @@ object Sketch {
     // AND the final pick join. All are bounded (1 / ≤ bins / ≤ 2·|qs|
     // rows); without persists each reference re-expands its subtree
     // from the base scan.
-    val stats = Dedup.registryPersist(
+    val stats = FrameCache.persist(
       df.agg(min(v).as("__lo"), max(v).as("__hi"),
         count(v).as("__n")))
     def binOf(x: Column): Column =
@@ -673,7 +674,7 @@ object Sketch {
     val vals = df.select(v.as("__x")).where(col("__x").isNotNull)
       .crossJoin(broadcast(stats))
     // the ONE shared per-bin count frame (≤ bins rows) + cumulative
-    val cum = Dedup.registryPersist(
+    val cum = FrameCache.persist(
       vals.select(binOf(col("__x")).as("__b"))
       .groupBy(col("__b")).agg(count(lit(1)).as("__c"))
       .withColumn("__cum", sum(col("__c"))
@@ -701,7 +702,7 @@ object Sketch {
         least(ceil(col("__pos")) + 1, col("__n")).cast("long").as("__k2"))
     val targets = ks.select(col("q"), col("__pos"), col("__n"),
         explode(array(col("__k1"), col("__k2"))).as("__k"))
-    val located = Dedup.registryPersist(
+    val located = FrameCache.persist(
       targets.join(cum, col("__cum") >= col("__k"))
       .withColumn("__rn", row_number().over(
         Window.partitionBy(col("q"), col("__k")).orderBy(col("__b"))))

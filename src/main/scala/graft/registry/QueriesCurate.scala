@@ -487,7 +487,7 @@ private[graft] object QueriesCurate {
       // oracle is unchanged.
       val w = Models.ensureWeights(docs, "doc_id", "text",
         col("lang") === "en", buckets = 256, iters = 12, lrDen = 16L)
-      val scored = Dedup.registryPersist(
+      val scored = FrameCache.persist(
         Curate.scoreTextWith(docs, "doc_id", "text",
           col("lang") === "en", w))
       val perSrc = docs.select(col("doc_id"), col("source"))
@@ -660,10 +660,10 @@ private[graft] object QueriesCurate {
       // `next`'s fingerprint computed twice. Now each side scans once
       // on first materialization and every stage reads the cached
       // frame; crawl N+2 reuses them via the canonicalized-plan key.
-      val prev = Dedup.registryPersist(
+      val prev = FrameCache.persist(
         docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
           .withColumn("__fpo", TextFns.fingerprint(col("text"))))
-      val next = Dedup.registryPersist(
+      val next = FrameCache.persist(
         docs.filter(pmod(col("doc_id"), lit(2)) === 0)
           .withColumn("text",
             when(pmod(Dedup.portableHash64(col("text")), lit(5)) === 0,
@@ -694,7 +694,7 @@ private[graft] object QueriesCurate {
       // the banded join + exact-jaccard verification ran twice
       // (measured r16: the two 386-row aggregates at 4.4 s + 3.4 s CPU
       // were the same pass). Diff-sized accounting frame — bounded.
-      val dupes = Dedup.registryPersist(
+      val dupes = FrameCache.persist(
         Dedup.crossCorpusDupes(fresh, prev.drop("__fpo"),
           "doc_id", "text", shingleN = 3, threshold = 0.5))
       val dupRows = dupes

@@ -190,7 +190,7 @@ private[graft] object QueriesSim {
     // clustering, aggregated to per-cluster prune accounting
     "q239_semdedup_kmeans" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val assigned = Dedup.registryPersist(
+      val assigned = FrameCache.persist(
         Similarity.kmeansAssign(emb, "vec_id", "embedding",
           k = 8, iters = 3).select(col("vec_id"), col("cid")))
       Similarity.semanticDupFlags(emb.join(assigned, Seq("vec_id")),
@@ -218,7 +218,7 @@ private[graft] object QueriesSim {
     }),
 
     "q238_cluster_balanced_sample" -> ((s, dir) => {
-      val assigned = Dedup.registryPersist(
+      val assigned = FrameCache.persist(
         Similarity.kmeansAssign(t(s, dir, "embeddings"),
           "vec_id", "embedding", k = 8, iters = 3))
       val budgets = assigned.groupBy(col("cid"))
