@@ -1,11 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Plan-inspection tool: prints the formatted physical plan of selected
   * queries (or all with arg "all") so scan pushdown, broadcast choices,
   * and whole-stage-codegen spans can be audited per query.
-  * Usage: runMain graft.Explain <sfDir> [queryName ...]
+  * Usage: runMain graft.Explain <sfDir> [+metrics|+final|+rules]
+  * [queryName ... | all]
   *
   * Also hosts [[Explain.opMetrics]] — the MathLedger/rt_timers analog
   * (`riptable/rt_ledger.py:14`, `rt_timers.py:19`): per-OPERATOR
@@ -61,26 +64,9 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val names = if (args.length > 1) args.drop(1).toSeq else Seq("q1_agg")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.ansi.enabled", "false")
-      // sort-based shuffle writer at any reduce count (guide §2.2):
-      // the bypass writer's M×R shuffle files dominated small-stage
-      // cost on the bench rig — see RipSession for the profile.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "2")
-      // Local mode runs ONE executor: every task is process-local by
-      // construction, so the scheduler's locality wait (default 3 s per
-      // level, triggered by cached-block location preferences) is pure
-      // dead time — measured r16: a 10-query latency-bound subset
-      // dropped 9.0 -> 7.4 s with wait=0. Cluster deployments keep the
-      // default (this line rides the local[...] master below/above).
-      .config("spark.locality.wait", "0")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    // the session the benchmark times (`RipSession.local`), on 4 local
+    // CPUs, so dumped plans are the plans that run
+    val spark = RipSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     graft.operators.Apply.registerAll(spark)
     // "+metrics" among the query names: EXECUTE each query (collect —
@@ -89,7 +75,18 @@ object Explain {
     // formatted plan — the rt_timers-style evidence for "where does
     // this query's wall go".
     val wantMetrics = names.contains("+metrics")
-    val qnames = names.filterNot(_ == "+metrics")
+    // "+final": write each query to the noop sink (every row and column,
+    // as the benchmark times it) and print the AQE-final executed plan.
+    // "+rules": print which graft plan rules change the query's optimized
+    // plan (re-optimized with each excluded in turn).
+    val wantFinal = names.contains("+final")
+    val wantRules = names.contains("+rules")
+    @volatile var written: QueryExecution = null
+    spark.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = written = qe
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+    val qnames = names.filterNot(_.startsWith("+"))
     val targets =
       if (qnames == Seq("all")) SparkEntry.queries.keys.toSeq.sorted else qnames
     targets.foreach { n =>
@@ -106,6 +103,23 @@ object Explain {
               println(f"op=${r.getString(1)}%-40s rows=${r.getLong(2)}%-10d " +
                 f"time_ms=${r.getLong(3)}%-8d bytes=${r.getLong(4)}%d")
             }
+        } else if (wantFinal) {
+          written = null
+          df.write.format("noop").mode("overwrite").save()
+          while (written == null) Thread.sleep(10) // listener runs async
+          println(written.executedPlan.treeString)
+        } else if (wantRules) {
+          val excluded = "spark.sql.optimizer.excludedRules"
+          def optimized(rule: Option[String]) = {
+            rule.foreach(spark.conf.set(excluded, _))
+            try spark.sessionState.executePlan(df.queryExecution.analyzed)
+              .optimizedPlan.canonicalized
+            finally spark.conf.unset(excluded)
+          }
+          val base = optimized(None)
+          val changed = Seq(plans.SplitDistinctAggregate, plans.RangePartitionSortedWindow)
+            .map(_.ruleName).filter(r => optimized(Some(r)) != base)
+          println(s"rules=${changed.mkString(",")}")
         } else df.explain("formatted")
       } catch { case e: Throwable =>
         println(s"EXPLAIN-ERROR: ${e.getClass.getSimpleName}: ${e.getMessage}") }

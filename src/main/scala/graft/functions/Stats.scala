@@ -14,20 +14,22 @@ import org.apache.spark.sql.functions._
   */
 object Stats {
 
-  /** statx (rt_stats.py:40): the summary shape as one aggregate row. */
+  /** statx (rt_stats.py:40): the summary shape as one aggregate row. The
+    * five percentiles share one `percentile` buffer (an array of
+    * percentages) instead of five.
+    */
   def statx(df: DataFrame, valueCol: String): DataFrame = {
     val v = col(valueCol)
+    val ps = Seq("p01" -> 0.01, "p10" -> 0.1, "p50" -> 0.5, "p90" -> 0.9, "p99" -> 0.99)
     df.agg(
       count(v).as("n"),
       avg(v).as("mean"),
       stddev_samp(v).as("std"),
       min(v).as("mn"),
-      percentile(v, lit(0.01)).as("p01"),
-      percentile(v, lit(0.1)).as("p10"),
-      percentile(v, lit(0.5)).as("p50"),
-      percentile(v, lit(0.9)).as("p90"),
-      percentile(v, lit(0.99)).as("p99"),
+      percentile(v, array(ps.map(p => lit(p._2)): _*)).as("__ps"),
       max(v).as("mx"))
+      .select(Seq("n", "mean", "std", "mn").map(col) ++ ps.indices.map(i =>
+        element_at(col("__ps"), i + 1).as(ps(i)._1)) :+ col("mx"): _*)
   }
 
   /** lm (rt_stats.py:83): simple linear regression per group — slope,
@@ -44,14 +46,14 @@ object Stats {
   }
 
   /** winsorize (rt_stats.py): clip values to the [lo, hi] percentile
-    * band. Bounds are a one-row aggregate broadcast back — no second
-    * shuffle of the fact table.
+    * band. Bounds are a one-row aggregate (one `percentile` buffer for
+    * both) broadcast back — no second shuffle of the fact table.
     */
   def winsorize(df: DataFrame, valueCol: String, lo: Double = 0.05,
                 hi: Double = 0.95, out: String = "winsorized"): DataFrame = {
     val v = col(valueCol)
-    val bounds = df.agg(
-      percentile(v, lit(lo)).as("__lo"), percentile(v, lit(hi)).as("__hi"))
+    val bounds = df.agg(percentile(v, array(lit(lo), lit(hi))).as("__b"))
+      .select(element_at(col("__b"), 1).as("__lo"), element_at(col("__b"), 2).as("__hi"))
     df.crossJoin(broadcast(bounds))
       .withColumn(out, least(greatest(v, col("__lo")), col("__hi")))
       .drop("__lo", "__hi")

@@ -12,7 +12,11 @@ import org.apache.spark.sql.functions._
   * Stage-1 hash + Stage-2 pack design maps exactly onto Spark's
   * partial-aggregate + shuffle + final-aggregate (SURVEY §3.2), so every
   * op here is a plain aggregate expression that Catalyst plans with
-  * map-side combine.
+  * map-side combine. One exception is planned for: a `countUniques`
+  * (count distinct) beside an object-buffer aggregate such as
+  * `percentile` would key those buffers on the distinct column, so
+  * `graft.plans.SplitDistinctAggregate` plans the two parts as separate
+  * aggregates joined on the group keys, each map-side combined.
   *
   * NA semantics: riptable's `nan*` flavors skip invalids — that is Spark's
   * default null-skipping aggregate. The non-nan flavors PROPAGATE invalids
@@ -90,15 +94,18 @@ object GroupOps {
 
   /** trimbr — trimmed mean keeping values within the [lo, hi] percentile
     * band (rt_groupbyops.py:1366, GB_TRIMBR kernel; default 10%/90%).
-    * Two-pass: per-group percentile bounds (shuffle 1, map-side combined)
-    * then conditional mean (shuffle 2). Bounds side is one row per group →
+    * Two-pass: per-group percentile bounds — one `percentile` buffer for
+    * both — (shuffle 1, map-side combined) then conditional mean
+    * (shuffle 2). Bounds side is one row per group →
     * broadcast back in.
     */
   def trimbr(df: DataFrame, keys: Seq[String], valueCol: String,
              lo: Double = 0.1, hi: Double = 0.9, out: String = "trimbr"): DataFrame = {
     val v = col(valueCol)
     val bounds = df.groupBy(keys.map(col): _*)
-      .agg(percentile(v, lit(lo)).as("__lo"), percentile(v, lit(hi)).as("__hi"))
+      .agg(percentile(v, array(lit(lo), lit(hi))).as("__b"))
+      .select(keys.map(col) :+ element_at(col("__b"), 1).as("__lo") :+
+        element_at(col("__b"), 2).as("__hi"): _*)
     df.join(broadcast(bounds), keys)
       .groupBy(keys.map(col): _*)
       .agg(avg(when(v >= col("__lo") && v <= col("__hi"), v)).as(out))

@@ -13,7 +13,10 @@ import org.apache.spark.sql.functions._
   * (`riptable/rt_fastarray.py:2629,2648`), move_* bottleneck passthroughs
   * (`rt_fastarray.py:2670-2697`). All map onto Spark SQL window functions —
   * one shuffle on the partition keys, then a streaming frame scan; no
-  * group materialization, so group size is unbounded.
+  * group materialization, so group size is unbounded. `rankdata` is the
+  * exception: it windows over per-(group, value) counts and joins the
+  * ranks back, so its sort grows with a group's distinct values rather
+  * than its rows.
   *
   * Every helper takes explicit `order` columns: riptable relies on array
   * position, which does not exist on distributed data, so callers name a
@@ -367,17 +370,31 @@ object Rolling {
 
   /** rankdata (`rt_fastarray.py:2710`, bottleneck.rankdata): average-tie
     * ranks — each tie group gets the mean of the positions it occupies,
-    * min-rank + (ties−1)/2. Invalids rank LAST (bottleneck behavior:
-    * NaN sorts after every number; nulls are ordered last explicitly).
-    * One window pair, both on the same partitioning — single shuffle.
+    * `below + (ties + 1) / 2` with `below` the rows ranked strictly before
+    * it. Invalids rank LAST (bottleneck behavior: NaN sorts after every
+    * number; nulls are ordered last explicitly).
+    *
+    * Counts per (group, value) come from a map-side-combined aggregate; a
+    * window over that counts frame gives `below`, and a null-safe join on
+    * (group, value) brings the rank back to the rows. The only sort is of
+    * the distinct values per group, not of the group's rows, and the rows
+    * meet the counts by broadcast, or by a shuffle on (group, value)
+    * rather than on a few group keys. NaN and -0.0 fall in the tie groups
+    * of NaN and 0.0, as in numpy.
     */
   def rankdata(df: DataFrame, by: Seq[String], valueCol: String,
                out: String = "rankdata"): DataFrame = {
-    val w = Window.partitionBy(by.map(col): _*)
-      .orderBy(col(valueCol).asc_nulls_last)
-    val ties = Window.partitionBy((by.map(col) :+ col(valueCol)): _*)
-    df.withColumn(out,
-      rank().over(w) + (count(lit(1)).over(ties) - 1) / 2.0)
+    val keys = (by :+ valueCol).zipWithIndex.map { case (c, i) => c -> s"__rk$i" }
+    val counts = df.groupBy(keys.map { case (c, k) => col(c).as(k) }: _*)
+      .agg(count(lit(1)).as("__rkn"))
+    val w = Window.partitionBy(keys.init.map(k => col(k._2)): _*)
+      .orderBy(col(keys.last._2).asc_nulls_last)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val ranks = counts.withColumn("__rkr",
+      sum(col("__rkn")).over(w) - col("__rkn") + (col("__rkn") + 1) / 2.0)
+    df.join(ranks, keys.map { case (c, k) => df(c) <=> col(k) }.reduce(_ && _))
+      .withColumn(out, col("__rkr"))
+      .drop(keys.map(_._2) :+ "__rkn" :+ "__rkr": _*)
   }
 
   /** nanrankdata (`rt_fastarray.py:2713`): invalids get a null rank and

@@ -5,17 +5,23 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType}
 
-/** Session extension installing graft's native Catalyst functions.
+/** Session extension installing graft's native Catalyst functions, its
+  * as-of join strategy and its plan rules.
   *
   * Enable with `.config("spark.sql.extensions",
   * "graft.plans.GraftExtensions")` (or `withExtensions`). This is the
   * registry hook for every custom Expression the engine ships — the
   * Spark-idiomatic analog of riptable's custom-kernel dispatch tables
-  * (`riptable/rt_groupbynumba.py:688-701`).
+  * (`riptable/rt_groupbynumba.py:688-701`) — and the one place the
+  * optimizer gets [[SplitDistinctAggregate]] and
+  * [[RangePartitionSortedWindow]] (pre-CBO batch, run once; see
+  * `PlanRules.scala` for their triggers).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => AsofStrategy)
+    ext.injectPreCBORule(_ => SplitDistinctAggregate)
+    ext.injectPreCBORule(_ => RangePartitionSortedWindow)
     ext.injectFunction((
       new FunctionIdentifier("rip_ema_decay"),
       new ExpressionInfo(classOf[EmaDecay].getName, "rip_ema_decay"),

@@ -362,17 +362,24 @@ class OpsSpec extends SparkSpec {
 
   test("rankdata averages ties; nanrankdata nulls invalids without shifting ranks") {
     import graft.operators.Rolling
+    // group h: 0.0 and -0.0 tie, as do two NaNs (numpy equality)
     val df = Seq(("g", Some(10.0)), ("g", Some(20.0)), ("g", Some(20.0)),
-      ("g", Some(30.0)), ("g", None), ("g", Some(Double.NaN)))
+      ("g", Some(30.0)), ("g", None), ("g", Some(Double.NaN)),
+      ("h", Some(0.0)), ("h", Some(-0.0)), ("h", Some(Double.NaN)),
+      ("h", Some(Double.NaN)))
       .toDF("k", "v")
-    val rd = Rolling.rankdata(df, Seq("k"), "v", "r")
+    val rd = Rolling.rankdata(df, Seq("k"), "v", "r").filter($"k" === "g")
       .select("v", "r").collect()
       .map(r => Option(r.get(0)).map(_.toString).getOrElse("null") -> r.getDouble(1)).toMap
     assert(rd("10.0") === 1.0)
     assert(rd("20.0") === 2.5) // positions 2,3 averaged
     assert(rd("30.0") === 4.0)
     assert(rd("NaN") === 5.0)  // invalids rank last (bottleneck order)
-    val nrd = Rolling.nanrankdata(df, Seq("k"), "v", "r")
+    val h = Rolling.rankdata(df, Seq("k"), "v", "r").filter($"k" === "h")
+      .select("v", "r").collect().map(r => r.getDouble(0).toString -> r.getDouble(1))
+    assert(h.sortBy(_._1).toSeq ===
+      Seq("-0.0" -> 1.5, "0.0" -> 1.5, "NaN" -> 3.5, "NaN" -> 3.5))
+    val nrd = Rolling.nanrankdata(df, Seq("k"), "v", "r").filter($"k" === "g")
       .select("v", "r").collect()
       .map(r => Option(r.get(0)).map(_.toString).getOrElse("null") ->
         Option(r.get(1))).toMap
