@@ -118,50 +118,7 @@ final class BlockEvictionTracker {
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.ansi.enabled", "false")
-      // sort-based shuffle writer at any reduce count (guide §2.2):
-      // the bypass writer's M×R shuffle files dominated small-stage
-      // cost on the bench rig — see RipSession for the profile.
-      // Env-overridable for A/Bs (VERDICT r16 #5 asked for one on the
-      // TPC-H cluster).
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS", "2"))
-      // AQE partition coalescing honors DATA VOLUME, not core count
-      // (VERDICT r16 #4): with parallelismFirst=true (Spark default)
-      // the coalescer keeps ~defaultParallelism partitions alive no
-      // matter how few bytes flow, which is exactly the tiny-task fan
-      // that made the r16 sweep FASTER on 8 cores than 32. `false` is
-      // also the setting Spark's own docs recommend once advisory
-      // sizing is in place; at 100 TB the shuffles exceed the advisory
-      // size anyway, so this only changes the small-data regime.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARFIRST", "false"))
-      // reduce-task size goal for the coalescer (guide §2.2 "partitions
-      // in the 100 MB–1 GB range"); env knob so the A/B above can vary
-      // the small-data regime without recompiling
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "64m"))
-      // Local mode runs ONE executor: every task is process-local by
-      // construction, so the scheduler's locality wait (default 3 s per
-      // level, triggered by cached-block location preferences) is pure
-      // dead time — measured r16: a 10-query latency-bound subset
-      // dropped 9.0 -> 7.4 s with wait=0. Cluster deployments keep the
-      // default (this line rides the local[...] master below/above).
-      .config("spark.locality.wait", "0")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = RipSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // Per-query executor CPU seconds (VERDICT r11 #1): host contention
     // inflates WALL time while leaving CPU time flat, so cpu_sec beside
     // wall is the discriminator the tripwire needs — the r11 committed
@@ -234,14 +191,6 @@ object Bench {
       drainListenerBus()
       (dt, (cpuNs.get() - c0) / 1e9, ok)
     }
-    // "No Partition Defined" warnings here all come from DICTIONARY-sized
-    // windows (category encodes, ngroup ids, pivot duplicate checks) —
-    // deliberate one-partition evaluations of tiny frames (see VERDICT r4:
-    // do NOT "fix" these into broadcast regressions). Silence the logger,
-    // not the designs.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
 
     // warmup: JIT, then cache base tables, then one untimed pass of
     // every query (codegen compile + shuffle-file warm)

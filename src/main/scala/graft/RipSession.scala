@@ -2,16 +2,23 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory for the graft engine.
+/** Session factory for the graft engine — the one place a session is
+  * built. `local(cpus)` is the profile every entry point (Bench, Verify,
+  * VerifyScale10, Explain, the perfbench harness) and the test suite's
+  * `SparkSpec` run, so the oracle checks the configuration the bench
+  * times; `RipSessionSpec` pins its effective values.
   *
   * Riptable is an eager single-node library whose "session" is the Python
   * process (reference: `riptable/rt_fastarray.py:381` threading globals at
   * `rt_fastarray.py:6266`). On Spark the session carries the cluster tuning
-  * instead. Defaults here are chosen for the 100 TB posture:
-  *   - AQE on (runtime re-plan, skew-join splitting, partition coalescing);
-  *   - zstd parquet (riptable's SDS is zstd-compressed, `rt_sds.py:719`);
-  *   - shuffle partitions sized by the caller (32 on the local test rig;
-  *     thousands on a real cluster).
+  * instead. Only settings that differ from Spark's defaults are set; AQE
+  * (partition coalescing, skew-join splitting), parquet filter pushdown
+  * and runtime bloom-filter join pruning are Spark 4 defaults and stay on.
+  *
+  * To A/B a setting without a knob, pass `-Dspark.<key>=…` to the JVM
+  * (sbt `javaOptions`; `JAVA_TOOL_OPTIONS` for `scripts/run.sh`) for any
+  * key this profile does not set, or call `spark.conf.set` for a runtime
+  * SQL conf.
   */
 object RipSession {
 
@@ -19,24 +26,18 @@ object RipSession {
     SparkSession.builder()
       .master(master)
       .appName("graft")
+      // sized by the caller: cores on the local rig, thousands on a cluster
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      // riptable's SDS is zstd-compressed (`rt_sds.py:719`)
       .config("spark.sql.parquet.compression.codec", "zstd")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.filterPushdown", "true")
-      // Runtime bloom-filter join pruning: the probe side of a selective
-      // join gets a bloom filter built from the build side pushed into
-      // its scan — at 100 TB this prunes fact-table row groups before
-      // the shuffle (complements AQE; a no-op on tiny local data).
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       // Nanosecond parquet timestamps surface as LongType ns-since-epoch
       // (SURVEY §1.2: nanos-as-long policy; TimestampType is µs).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       // Riptable/numpy semantics are non-ANSI (wraparound int math,
       // silent overflow) — matches rc.BasicMath* kernel behavior.
+      // Spark 4 defaults ANSI on.
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.ui.enabled", "false")
       // Always use the sort-based shuffle writer (optimization r16,
@@ -53,7 +54,7 @@ object RipSession {
       // local-only tuning.
       .config("spark.shuffle.sort.bypassMergeThreshold", "2")
 
-  /** Local session for tests: local[n] with n shuffle partitions.
+  /** Local session: local[cpus] with cpus shuffle partitions.
     * `spark.locality.wait=0` is LOCAL-ONLY (not in `builder`): one
     * executor makes every task process-local by construction, so the
     * scheduler's locality wait (default 3 s per level, triggered by
@@ -67,6 +68,14 @@ object RipSession {
       .config("spark.locality.wait", "0")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // "No Partition Defined" warnings all come from DICTIONARY-sized
+    // windows (category encodes, ngroup ids, pivot duplicate checks) —
+    // deliberate one-partition evaluations of tiny frames (see VERDICT
+    // r4: do NOT "fix" these into broadcast regressions). Silence the
+    // logger, not the designs.
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
     s
   }
 }

@@ -317,29 +317,7 @@ object VerifyScale10 {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/tmp/graft_scale10"
     val outDir = if (args.length > 1) args(1) else "/tmp/verify_scale10"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.ansi.enabled", "false")
-      // sort-based shuffle writer at any reduce count (guide §2.2):
-      // the bypass writer's M×R shuffle files dominated small-stage
-      // cost on the bench rig — see RipSession for the profile.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "2")
-      // Local mode runs ONE executor: every task is process-local by
-      // construction, so the scheduler's locality wait (default 3 s per
-      // level, triggered by cached-block location preferences) is pure
-      // dead time — measured r16: a 10-query latency-bound subset
-      // dropped 9.0 -> 7.4 s with wait=0. Cluster deployments keep the
-      // default (this line rides the local[...] master below/above).
-      .config("spark.locality.wait", "0")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = RipSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     Scale10Fixtures.genAll(spark, dir)
     new java.io.File(outDir).mkdirs()
     // optional 3rd+ args: run only the named flagships (iteration aid —
@@ -354,20 +332,8 @@ object VerifyScale10 {
         System.err.println(s"[verify-scale10] $name failed: ${e.getMessage}")
       }
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = (SparkEntry.oracleSql.view.filterKeys(flagships.contains)
-      .toMap ++ oracleOverrides)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$outDir/oracle_sql.json"), json)
+    Verify.writeOracleSql(outDir, SparkEntry.oracleSql.view
+      .filterKeys(flagships.contains).toMap ++ oracleOverrides)
     spark.stop()
   }
 }

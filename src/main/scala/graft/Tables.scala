@@ -27,7 +27,7 @@ object Tables {
     * are zero when the source is µs-precision — documented in README.
     *
     * NTZ wall-clock is interpreted as UTC: the engine runs with
-    * `spark.sql.session.timeZone=UTC` (RipSession/Verify/Bench all set it),
+    * `spark.sql.session.timeZone=UTC` (the `RipSession` profile sets it),
     * which matches DuckDB's `epoch_ns(ts)` on the same parquet.
     */
   private val epochNanosContract: Map[String, Set[String]] =
@@ -107,13 +107,6 @@ object Tables {
     }
   }
 
-  /** Env override for the floor's bytes-per-task targets (A/B lever):
-    * when set, replaces EVERY per-table/per-call target.
-    */
-  private val floorTargetOverride: Option[Long] =
-    sys.env.get("SPARK_GRAFT_FLOOR_TARGET").flatMap(s =>
-      try Some(s.toLong) catch { case _: NumberFormatException => None })
-
   /** The scale-adaptive floor itself (see floorKeys doc): repartition
     * on `key` ONLY when the scan's estimated split count is below the
     * DATA-PROPORTIONAL width min(defaultParallelism, ⌈bytes/target⌉)
@@ -133,7 +126,6 @@ object Tables {
                            raw: DataFrame, key: String,
                            targetBytes: Long): DataFrame = {
     val sc = spark.sparkContext
-    val target = floorTargetOverride.getOrElse(targetBytes)
     // estimated splits without planning an RDD: bytes / split size
     // (single row groups make this an over-estimate, never under —
     // erring on NOT repartitioning at scale, which is the safe side)
@@ -144,7 +136,7 @@ object Tables {
       p.getFileSystem(sc.hadoopConfiguration).getFileStatus(p).getLen
     } catch { case _: Throwable => return raw } // size unknown: no floor
     val want = math.min(sc.defaultParallelism.toLong,
-      math.max(1L, (bytes + target - 1) / target)).toInt
+      math.max(1L, (bytes + targetBytes - 1) / targetBytes)).toInt
     val splits = math.max(1L, (bytes + maxSplit - 1) / maxSplit)
     if (splits >= want || want <= 1) raw
     else raw.repartition(want, org.apache.spark.sql.functions.col(key))

@@ -1,6 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -9,33 +8,7 @@ object Verify {
     // optional 3rd arg: comma-separated substring filter for fast local runs
     val only: Option[Seq[String]] =
       if (args.length > 2) Some(args(2).split(',').toSeq) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.ansi.enabled", "false")
-      // sort-based shuffle writer at any reduce count (guide §2.2):
-      // the bypass writer's M×R shuffle files dominated small-stage
-      // cost on the bench rig — see RipSession for the profile.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "2")
-      // Local mode runs ONE executor: every task is process-local by
-      // construction, so the scheduler's locality wait (default 3 s per
-      // level, triggered by cached-block location preferences) is pure
-      // dead time — measured r16: a 10-query latency-bound subset
-      // dropped 9.0 -> 7.4 s with wait=0. Cluster deployments keep the
-      // default (this line rides the local[...] master below/above).
-      .config("spark.locality.wait", "0")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // dictionary-sized single-partition windows are deliberate — see Bench
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = RipSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.exists(name.contains)) }
@@ -47,21 +20,15 @@ object Verify {
         if (sys.env.contains("SPARK_GRAFT_VERBOSE")) e.printStackTrace()
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(outDir, SparkEntry.oracleSql)
     spark.stop()
   }
+
+  /** `outDir/oracle_sql.json` (query name → DuckDB SQL), written by the
+    * Jackson Spark ships: it escapes quotes, backslashes and every
+    * control character, so a tab or CR in oracle SQL cannot break the
+    * checker's json.load and zero the whole correctness run. */
+  def writeOracleSql(outDir: String, sql: Map[String, String]): Unit =
+    new com.fasterxml.jackson.databind.ObjectMapper()
+      .writeValue(new java.io.File(outDir, "oracle_sql.json"), sql.asJava)
 }

@@ -11,6 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - every query needs its DuckDB oracle and every oracle its query
   *    (an orphaned oracle is a typo'd name — the query it meant to
   *    check would get only the weak rows-only gate);
+  *  - oracle_sql.json reads back as exactly the SQL that was written;
   *  - names follow the qN_slug scheme the driver and check.py key on.
   * No SparkSession needed — this is pure registry introspection.
   */
@@ -52,5 +53,22 @@ class ContractSpec extends AnyFunSuite {
     val dupNums = nums.groupBy(_._1).filter(_._2.size > 1)
     assert(dupNums.isEmpty, s"duplicate query numbers: " +
       dupNums.values.map(_.map(_._2).mkString("=")).mkString(", "))
+  }
+
+  test("oracle_sql.json round-trips quotes, backslashes, control chars and non-ASCII") {
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files.createTempDirectory("oracle_sql").toFile
+    val tricky = Map(
+      "q_quote" -> "SELECT '\"a\"' AS \"x\"",
+      "q_backslash" -> "SELECT 'C:\\dir\\' || '\\n'",
+      "q_ws" -> "SELECT 1\t-- tab\r\nFROM t",
+      "q_ctl" -> "SELECT '\u0001\u001f'",
+      "q_utf" -> "SELECT 'naïve Ω 漢字 \ud83d\ude00'")
+    Seq(tricky, SparkEntry.oracleSql).foreach { sql =>
+      Verify.writeOracleSql(dir.getPath, sql)
+      val back = new com.fasterxml.jackson.databind.ObjectMapper().readValue(
+        new java.io.File(dir, "oracle_sql.json"), classOf[java.util.Map[String, String]])
+      assert(back.asScala.toMap === sql)
+    }
   }
 }

@@ -4,8 +4,10 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local SparkSession for specs — same conf policy as RipSession
-  * (nanos-as-long, ANSI off, small shuffle partitions for test speed).
+/** Shared SparkSession for specs: the engine's one profile,
+  * `RipSession.local(4)`, so specs run the configuration the bench times
+  * (RipSessionSpec checks it). The warehouse path is a deployment
+  * setting and comes from `Test / javaOptions` in build.sbt.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
@@ -17,17 +19,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = RipSession.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
