@@ -22,6 +22,8 @@ import org.apache.spark.storage.StorageLevel
   *  - a tag naming the operator;
   *  - every explicit parameter (column names, geometry, iterations).
   *    Parameters must have value equality — no arrays.
+  * A session-keyed artifact (the second `memo`) has no input frame, so
+  * its session, tag and parameters are its whole key.
   *
   * Canonical-plan equality implies equal output only for deterministic
   * plans, so an input whose plan is nondeterministic bypasses the cache:
@@ -135,19 +137,28 @@ object FrameCache {
     * are correct, the last insert wins).
     */
   def memo[V](tag: String, inputs: DataFrame*)(params: Any*)(build: => V): V =
-    keyOf(tag, inputs, params) match {
-      case None => build
-      case Some(key) =>
-        entries.synchronized {
-          lookup(key).collect { case Artifact(v) => v }
-        } match {
-          case Some(v) => v.asInstanceOf[V]
-          case None =>
-            val v = build
-            entries.synchronized(insert(key, Artifact(v)))
-            v
-        }
-    }
+    memoKeyed(keyOf(tag, inputs, params))(build)
+
+  /** [[memo]] for an artifact that depends on no input frame, only on
+    * `session` and `params` — e.g. a base table's resolved schema, keyed
+    * by its path, length and modification time (Tables).
+    */
+  def memo[V](session: SparkSession, tag: String)(params: Any*)(build: => V): V =
+    memoKeyed(Some(Key(session, tag, Nil, Nil, params)))(build)
+
+  private def memoKeyed[V](key: Option[Key])(build: => V): V = key match {
+    case None => build
+    case Some(key) =>
+      entries.synchronized {
+        lookup(key).collect { case Artifact(v) => v }
+      } match {
+        case Some(v) => v.asInstanceOf[V]
+        case None =>
+          val v = build
+          entries.synchronized(insert(key, Artifact(v)))
+          v
+      }
+  }
 
   // callers hold the lock
   private def lookup(key: Key): Option[Entry] = {

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loaders for the driver-generated TPC-H-ish test tables (TESTDATA.md).
@@ -10,6 +12,28 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * predicate pushdown, and column pruning for free. `load_sds(stack=True)`
   * (multi-file concat into a PDataset, `rt_sds.py:1855`) maps to a
   * multi-path `spark.read.parquet(paths: _*)`.
+  *
+  * Table resolution. `load_sds` reads a file's header once and then
+  * works on the loaded columns; a plain `spark.read.parquet` instead
+  * runs one schema-inference job on every call. So `table` and
+  * `floored` resolve a base table's schema once per session: the
+  * schema is a driver-side [[FrameCache]] artifact keyed by (session,
+  * qualified path, file length, modification time), and a later call
+  * reads with that known schema and runs no job. Rewriting the file
+  * changes its length or mtime, so the next call re-resolves.
+  * `FrameCache.clear()` drops the schemas with every other entry, so
+  * the first call after a clear pays one resolution again.
+  *
+  * Every call still gets a fresh read, never a shared DataFrame: a
+  * self-join (`nation` twice in TPC-H q7/q8) needs new attribute IDs
+  * on each side. On a miss the inferring read itself is handed out; its
+  * plan canonicalizes equal to a known-schema read (TablesSpec), so
+  * FrameCache keys built on top are the same for a first call and its
+  * repeat. A directory (a Spark-written dataset, such as the 10x
+  * fixtures) or a path that cannot be stat-ed is read plainly —
+  * inferring, unfloored — because a directory's length and mtime do not
+  * identify its contents. `stacked` and `info` read arbitrary paths and
+  * are not memoized.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -98,13 +122,46 @@ object Tables {
     "documents" -> (("doc_id", 65536L)),
     "embeddings" -> (("vec_id", 65536L)))
 
+  /** Base table `name` under `dir`: epoch-nanos normalized, and floored
+    * when it is a pipeline table (floorKeys). Its schema is resolved
+    * once per session (header doc); the read itself is fresh per call.
+    */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val raw0 = spark.read.parquet(s"$dir/$name.parquet")
-    val raw = epochNanosContract.get(name).fold(raw0)(normalizeEpochNanos(raw0, _))
+    val (raw, bytes) = read(spark, dir, name)
     floorKeys.get(name) match {
-      case Some((key, target)) => flooredByKey(spark, dir, name, raw, key, target)
+      case Some((key, target)) => flooredByKey(spark, raw, bytes, key, target)
       case None => raw
     }
+  }
+
+  /** One fresh, epoch-nanos-normalized read of `dir/name.parquet`, and
+    * the file's length when it is a file that could be stat-ed. The one
+    * stat per call supplies both the schema memo's key and the floor's
+    * byte count. `None` is the explicit unknown branch: plain inferring
+    * read, no memo, no floor.
+    */
+  private def read(spark: SparkSession, dir: String,
+                   name: String): (DataFrame, Option[Long]) = {
+    val path = s"$dir/$name.parquet"
+    val file = try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      Some(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getFileStatus(p)).filter(_.isFile)
+    } catch { case NonFatal(_) => None }
+    val raw = file match {
+      case None => spark.read.parquet(path)
+      case Some(st) =>
+        var inferred: Option[DataFrame] = None
+        val schema = FrameCache.memo(spark, "Tables.schema")(
+            st.getPath.toString, st.getLen, st.getModificationTime) {
+          val df = spark.read.parquet(path)
+          inferred = Some(df)
+          df.schema
+        }
+        inferred.getOrElse(spark.read.schema(schema).parquet(path))
+    }
+    (epochNanosContract.get(name).fold(raw)(normalizeEpochNanos(raw, _)),
+      file.map(_.getLen))
   }
 
   /** The scale-adaptive floor itself (see floorKeys doc): repartition
@@ -120,26 +177,26 @@ object Tables {
     * floor stays a no-op (splits ≥ width), so the constant only
     * decides how aggressively a SMALL under-split scan fans out.
     * Shared by `table` (pipeline tables, always) and `floored`
-    * (per-query opt-in for the TPC-H tables).
+    * (per-query opt-in for the TPC-H tables). `bytes` comes from
+    * `read`'s stat; an unknown size means no floor. The decision is
+    * per-call arithmetic, not memoized, because `filesMaxPartitionBytes`
+    * is a runtime conf.
     */
-  private def flooredByKey(spark: SparkSession, dir: String, name: String,
-                           raw: DataFrame, key: String,
-                           targetBytes: Long): DataFrame = {
-    val sc = spark.sparkContext
-    // estimated splits without planning an RDD: bytes / split size
-    // (single row groups make this an over-estimate, never under —
-    // erring on NOT repartitioning at scale, which is the safe side)
-    val maxSplit = org.apache.spark.sql.internal.SQLConf.get
-      .filesMaxPartitionBytes
-    val bytes = try {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-      p.getFileSystem(sc.hadoopConfiguration).getFileStatus(p).getLen
-    } catch { case _: Throwable => return raw } // size unknown: no floor
-    val want = math.min(sc.defaultParallelism.toLong,
-      math.max(1L, (bytes + targetBytes - 1) / targetBytes)).toInt
-    val splits = math.max(1L, (bytes + maxSplit - 1) / maxSplit)
-    if (splits >= want || want <= 1) raw
-    else raw.repartition(want, org.apache.spark.sql.functions.col(key))
+  private def flooredByKey(spark: SparkSession, raw: DataFrame,
+                           bytes: Option[Long], key: String,
+                           targetBytes: Long): DataFrame = bytes match {
+    case None => raw
+    case Some(bytes) =>
+      // estimated splits without planning an RDD: bytes / split size
+      // (single row groups make this an over-estimate, never under —
+      // erring on NOT repartitioning at scale, which is the safe side)
+      val maxSplit = org.apache.spark.sql.internal.SQLConf.get
+        .filesMaxPartitionBytes
+      val want = math.min(spark.sparkContext.defaultParallelism.toLong,
+        math.max(1L, (bytes + targetBytes - 1) / targetBytes)).toInt
+      val splits = math.max(1L, (bytes + maxSplit - 1) / maxSplit)
+      if (splits >= want || want <= 1) raw
+      else raw.repartition(want, org.apache.spark.sql.functions.col(key))
   }
 
   /** Per-query opt-in floor for the TPC-H tables. The global floor
@@ -150,17 +207,17 @@ object Tables {
     * opt in here, keying on their join/group key so the added exchange
     * is also the one their first shuffle needs (guide §2.4). Same
     * scale-adaptive condition: a no-op when the scan already has
-    * ≥ defaultParallelism splits.
+    * ≥ defaultParallelism splits. The schema is resolved once per
+    * session, as in `table`.
     */
   def floored(spark: SparkSession, dir: String, name: String,
               key: String): DataFrame = {
-    val raw0 = spark.read.parquet(s"$dir/$name.parquet")
-    val raw = epochNanosContract.get(name).fold(raw0)(normalizeEpochNanos(raw0, _))
+    val (raw, bytes) = read(spark, dir, name)
     // TPC-H rows are narrow numerics aggregated by codegen'd partial
     // aggregation — per-byte work is the lightest class here, so the
     // opt-in floor targets 1 MB of zstd parquet per task (sf0.1:
     // lineitem 10.8 MB → 11 tasks instead of the r16 fan to 32)
-    flooredByKey(spark, dir, name, raw, key, 1048576L)
+    flooredByKey(spark, raw, bytes, key, 1048576L)
   }
 
   /** Multi-file stacked load — the PDataset analog (`rt_pdataset.py:18`):
