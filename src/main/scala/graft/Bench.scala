@@ -389,8 +389,7 @@ object Bench {
         s"entries=${st.frames} cap=${FrameCache.maxCached} " +
         s"trims=${st.trims} " +
         s"peak=${st.peakFrames} trimKeep=$trimKeep " +
-        s"blockLoss=${evictTracker.lost} " +
-        s"classifierMemoHits=${operators.Curate.classifierMemoHits}")
+        s"blockLoss=${evictTracker.lost}")
       // machine-readable in bench_full.json: evictions>0 during a sweep
       // is the thrash signature (VERDICT r12 #1) — the judge and the
       // next round's tripwire can now read it without log archaeology.

@@ -21,17 +21,26 @@ import org.apache.spark.storage.StorageLevel
   *    otherwise collide and break every downstream column reference);
   *  - a tag naming the operator;
   *  - every explicit parameter (column names, geometry, iterations).
-  *    Parameters must have value equality — no arrays.
+  *    Parameters must have value equality — no arrays; pass an array
+  *    by content (`ArraySeq`).
   * A session-keyed artifact (the second `memo`) has no input frame, so
-  * its session, tag and parameters are its whole key.
+  * its session, tag and parameters are its whole key. `persist(df)`
+  * keys the frame itself: its plan is the one input, under one fixed
+  * tag. The input-keyed `persist(tag, inputs*)(params*)(build)` keys an
+  * operator's output by what it is built FROM, like `memo`, so a hit is
+  * found before the operator builds (and Spark analyzes) the output's
+  * plan; it holds an alias to the plan-keyed frame, never a frame of
+  * its own, so two routes that build equal plans still share one frame.
   *
   * Canonical-plan equality implies equal output only for deterministic
   * plans, so an input whose plan is nondeterministic bypasses the cache:
-  * `persist` hands it back unpersisted and `memo` builds every time.
+  * `persist` hands it back unpersisted and `memo` and the input-keyed
+  * `persist` build every time.
   *
-  * One LRU map under one lock holds both value kinds, capped at
+  * One LRU map under one lock holds all three entry kinds, capped at
   * `-Dgraft.dedup.maxCached` entries (default 512). Persisted frames
-  * are unpersisted when they leave (eviction, [[trimTo]], [[clear]]);
+  * are unpersisted when they leave (eviction, [[trimTo]], [[clear]]),
+  * and every alias to a frame leaves with it;
   * artifacts are only dropped, never unpersisted, because a result
   * pinned by localCheckpoint (Cluster) has no recompute path and an
   * earlier caller may still read its blocks — the ContextCleaner frees
@@ -41,7 +50,7 @@ object FrameCache {
 
   private val log = org.slf4j.LoggerFactory.getLogger("graft.FrameCache")
 
-  /** Entry cap over both value kinds. Sized above the full registry
+  /** Entry cap over every entry kind. Sized above the full registry
     * sweep's reuse set: frames persist MEMORY_AND_DISK, so a generous
     * cap degrades to disk, never to recompute; its job is bounding a
     * long-lived session that sweeps unrelated corpora.
@@ -57,6 +66,9 @@ object FrameCache {
   private sealed trait Entry
   private final case class Frame(df: DataFrame) extends Entry
   private final case class Artifact(value: Any) extends Entry
+  // an input key's pointer to the plan-keyed frame its build persisted;
+  // `frame` is compared by identity when that frame leaves
+  private final case class Alias(target: Key, frame: Frame) extends Entry
 
   private val PersistTag = "persist"
 
@@ -66,9 +78,10 @@ object FrameCache {
 
   /** One snapshot of the cache's counters. `hits` through `frames`
     * cover persisted frames only (the registry numbers the bench and
-    * specs read); `artifacts` is the number of driver-side artifacts
-    * held. Counters are cumulative per JVM except the two current sizes
-    * and `peakFrames`.
+    * specs read); a hit through an input key counts as a frame hit.
+    * `artifacts` and `aliases` are the numbers of driver-side artifacts
+    * and input-key aliases held. Counters are cumulative per JVM except
+    * the three current sizes and `peakFrames`.
     *
     * `peakFrames` is the resident-frame high-water mark since
     * [[resetPeak]]. It is the demand signal: Bench's between-query trim
@@ -79,11 +92,13 @@ object FrameCache {
     */
   final case class Stats(hits: Long, misses: Long, evictions: Long,
                          trims: Long, peakFrames: Long, frames: Long,
-                         artifacts: Long)
+                         artifacts: Long, aliases: Long)
 
   def stats: Stats = entries.synchronized {
+    val aliases = entries.values().stream()
+      .filter(_.isInstanceOf[Alias]).count()
     Stats(hits, misses, evictions, trims, peakFrames, frames,
-      entries.size - frames)
+      entries.size - frames - aliases, aliases)
   }
 
   /** True when re-materializing the plan may produce different rows:
@@ -117,17 +132,52 @@ object FrameCache {
     */
   def persist(df: DataFrame): DataFrame = keyOf(PersistTag, Seq(df), Nil) match {
     case None => df
-    case Some(key) => entries.synchronized {
-      lookup(key) match {
-        case Some(Frame(hit)) => hits += 1; hit
-        case _ =>
-          misses += 1
-          df.persist(StorageLevel.MEMORY_AND_DISK)
-          insert(key, Frame(df))
-          df
-      }
-    }
+    case Some(key) => entries.synchronized(persistKeyed(key, df).df)
   }
+
+  /** The persisted output `build` computes from (`tag`, `inputs`,
+    * `params`), found by those alone: a hit returns the shared frame
+    * without evaluating `build`, counted as a frame hit; a miss passes
+    * `build` through [[persist]] (so an equal plan built by another
+    * route is shared, not persisted twice) and records this key as an
+    * alias to that frame. The alias leaves when its frame does. As with
+    * [[memo]], `build` must be a function of the inputs and parameters
+    * alone, and it runs outside the lock.
+    */
+  def persist(tag: String, inputs: DataFrame*)(params: Any*)(
+      build: => DataFrame): DataFrame = keyOf(tag, inputs, params) match {
+    case None => persist(build)
+    case Some(key) =>
+      entries.synchronized {
+        lookup(key).collect { case Alias(target, frame) =>
+          entries.get(target) // keep the frame as recent as its alias
+          hits += 1
+          frame.df
+        }
+      }.getOrElse {
+        val df = build
+        keyOf(PersistTag, Seq(df), Nil) match {
+          case None => df
+          case Some(target) => entries.synchronized {
+            val frame = persistKeyed(target, df)
+            insert(key, Alias(target, frame))
+            frame.df
+          }
+        }
+      }
+  }
+
+  // callers hold the lock
+  private def persistKeyed(key: Key, df: DataFrame): Frame =
+    lookup(key) match {
+      case Some(hit: Frame) => hits += 1; hit
+      case _ =>
+        misses += 1
+        df.persist(StorageLevel.MEMORY_AND_DISK)
+        val frame = Frame(df)
+        insert(key, frame)
+        frame
+    }
 
   /** The value `build` computes for (`tag`, `inputs`, `params`), built
     * at most once per key while the entry lives. `build` must be a pure
@@ -181,15 +231,24 @@ object FrameCache {
       val eldest = it.next()
       it.remove()
       eldest match {
-        case Frame(df) =>
+        case f @ Frame(df) =>
           frames -= 1
           evictions += 1
           log.info(s"evicting LRU frame (size ${entries.size + 1} > cap $maxCached)")
           unpersist(df)
-        case Artifact(_) => ()
+          dropAliases(Seq(f))
+        case _ => ()
       }
     }
   }
+
+  // callers hold the lock; identity, not equality: an equal frame may
+  // be persisted again later under the same plan key
+  private def dropAliases(gone: Iterable[Frame]): Unit =
+    if (gone.nonEmpty) entries.values().removeIf {
+      case Alias(_, f) => gone.exists(_ eq f)
+      case _ => false
+    }
 
   private def unpersist(df: DataFrame, blocking: Boolean = false): Unit =
     try {
@@ -197,7 +256,8 @@ object FrameCache {
     } catch { case scala.util.control.NonFatal(_) => () }
 
   /** Unpersist all but the `keep` most recently used persisted frames;
-    * artifacts stay. Counted as `trims`, never as `evictions`: a
+    * artifacts stay, and the aliases of a trimmed frame go with it.
+    * Counted as `trims`, never as `evictions`: a
     * deliberate between-query trim is hygiene, while evictions are the
     * cap-thrash signal. `blocking = true` lets Bench drain the block
     * removals inside its deliberate-teardown window.
@@ -205,25 +265,28 @@ object FrameCache {
   def trimTo(keep: Int, blocking: Boolean = false): Unit =
     entries.synchronized {
       require(keep >= 0, s"keep must be >= 0: $keep")
+      val gone = scala.collection.mutable.ArrayBuffer.empty[Frame]
       val it = entries.values().iterator()
       while (frames > keep && it.hasNext) it.next() match {
-        case Frame(df) =>
+        case f @ Frame(df) =>
           it.remove()
           frames -= 1
           trims += 1
           unpersist(df, blocking)
-        case Artifact(_) => ()
+          gone += f
+        case _ => ()
       }
+      dropAliases(gone)
     }
 
   /** Restart the `peakFrames` high-water mark at the current size. */
   def resetPeak(): Unit = entries.synchronized { peakFrames = frames }
 
-  /** Drop every entry of both kinds, unpersisting the frames. */
+  /** Drop every entry of all three kinds, unpersisting the frames. */
   def clear(): Unit = entries.synchronized {
     entries.values().forEach {
       case Frame(df) => unpersist(df)
-      case Artifact(_) => ()
+      case _ => ()
     }
     entries.clear()
     frames = 0

@@ -3,6 +3,7 @@ package graft
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Loaders for the driver-generated TPC-H-ish test tables (TESTDATA.md).
   *
@@ -16,20 +17,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Table resolution. `load_sds` reads a file's header once and then
   * works on the loaded columns; a plain `spark.read.parquet` instead
   * runs one schema-inference job on every call. So `table` and
-  * `floored` resolve a base table's schema once per session: the
-  * schema is a driver-side [[FrameCache]] artifact keyed by (session,
-  * qualified path, file length, modification time), and a later call
-  * reads with that known schema and runs no job. Rewriting the file
-  * changes its length or mtime, so the next call re-resolves.
-  * `FrameCache.clear()` drops the schemas with every other entry, so
-  * the first call after a clear pays one resolution again.
+  * `floored` resolve a base table's schema once per session, from the
+  * file's parquet footer on the driver (no Spark job): the schema is a
+  * driver-side [[FrameCache]] artifact keyed by (session, qualified
+  * path, file length, modification time), and every call reads with
+  * that known schema. Rewriting the file changes its length or mtime,
+  * so the next call re-resolves. `FrameCache.clear()` drops the
+  * schemas with every other entry, so the first call after a clear
+  * reads one footer again.
   *
   * Every call still gets a fresh read, never a shared DataFrame: a
   * self-join (`nation` twice in TPC-H q7/q8) needs new attribute IDs
-  * on each side. On a miss the inferring read itself is handed out; its
-  * plan canonicalizes equal to a known-schema read (TablesSpec), so
-  * FrameCache keys built on top are the same for a first call and its
-  * repeat. A directory (a Spark-written dataset, such as the 10x
+  * on each side. The footer schema equals the inferred one, and the
+  * read's plan canonicalizes equal to an inferring read (TablesSpec),
+  * so FrameCache keys built on top do not depend on how the schema was
+  * resolved. A directory (a Spark-written dataset, such as the 10x
   * fixtures) or a path that cannot be stat-ed is read plainly —
   * inferring, unfloored — because a directory's length and mtime do not
   * identify its contents. `stacked` and `info` read arbitrary paths and
@@ -151,18 +153,39 @@ object Tables {
     val raw = file match {
       case None => spark.read.parquet(path)
       case Some(st) =>
-        var inferred: Option[DataFrame] = None
         val schema = FrameCache.memo(spark, "Tables.schema")(
-            st.getPath.toString, st.getLen, st.getModificationTime) {
-          val df = spark.read.parquet(path)
-          inferred = Some(df)
-          df.schema
-        }
-        inferred.getOrElse(spark.read.schema(schema).parquet(path))
+          st.getPath.toString, st.getLen, st.getModificationTime)(
+          footerSchema(spark, st))
+        spark.read.schema(schema).parquet(path)
     }
     (epochNanosContract.get(name).fold(raw)(normalizeEpochNanos(raw, _)),
       file.map(_.getLen))
   }
+
+  /** The Spark schema of one parquet file, read from its footer on the
+    * driver with no Spark job — what schema inference computes for a
+    * single file, without the job: the schema Spark stored when it
+    * wrote the file if present, otherwise the footer's parquet schema
+    * converted under the session's conf (which carries `nanosAsLong`
+    * and the binary/int96 settings).
+    */
+  private def footerSchema(spark: SparkSession,
+                           st: org.apache.hadoop.fs.FileStatus): StructType = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(st, spark.sessionState.newHadoopConf()))
+    val meta = try reader.getFooter.getFileMetaData finally reader.close()
+    Option(meta.getKeyValueMetaData.get(SparkRowMetadataKey))
+      .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+      .collect { case t: StructType => t }
+      .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+        .convert(meta.getSchema))
+  }
+
+  // ParquetReadSupport.SPARK_METADATA_KEY
+  private val SparkRowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
 
   /** The scale-adaptive floor itself (see floorKeys doc): repartition
     * on `key` ONLY when the scan's estimated split count is below the

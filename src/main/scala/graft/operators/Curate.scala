@@ -315,7 +315,7 @@ object Curate {
     // recomputing the hash stream per consumer (was 4 passes: the totals
     // below used to be a fourth full gram scan; they now fold the ≤B-row
     // bucket aggregates). Frame is (id, bool, bucket) per gram — tiny
-    // relative to text; spills at scale; clearDedupCaches() reclaims.
+    // relative to text; spills at scale; FrameCache.clear() reclaims.
     val grams = FrameCache.persist(df
       .withColumn("__tgt", targetFilter)
       .select(col(idCol), col("__tgt"),
@@ -656,13 +656,8 @@ object Curate {
     // 0): skip the update loop, weights stay 0, result is empty anyway
     val w: Array[Long] =
       if (n == 0 || iters == 0) Array.fill(buckets)(0L)
-      else {
-        var trained = false
-        val cached = FrameCache.memo("textClassifier", x, base)(
-          buckets, iters, lrNum, lrDen) { trained = true; train() }
-        if (!trained) classifierMemoHits += 1
-        cached
-      }
+      else FrameCache.memo("textClassifier", x, base)(
+        buckets, iters, lrNum, lrDen)(train())
     val scored = base.join(margins(w), Seq("__id"), "left")
       .select(col("__id").as(idCol),
         coalesce(col("__z"), lit(0L)).as("z_units"),
@@ -710,11 +705,6 @@ object Curate {
         ((coalesce(col("__z"), lit(0L)) > 0) === (col("__y") === 1))
           .as("correct"))
   }
-
-  /** Calls of [[trainTextClassifier]] served from [[FrameCache]]
-    * without re-running the GD loop — a composing query (the q234 gate
-    * over q232's trainer) re-scores with the cached model. */
-  @volatile var classifierMemoHits: Long = 0L
 
   /** Drop every cached weight vector. Kept for
     * perfbench/src/Harness.scala; empties the whole [[FrameCache]]. */

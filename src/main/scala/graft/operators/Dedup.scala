@@ -20,16 +20,12 @@ object Dedup {
 
   private val log = org.slf4j.LoggerFactory.getLogger("graft.operators.Dedup")
 
-  // The names from registryPersist to cacheStats forward to
-  // graft.FrameCache, the engine's one plan-keyed cache. They stay
-  // because perfbench/src/Harness.scala and the registry specs read
-  // them; engine code calls FrameCache directly. The registry counters
-  // cover persisted frames only.
+  // The four names below forward to graft.FrameCache, the engine's
+  // one plan-keyed cache. They stay because perfbench/src/Harness.scala
+  // compiles against them; engine code and specs call FrameCache
+  // directly. The registry counters cover persisted frames only.
 
-  /** Persist through [[graft.FrameCache.persist]] (registry specs). */
-  private[graft] def registryPersist(df: DataFrame): DataFrame = FrameCache.persist(df)
-
-  /** Empty [[graft.FrameCache]], both value kinds (Harness, specs). */
+  /** Empty [[graft.FrameCache]], every entry kind (Harness, specs). */
   def clearDedupCaches(): Unit = FrameCache.clear()
 
   /** Cumulative persisted-frame hits (Harness `cache.hits`, specs). */
@@ -37,42 +33,6 @@ object Dedup {
 
   /** Cumulative persisted-frame misses (Harness `cache.misses`, specs). */
   def registryMisses: Long = FrameCache.stats.misses
-
-  /** Frames evicted by the LRU cap — the thrash signal (specs). */
-  def registryEvictions: Long = FrameCache.stats.evictions
-
-  /** Frames released by [[trimCachesTo]] (specs). */
-  def registryTrims: Long = FrameCache.stats.trims
-
-  /** Resident-frame high-water mark since [[resetRegistryPeak]] (specs). */
-  def registryPeakEntries: Long = FrameCache.stats.peakFrames
-
-  /** Restart the peak at the current frame count (specs). */
-  def resetRegistryPeak(): Unit = FrameCache.resetPeak()
-
-  /** Unpersist all but the `keep` most recently used frames (specs). */
-  def trimCachesTo(keep: Int, blocking: Boolean = false): Unit =
-    FrameCache.trimTo(keep, blocking)
-
-  /** One row (hits, misses, evictions, entries, cap) over persisted
-    * frames (specs).
-    */
-  def cacheStats(spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    import spark.implicits._
-    val s = FrameCache.stats
-    Seq((s.hits, s.misses, s.evictions, s.frames, FrameCache.maxCached.toLong))
-      .toDF("hits", "misses", "evictions", "entries", "cap")
-  }
-
-  /** The bloom bitmap of `keys.keyCol`, built once per (key plan,
-    * schema, key column, geometry) per session: q256/q260/q262/q264 all
-    * gate against the same eval-suite filter, and the build is a
-    * blocking driver job. Each entry is mBits/8 bytes.
-    */
-  private[graft] def memoizedBitmap(keys: DataFrame, keyCol: String,
-                                    mBits: Int, kHashes: Int): Array[Long] =
-    FrameCache.memo("bloomBitmap", keys)(keyCol, mBits, kHashes)(
-      Bloom.bitmapFor(keys, keyCol, mBits, kHashes))
 
   /** Distinct 64-bit shingle hashes per doc as (id, sh) rows. Tokenizes
     * ONCE into a named array column, then builds every n-gram with a
@@ -326,7 +286,7 @@ object Dedup {
     // verified pairs — shares one FrameCache entry (no double-persist
     // warnings, LRU-capped); the token-hash
     // pass (md5 in portable mode) dominates and runs once. Frame is one
-    // long per doc; `clearDedupCaches()` reclaims.
+    // long per doc; `FrameCache.clear()` reclaims.
     val sigs = FrameCache.persist(
       toks.groupBy(col(idCol)).agg(votes.head, votes.tail: _*)
         .select(col(idCol), bits.as("__simhash")))
@@ -375,20 +335,22 @@ object Dedup {
     * at sf0.1). The frame is distinct-HASHES-per-doc sized (8 B per
     * shingle), far smaller than the corpus, and spills to disk at
     * scale; identical calls in one session share ONE cache entry via
-    * FrameCache, which also LRU-evicts old corpora.
-    * Callers needing the memory back use `clearDedupCaches()`.
+    * FrameCache, which also LRU-evicts old corpora. The entry is found
+    * by (docs, columns, n), so a repeat call builds no plan.
+    * Callers needing the memory back use `FrameCache.clear()`.
     */
   private def shingleSets(docs: DataFrame, idCol: String, textCol: String,
-                          shingleN: Int): DataFrame = {
-    val exploded = shingleHashes(docs, idCol, textCol, shingleN)
-      .withColumnRenamed(idCol, "id")
-    val dfreq = exploded.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-    FrameCache.persist(exploded.join(dfreq, Seq("sh"))
-      .groupBy(col("id"))
-      .agg(transform(sort_array(collect_list(struct(col("df"), col("sh")))),
-        x => x.getField("sh")).as("shs"))
-      .withColumn("sz", size(col("shs"))))
-  }
+                          shingleN: Int): DataFrame =
+    FrameCache.persist("Dedup.shingleSets", docs)(idCol, textCol, shingleN) {
+      val exploded = shingleHashes(docs, idCol, textCol, shingleN)
+        .withColumnRenamed(idCol, "id")
+      val dfreq = exploded.groupBy(col("sh")).agg(count(lit(1)).as("df"))
+      exploded.join(dfreq, Seq("sh"))
+        .groupBy(col("id"))
+        .agg(transform(sort_array(collect_list(struct(col("df"), col("sh")))),
+          x => x.getField("sh")).as("shs"))
+        .withColumn("sz", size(col("shs")))
+    }
 
   /** Exact-jaccard verification of a candidate pair set: joins each
     * side's full shingle set and keeps pairs with J ≥ threshold. The
@@ -648,8 +610,10 @@ object Dedup {
     val bloomed =
       if (bloomBits <= 0) fullAll
       else {
-        val bitmap = memoizedBitmap(prefixes.select(col("sh")), "sh",
-          bloomBits, bloomHashes)
+        // one build per (key plan, geometry) per session
+        val keys = prefixes.select(col("sh"))
+        val bitmap = FrameCache.memo("bloomBitmap", keys)(bloomBits,
+          bloomHashes)(Bloom.bitmapFor(keys, "sh", bloomBits, bloomHashes))
         fullAll.filter(Bloom.probe(col("sh"), bitmap, bloomBits, bloomHashes))
       }
     val full =
@@ -1262,44 +1226,51 @@ object Dedup {
                                    idCol: String, textCol: String,
                                    shingleN: Int, threshold: Double,
                                    bloomBits: Int, bloomHashes: Int,
-                                   prebuilt: Option[Array[Long]] = None): DataFrame = {
-    val setsE = shingleSets(evalDocs, idCol, textCol, shingleN)
-    val setsC = shingleSets(corpus, idCol, textCol, shingleN)
-    val pref = setsE.withColumn("plen",
-      (col("sz") - ceil(col("sz") * lit(threshold)) + 1).cast("int"))
-      .select(col("id").as("id_eval"),
-        explode(slice(col("shs"), lit(1), col("plen"))).as("sh"))
-    val corpusAll = setsC.select(col("id").as("id_doc"),
-      explode(col("shs")).as("sh"))
-    val corpusEx =
-      if (bloomBits <= 0) corpusAll
-      else {
-        // memoized: q256/q260/q262/q264 gate against the SAME eval
-        // suite — one build per (key plan, geometry) per session. A
-        // prebuilt (artifact) bitmap is bit-identical to the built one
-        // by Models' content addressing, so both paths canonicalize to
-        // the same downstream plan.
-        val bitmap = prebuilt.getOrElse(memoizedBitmap(
-          pref.select(col("sh")), "sh", bloomBits, bloomHashes))
-        corpusAll.filter(Bloom.probe(col("sh"), bitmap, bloomBits, bloomHashes))
-      }
+                                   prebuilt: Option[Array[Long]] = None): DataFrame =
     // the VERIFIED pair frame registry-persists (VERDICT r13 #2): the
     // release-audit family consumes the same exact gate several ways —
     // q256 orders it, q262 folds max-per-doc, q264 folds one go/no-go
     // row — and the candidate join + exact intersect verify is the
     // expensive part. True matches only, so the frame is audit-sized.
-    FrameCache.persist(pref.join(corpusEx, Seq("sh"))
-      .select(col("id_eval"), col("id_doc")).distinct()
-      .join(setsE.select(col("id").as("id_eval"), col("shs").as("shs_e"),
-        col("sz").as("sz_e")), Seq("id_eval"))
-      .join(setsC.select(col("id").as("id_doc"), col("shs").as("shs_c")),
-        Seq("id_doc"))
-      .withColumn("co", size(array_intersect(col("shs_e"), col("shs_c"))))
-      .withColumn("__c", col("co").cast("double") / col("sz_e"))
-      .filter(col("__c") >= threshold)
-      .select(col("id_eval"), col("id_doc"),
-        round(col("__c"), 6).as("containment")))
-  }
+    // Keyed by its inputs (the prebuilt bitmap by content), so a repeat
+    // call skips building and analyzing the whole gate plan.
+    FrameCache.persist("Dedup.crossContainment", evalDocs, corpus)(
+        idCol, textCol, shingleN, threshold, bloomBits, bloomHashes,
+        prebuilt.map(scala.collection.immutable.ArraySeq.unsafeWrapArray(_))) {
+      val setsE = shingleSets(evalDocs, idCol, textCol, shingleN)
+      val setsC = shingleSets(corpus, idCol, textCol, shingleN)
+      val pref = setsE.withColumn("plen",
+        (col("sz") - ceil(col("sz") * lit(threshold)) + 1).cast("int"))
+        .select(col("id").as("id_eval"),
+          explode(slice(col("shs"), lit(1), col("plen"))).as("sh"))
+      val corpusAll = setsC.select(col("id").as("id_doc"),
+        explode(col("shs")).as("sh"))
+      val corpusEx =
+        if (bloomBits <= 0) corpusAll
+        else {
+          // memoized: q256/q260/q262/q264 gate against the SAME eval
+          // suite — one build per (key plan, geometry) per session. A
+          // prebuilt (artifact) bitmap is bit-identical to the built one
+          // by Models' content addressing, so both paths canonicalize to
+          // the same downstream plan and share one persisted frame.
+          val keys = pref.select(col("sh"))
+          val bitmap = prebuilt.getOrElse(
+            FrameCache.memo("bloomBitmap", keys)(bloomBits, bloomHashes)(
+              Bloom.bitmapFor(keys, "sh", bloomBits, bloomHashes)))
+          corpusAll.filter(Bloom.probe(col("sh"), bitmap, bloomBits, bloomHashes))
+        }
+      pref.join(corpusEx, Seq("sh"))
+        .select(col("id_eval"), col("id_doc")).distinct()
+        .join(setsE.select(col("id").as("id_eval"), col("shs").as("shs_e"),
+          col("sz").as("sz_e")), Seq("id_eval"))
+        .join(setsC.select(col("id").as("id_doc"), col("shs").as("shs_c")),
+          Seq("id_doc"))
+        .withColumn("co", size(array_intersect(col("shs_e"), col("shs_c"))))
+        .withColumn("__c", col("co").cast("double") / col("sz_e"))
+        .filter(col("__c") >= threshold)
+        .select(col("id_eval"), col("id_doc"),
+          round(col("__c"), 6).as("containment"))
+    }
 
   /** Persist a verified pair set as a BUCKETED sorted parquet table —
     * the real pipeline shape at 100 TB: dedup ONCE per (corpus, τ),

@@ -30,7 +30,8 @@ object Graph {
     * once each in BOTH outdeg and contributions (multigraph).
     *
     * Scale shape (the 100 TB contract): `edges` pre-joins its
-    * out-degree ONCE and registry-persists — partitioned by src from
+    * out-degree ONCE and registry-persists, found by (edges, src column,
+    * weight column) before its plan is built — partitioned by src from
     * that join's shuffle, it never moves again; each of the `iters`
     * rounds shuffles only the NODE-sized rank frame (to src for the
     * contribution join, to dst for the sum), so per-iteration network
@@ -67,7 +68,8 @@ object Graph {
     require(iters >= 1 && iters <= 50, s"iters out of range: $iters")
     require(damping > 0.0 && damping < 1.0, s"bad damping: $damping")
     val w = weightCol.map(col).getOrElse(lit(1L))
-    val withDeg = FrameCache.persist(
+    val withDeg = FrameCache.persist("Graph.pageRank.edges", edges)(
+        srcCol, weightCol)(
       edges.join(
         edges.groupBy(col(srcCol)).agg(sum(w).as("__od")),
         Seq(srcCol)))

@@ -165,20 +165,20 @@ class ClusterSpec extends SparkSpec {
     // the cache-hit assertion round-6's VERDICT asked for (item #7).
     val dir = "/root/testdata/sf0.001"
     SparkEntry.queries("q119_dup_clusters")(spark, dir).count()
-    val h0 = Dedup.registryHits
+    val h0 = FrameCache.stats.hits
     SparkEntry.queries("q122_dedup_keep")(spark, dir).count()
-    assert(Dedup.registryHits > h0,
+    assert(FrameCache.stats.hits > h0,
       s"expected a registry cache hit for q122's shared pair set (hits stayed at $h0)")
   }
 
   test("cacheStats reflects registry activity: misses then hits, " +
     "entries drop to zero on clear") {
-    Dedup.clearDedupCaches()
+    FrameCache.clear()
     val docs = Seq((1L, "alpha beta gamma delta"), (2L, "alpha beta gamma x"))
       .toDF("doc_id", "text")
     def stats() = {
-      val r = Dedup.cacheStats(spark).head()
-      (r.getLong(0), r.getLong(1), r.getLong(3)) // hits, misses, entries
+      val s = FrameCache.stats
+      (s.hits, s.misses, s.frames)
     }
     val (h0, m0, _) = stats()
     Dedup.jaccardPairs(docs, "doc_id", "text", shingleN = 2,
@@ -189,7 +189,7 @@ class ClusterSpec extends SparkSpec {
       threshold = 0.1).count()
     val (h2, _, _) = stats()
     assert(h2 > h1 || h2 > h0, "identical rebuild must hit the registry")
-    Dedup.clearDedupCaches()
+    FrameCache.clear()
     assert(stats()._3 === 0L, "clear must empty the registry")
   }
 }

@@ -104,16 +104,18 @@ class PipelineR10Spec extends SparkSpec {
 
   test("trained-weight memo: a second identical call skips the GD loop " +
     "and returns the identical frame") {
-    val before = Curate.classifierMemoHits
     def run() = Curate.trainTextClassifier(docs, "doc_id", "text",
         col("lang") === "en", buckets = 16, iters = 5, lrDen = 4L)
       .select(col("doc_id"), col("z_units"), col("pred"))
       .as[(Long, Long, Boolean)].collect().sortBy(_._1).toSeq
+    // the scoring and the weight-vector forms share one memo entry
+    def weights() = Curate.trainTextClassifierWeights(docs, "doc_id",
+      "text", col("lang") === "en", buckets = 16, iters = 5, lrDen = 4L)
     val a = run()
+    val w = weights()
     val b = run()
     assert(a === b)
-    assert(Curate.classifierMemoHits > before,
-      "second call must hit the weight memo")
+    assert(weights() eq w, "second call must hit the weight memo")
   }
 
   test("kmeansAssign equals a driver-side exact replay of integer-unit " +

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
 
 /** Round-14 pins (VERDICT r13 #2 — the q262 ≤ 2 s done-bar work):
   *  - the release-audit family (q256 → q262 → q264) shares ONE
@@ -20,17 +19,17 @@ class PipelineR14Spec extends SparkSpec {
 
   test("release-audit family shares the verified-containment and banded " +
     "signature frames through the registry (q256 warms q262 and q264)") {
-    Dedup.clearDedupCaches()
+    FrameCache.clear()
     SparkEntry.queries("q256_bloom_decontam")(spark, sf).collect()
-    val hitsAfterQ256 = Dedup.registryHits
-    val missesAfterQ256 = Dedup.registryMisses
+    val hitsAfterQ256 = FrameCache.stats.hits
+    val missesAfterQ256 = FrameCache.stats.misses
     val q262 = SparkEntry.queries("q262_contamination_report")(spark, sf)
     val rows = q262.collect()
     assert(rows.nonEmpty)
     // the ng branch must be served from the registry: hits grow, and
     // the shared frames cost no NEW misses beyond the semantic branch's
     // first-build (banded signature frames, two sides)
-    assert(Dedup.registryHits > hitsAfterQ256,
+    assert(FrameCache.stats.hits > hitsAfterQ256,
       "q262 re-built the verified-containment frame q256 just registered")
     val plan = q262.queryExecution.executedPlan.toString
     assert(plan.contains("InMemoryTableScan"),
@@ -38,10 +37,10 @@ class PipelineR14Spec extends SparkSpec {
     assert(!plan.contains("CartesianProduct"), plan)
     // q264's semantic branch keys the OPPOSITE side from q262 — the
     // canonical-name persistence must still share both banded frames
-    val missesBeforeQ264 = Dedup.registryMisses
+    val missesBeforeQ264 = FrameCache.stats.misses
     SparkEntry.queries("q264_release_gate")(spark, sf).collect()
-    assert(Dedup.registryMisses - missesBeforeQ264 <= 2,
-      s"q264 rebuilt shared frames: ${Dedup.registryMisses - missesBeforeQ264} " +
+    assert(FrameCache.stats.misses - missesBeforeQ264 <= 2,
+      s"q264 rebuilt shared frames: ${FrameCache.stats.misses - missesBeforeQ264} " +
         "new registry misses after q256+q262 warmed the family")
   }
 
@@ -61,24 +60,28 @@ class PipelineR14Spec extends SparkSpec {
 
   test("bloom bitmap memo: same key plan and geometry returns the " +
     "SAME built bitmap without a second build job") {
-    Dedup.clearDedupCaches()
+    FrameCache.clear()
     val spark2 = spark
     import spark2.implicits._
     val keys = (1L to 500L).toDF("sh")
-    val a = Dedup.memoizedBitmap(keys, "sh", 1 << 12, 5)
+    // the memo the bloom gates call (Dedup.crossContainmentImpl)
+    def memoizedBitmap(k: org.apache.spark.sql.DataFrame, bits: Int) =
+      FrameCache.memo("bloomBitmap", k)(bits, 5)(
+        graft.operators.Bloom.bitmapFor(k, "sh", bits, 5))
+    val a = memoizedBitmap(keys, 1 << 12)
     val jobsBefore = spark.sparkContext.statusTracker
       .getJobIdsForGroup(null).length
-    val b = Dedup.memoizedBitmap((1L to 500L).toDF("sh"), "sh", 1 << 12, 5)
+    val b = memoizedBitmap((1L to 500L).toDF("sh"), 1 << 12)
     val jobsAfter = spark.sparkContext.statusTracker
       .getJobIdsForGroup(null).length
     assert(b eq a, "memo missed: a fresh bitmap was built")
     assert(jobsAfter === jobsBefore, "memo hit must run zero jobs")
     // different geometry = different filter
-    val c = Dedup.memoizedBitmap(keys, "sh", 1 << 13, 5)
+    val c = memoizedBitmap(keys, 1 << 13)
     assert(!(c eq a))
     // cold reset drops the memo (bench cold-lane honesty)
-    Dedup.clearDedupCaches()
-    val d = Dedup.memoizedBitmap(keys, "sh", 1 << 12, 5)
+    FrameCache.clear()
+    val d = memoizedBitmap(keys, 1 << 12)
     assert(!(d eq a) && d.toSeq === a.toSeq)
   }
 }

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.FileSourceScanExec
-import graft.operators.Dedup
 
 /** Round-15 pins (VERDICT r14 #2/#3/#4):
   *  - q265 crawl-over-crawl reads `documents` ONLY through its two
@@ -40,7 +39,7 @@ class PipelineR15Spec extends SparkSpec {
   test("q265 crawl-ops: `documents` enters ONLY via the two persisted " +
     "snapshot frames — zero direct file scans in the executed plan, " +
     "and a second crawl run rebuilds nothing") {
-    Dedup.clearDedupCaches()
+    FrameCache.clear()
     val df = SparkEntry.queries("q265_crawl_ops")(spark, sf)
     assert(df.collect().nonEmpty)
     val ep = df.queryExecution.executedPlan
@@ -49,34 +48,34 @@ class PipelineR15Spec extends SparkSpec {
     assert(ep.toString.contains("InMemoryTableScan"),
       "q265 executed plan reads no registry frame at all")
     // crawl N+2 contract: the same snapshots re-serve from the registry
-    val missesAfter = Dedup.registryMisses
+    val missesAfter = FrameCache.stats.misses
     assert(SparkEntry.queries("q265_crawl_ops")(spark, sf).collect().nonEmpty)
-    assert(Dedup.registryMisses === missesAfter,
-      s"second q265 run re-built ${Dedup.registryMisses - missesAfter} " +
+    assert(FrameCache.stats.misses === missesAfter,
+      s"second q265 run re-built ${FrameCache.stats.misses - missesAfter} " +
         "registry frame(s) — the canonical-plan keys drifted")
   }
 
   test("trimCachesTo keeps the K most-recently-used frames, counts " +
     "TRIMS (not evictions), and a kept frame still registry-hits") {
     import spark.implicits._
-    Dedup.clearDedupCaches()
+    FrameCache.clear()
     val frames = (1 to 5).map { i =>
-      Dedup.registryPersist(Seq((i.toLong, s"x$i")).toDF("id", "t"))
+      FrameCache.persist(Seq((i.toLong, s"x$i")).toDF("id", "t"))
     }
     frames.foreach(_.count())
     // re-touch frame 1: access-ordered map moves it to MRU
-    Dedup.registryPersist(Seq((1L, "x1")).toDF("id", "t"))
+    FrameCache.persist(Seq((1L, "x1")).toDF("id", "t"))
     val (ev0, tr0, h0) =
-      (Dedup.registryEvictions, Dedup.registryTrims, Dedup.registryHits)
-    Dedup.trimCachesTo(2)
-    assert(Dedup.cacheStats(spark).collect().head.getLong(3) === 2L)
-    assert(Dedup.registryTrims - tr0 === 3L, "3 LRU frames trimmed")
-    assert(Dedup.registryEvictions === ev0,
+      (FrameCache.stats.evictions, FrameCache.stats.trims, FrameCache.stats.hits)
+    FrameCache.trimTo(2)
+    assert(FrameCache.stats.frames === 2L)
+    assert(FrameCache.stats.trims - tr0 === 3L, "3 LRU frames trimmed")
+    assert(FrameCache.stats.evictions === ev0,
       "trim must not masquerade as LRU-cap thrash")
     // the re-touched frame survived as MRU: no rebuild on next use
-    Dedup.registryPersist(Seq((1L, "x1")).toDF("id", "t"))
-    assert(Dedup.registryHits > h0, "MRU frame was trimmed away")
-    Dedup.clearDedupCaches()
+    FrameCache.persist(Seq((1L, "x1")).toDF("id", "t"))
+    assert(FrameCache.stats.hits > h0, "MRU frame was trimmed away")
+    FrameCache.clear()
   }
 
   test("q270 chunked var/std: (key, chunk) window partitioning kept, " +

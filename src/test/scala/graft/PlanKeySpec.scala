@@ -56,13 +56,13 @@ class PlanKeySpec extends SparkSpec {
       evalD, corp, "doc_id", "text", shingleN = 3, threshold = 0.7,
       mBits = 1 << 12, kHashes = 3)
     build().count()
-    val hits0 = Dedup.registryHits
-    val miss0 = Dedup.registryMisses
+    val hits0 = FrameCache.stats.hits
+    val miss0 = FrameCache.stats.misses
     build().count()
-    assert(Dedup.registryHits > hits0,
+    assert(FrameCache.stats.hits > hits0,
       "second structurally identical bloom-gate build must hit the frame registry")
-    assert(Dedup.registryMisses == miss0,
-      s"second build must not MISS the registry (misses ${Dedup.registryMisses - miss0})")
+    assert(FrameCache.stats.misses == miss0,
+      s"second build must not MISS the registry (misses ${FrameCache.stats.misses - miss0})")
   }
 
   test("imageDHash: repeat call on an equivalent input returns the memoized frame") {
@@ -78,10 +78,10 @@ class PlanKeySpec extends SparkSpec {
     // and the downstream registry-persisted frame therefore hits
     def pairs() = Multimodal.imageNearDupPairs(imgs, "img_id", "payload", 3)
     pairs().count()
-    val hits0 = Dedup.registryHits
-    val miss0 = Dedup.registryMisses
+    val hits0 = FrameCache.stats.hits
+    val miss0 = FrameCache.stats.misses
     pairs().count()
-    assert(Dedup.registryHits > hits0 && Dedup.registryMisses == miss0,
+    assert(FrameCache.stats.hits > hits0 && FrameCache.stats.misses == miss0,
       "second imageNearDupPairs build must hit (not rebuild) the hashed frame")
   }
 
@@ -94,7 +94,7 @@ class PlanKeySpec extends SparkSpec {
     // column names.
     import spark.implicits._
     val base = Seq(1L, 2L, 2L, 3L).toDF("v")
-    def counts(out: String) = Dedup.registryPersist(
+    def counts(out: String) = FrameCache.persist(
       base.groupBy(col("v")).agg(count(lit(1)).as(out)))
     val t = counts("__t")
     val r = counts("__r")
@@ -106,10 +106,10 @@ class PlanKeySpec extends SparkSpec {
     assert(t.agg(sum(col("__t"))).collect().head.getLong(0) == 4L)
     assert(r.agg(sum(col("__r"))).collect().head.getLong(0) == 4L)
     // and a repeat of EACH alias still hits its own entry
-    val hits0 = Dedup.registryHits
+    val hits0 = FrameCache.stats.hits
     assert(counts("__t").columns.toSeq == Seq("v", "__t"))
     assert(counts("__r").columns.toSeq == Seq("v", "__r"))
-    assert(Dedup.registryHits >= hits0 + 2,
+    assert(FrameCache.stats.hits >= hits0 + 2,
       "repeat builds of each twin must hit their own registry entries")
   }
 

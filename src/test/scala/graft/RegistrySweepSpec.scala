@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions.col
-import graft.operators.Dedup
 
 /** Correctness-cadence pin (VERDICT r10 #8): every registered query
   * must return AT LEAST ONE ROW at the smallest shipped scale factor.
@@ -99,36 +98,36 @@ class RegistrySweepSpec extends SparkSpec {
   test("registry trim is MRU: retained set survives re-touching, " +
     "trimmed frames miss exactly once, trims never count as evictions") {
     import spark.implicits._
-    Dedup.clearDedupCaches()
+    FrameCache.clear()
     val frames = (0 until 12).map { i =>
-      Dedup.registryPersist(
+      FrameCache.persist(
         spark.range(100L + i).toDF("id").groupBy(col("id") % 7)
           .count().withColumnRenamed("(id % 7)", s"k$i"))
     }
     frames.foreach(_.count())
-    val (h0, m0, e0, t0) = (Dedup.registryHits, Dedup.registryMisses,
-      Dedup.registryEvictions, Dedup.registryTrims)
+    val (h0, m0, e0, t0) = (FrameCache.stats.hits, FrameCache.stats.misses,
+      FrameCache.stats.evictions, FrameCache.stats.trims)
     // re-touch the newest 4 in MRU order — all hits, no rebuild
-    frames.takeRight(4).foreach(f => Dedup.registryPersist(f).count())
-    assert(Dedup.registryHits - h0 === 4L)
-    assert(Dedup.registryMisses - m0 === 0L)
+    frames.takeRight(4).foreach(f => FrameCache.persist(f).count())
+    assert(FrameCache.stats.hits - h0 === 4L)
+    assert(FrameCache.stats.misses - m0 === 0L)
     // trim to 4: the 8 older frames leave as TRIMS, never as evictions
-    Dedup.trimCachesTo(4, blocking = true)
-    assert(Dedup.registryTrims - t0 === 8L)
-    assert(Dedup.registryEvictions - e0 === 0L)
+    FrameCache.trimTo(4, blocking = true)
+    assert(FrameCache.stats.trims - t0 === 8L)
+    assert(FrameCache.stats.evictions - e0 === 0L)
     // the MRU-4 survive (hits), a trimmed frame misses exactly once
-    val (h1, m1) = (Dedup.registryHits, Dedup.registryMisses)
-    frames.takeRight(4).foreach(f => Dedup.registryPersist(f).count())
-    assert(Dedup.registryHits - h1 === 4L,
+    val (h1, m1) = (FrameCache.stats.hits, FrameCache.stats.misses)
+    frames.takeRight(4).foreach(f => FrameCache.persist(f).count())
+    assert(FrameCache.stats.hits - h1 === 4L,
       "trim released a frame inside the MRU keep-set")
-    assert(Dedup.registryMisses - m1 === 0L)
-    Dedup.registryPersist(frames.head).count() // trimmed → one rebuild
-    assert(Dedup.registryMisses - m1 === 1L)
+    assert(FrameCache.stats.misses - m1 === 0L)
+    FrameCache.persist(frames.head).count() // trimmed → one rebuild
+    assert(FrameCache.stats.misses - m1 === 1L)
     // peak tracking: the high-water mark saw all 12 resident
-    assert(Dedup.registryPeakEntries >= 12L)
-    Dedup.resetRegistryPeak()
-    assert(Dedup.registryPeakEntries <= 5L) // current resident only
-    Dedup.clearDedupCaches()
+    assert(FrameCache.stats.peakFrames >= 12L)
+    FrameCache.resetPeak()
+    assert(FrameCache.stats.peakFrames <= 5L) // current resident only
+    FrameCache.clear()
   }
 
   test("committed bench_full.json carries a clean storage story: zero " +

@@ -8,8 +8,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.lit
 
 /** Table resolution (Tables header doc): a base table's schema is
-  * resolved once per session, keyed by path, length and mtime; every
-  * call still gets a fresh read. Each test works on its own temp copy
+  * resolved once per session from the file's footer, with no Spark job,
+  * keyed by path, length and mtime; every call still gets a fresh read. Each test works on its own temp copy
   * of the sf0.001 tables, so no other spec's memo entry is reused.
   */
 class TablesSpec extends SparkSpec {
@@ -55,17 +55,17 @@ class TablesSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
-  test("a repeat call runs no job; the first call after a clear runs one") {
+  test("no call runs a job: not the first, a repeat, or the first after a clear") {
     val dir = copyTables()
     Seq[(String, () => org.apache.spark.sql.DataFrame)](
       ("nation", () => Tables.table(spark, dir, "nation")),
       ("events", () => Tables.table(spark, dir, "events")),
       ("floored orders", () => Tables.floored(spark, dir, "orders", "o_orderkey"))
     ).foreach { case (what, call) =>
-      assert(jobsOf(call())._2 === 1, s"$what: first call")
+      assert(jobsOf(call())._2 === 0, s"$what: first call")
       assert(jobsOf(call())._2 === 0, s"$what: repeat call")
       FrameCache.clear()
-      assert(jobsOf(call())._2 === 1, s"$what: first call after a clear")
+      assert(jobsOf(call())._2 === 0, s"$what: first call after a clear")
       assert(jobsOf(call())._2 === 0, s"$what: repeat after the clear")
     }
   }
@@ -86,8 +86,9 @@ class TablesSpec extends SparkSpec {
       StandardCopyOption.REPLACE_EXISTING)
     org.apache.commons.io.FileUtils.deleteDirectory(staged.toFile)
     val (after, jobs) = jobsOf(Tables.table(spark, dir, "nation"))
-    assert(jobs === 1, "the rewritten file was served the old schema")
-    assert(after.columns.last === "n_extra")
+    assert(jobs === 0, "resolving the rewritten file ran a job")
+    assert(after.columns.last === "n_extra",
+      "the rewritten file was served the old schema")
     assert(after.select("n_extra").distinct().collect().map(_.getLong(0))
       .toSeq === Seq(7L))
     assert(after.count() === rows)
@@ -120,6 +121,13 @@ class TablesSpec extends SparkSpec {
       assert(miss.schema === hit.schema, name)
       assert(miss.queryExecution.analyzed.canonicalized ===
         hit.queryExecution.analyzed.canonicalized, name)
+      // the footer schema is the one inference finds: the file scan
+      // leaf equals an inferring read's, schema and canonical plan
+      val inferred = spark.read.parquet(s"$dir/$name.parquet")
+        .queryExecution.analyzed
+      val leaf = hit.queryExecution.analyzed.collectLeaves()
+      assert(leaf.map(_.schema) === Seq(inferred.schema), name)
+      assert(leaf.map(_.canonicalized) === Seq(inferred.canonicalized), name)
     }
   }
 
