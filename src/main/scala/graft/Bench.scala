@@ -2,31 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR and prints one JSON line (driver contract).
-  *
-  * Harness design mirrors the reference (1 warmup + timed iters,
-  * riptable/benchmarks/bench_merge.py:100-186): a full warmup pass runs
-  * every query once so the timed pass measures steady-state cost —
-  * whole-stage-codegen compilation, parquet footers, and the JIT are all
-  * one-time costs that would otherwise dominate sub-second queries. Base
-  * tables are cached up front (they fit by construction at bench scale;
-  * the reference's arrays are likewise RAM-resident when benched).
-  *
-  * Failures do NOT hide inside timings: a throwing query reports
-  * ok=false in the `failed` list and contributes its elapsed time, so a
-  * regression is visible in both places; an iso/cold-lane failure is
-  * recorded as verdict "error" / cold_failed instead of timing the
-  * exception path (ADVICE r11).
-  *
-  * Every query also reports executor-CPU seconds (SparkListener sum of
-  * taskMetrics.executorCpuTime): host contention inflates WALL while
-  * CPU stays flat, so the tripwire's confirmed/weather verdict compares
-  * the isolated re-run's wall/cpu ratio against the baseline's
-  * (VERDICT r11 #1 — the discriminator sustained box contention cannot
-  * fool). Driver-side planning time is deliberately outside cpu_sec;
-  * the ratio is only ever compared same-query, same-sf.
-  */
 /** The tripwire's confirmed/weather/error/state_loss decision (VERDICT
   * r11 #1 + r15 #1b), pure so BenchVerdictSpec can pin it: an `error`
   * re-run never launders into weather; a slip whose isolated wall/cpu
@@ -54,6 +29,18 @@ object BenchVerdict {
   }
 }
 
+/** Per-query sweep evidence accumulated across the 3 timed runs
+  * (VERDICT r13 #3 widened by r15 #1a): GC/spill/storage-demotion name
+  * a host-pressure mechanism; the registry hit/miss/evict and
+  * cached-block-loss deltas answer the question the r15 tripwire could
+  * not — "did the cached state survive into this measurement, or is
+  * this timing a rebuild?".
+  */
+final case class SweepEvidence(gcMs: Long, spillBytes: Long, memDrops: Long,
+                               regHits: Long, regMisses: Long,
+                               regEvictions: Long, blockLoss: Long,
+                               missByRun: Seq[Long])
+
 /** Distinguishes BlockManager-initiated loss of a cached RDD block
   * from deliberate unpersist teardown (VERDICT r15 #2): both arrive on
   * the listener bus as a `StorageLevel.NONE` block update, so a raw
@@ -68,26 +55,6 @@ object BenchVerdict {
   * Pure event-in/count-out so StressSpec can drive it with planted
   * BlockManager-shaped sequences.
   */
-/** Per-query sweep evidence accumulated across the 3 timed runs
-  * (VERDICT r13 #3 widened by r15 #1a): GC/spill/storage-demotion name
-  * a host-pressure mechanism; the registry hit/miss/evict and
-  * cached-block-loss deltas answer the question the r15 tripwire could
-  * not — "did the cached state survive into this measurement, or is
-  * this timing a rebuild?".
-  */
-final case class SweepEvidence(gcMs: Long, spillBytes: Long, memDrops: Long,
-                               regHits: Long, regMisses: Long,
-                               regEvictions: Long, blockLoss: Long,
-                               missByRun: Seq[Long]) {
-  // misses in runs 2-3 are structurally IMPOSSIBLE from between-query
-  // trimming (no trims, no cap evictions inside a query's 3 runs) —
-  // they mark a frame whose canonicalized-plan key is unstable across
-  // materializations (rebuilt EVERY run, cost consistently included in
-  // the timing); a run-1-only miss is the expected cold rebuild of a
-  // frame the between-query trim released (median-of-3 absorbs it)
-  def missesAfterRun1: Long = missByRun.drop(1).sum
-}
-
 final class BlockEvictionTracker {
   private val seenCached = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private val lostCount = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -115,6 +82,31 @@ final class BlockEvictionTracker {
   }
 }
 
+/** Benchmark main: runs every SparkEntry query against
+  * SPARK_GRAFT_SF_DIR and prints one JSON line (driver contract).
+  *
+  * Harness design mirrors the reference (1 warmup + timed iters,
+  * riptable/benchmarks/bench_merge.py:100-186): a full warmup pass runs
+  * every query once so the timed pass measures steady-state cost —
+  * whole-stage-codegen compilation, parquet footers, and the JIT are all
+  * one-time costs that would otherwise dominate sub-second queries. Base
+  * tables are cached up front (they fit by construction at bench scale;
+  * the reference's arrays are likewise RAM-resident when benched).
+  *
+  * Failures do NOT hide inside timings: a throwing query reports
+  * ok=false in the `failed` list and contributes its elapsed time, so a
+  * regression is visible in both places; an iso/cold-lane failure is
+  * recorded as verdict "error" / cold_failed instead of timing the
+  * exception path (ADVICE r11).
+  *
+  * Every query also reports executor-CPU seconds (SparkListener sum of
+  * taskMetrics.executorCpuTime): host contention inflates WALL while
+  * CPU stays flat, so the tripwire's confirmed/weather verdict compares
+  * the isolated re-run's wall/cpu ratio against the baseline's
+  * (VERDICT r11 #1 — the discriminator sustained box contention cannot
+  * fool). Driver-side planning time is deliberately outside cpu_sec;
+  * the ratio is only ever compared same-query, same-sf.
+  */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -190,8 +190,7 @@ object Drift {
       .headOption.map(_.getInt(0)).getOrElse(0)
     val base = df.filter(keyCol.isNotNull)
       .select(keyCol.as("__k"),
-        transform(vecCol,
-          x => floor(x.cast("double") * lit(1e6)).cast("long")).as("__u"))
+        Similarity.quantizeUnits(vecCol).as("__u"))
     if (d == 0)
       return base.filter(lit(false)).select(
         col("__k").as("key_a"), col("__k").as("key_b"),

@@ -42,14 +42,6 @@ object Multimodal {
         (pmod(xxhash64(bytes, i), lit(1000L)).cast("double") / 1000.0)))
   }
 
-  /** Frame-sample stub: pick `k` deterministic offsets into the payload
-    * (what a video frame sampler would do by timestamp).
-    */
-  def frameOffsets(media: Column, k: Int): Column = {
-    val n = media.getField("n_bytes")
-    transform(sequence(lit(0), lit(k - 1)), i => (i * greatest(n, lit(1)) / k).cast("long"))
-  }
-
   /** Attach media + stub features for a text-as-bytes corpus (the test
     * container has no real media; documents.text stands in as payload).
     */

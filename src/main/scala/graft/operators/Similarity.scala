@@ -8,16 +8,15 @@ import graft.FrameCache
 /** Approximate-nearest-neighbor search over an embedding column
   * (`Array[Float]`) — builder-brief extension.
   *
-  * Three paths:
-  *  - brute-force cosine top-k (the correctness baseline): broadcast the
-  *    (small) query set against the corpus — a map-side crossjoin, one
-  *    shuffle only for the per-query top-k reduction;
-  *  - LSH-bucketed (a 100 TB path): random-hyperplane signatures bucket
-  *    the corpus; queries probe only their bucket, so the scan is
-  *    1/2^bits of the corpus per query;
-  *  - IVF (the billion-vector layout): k-means-lite coarse quantizer,
-  *    inverted lists keyed by nearest centroid, probes touch ~nprobe/k
-  *    of the corpus.
+  * Every top-k index is candidates → score → rank (the split REPOSE
+  * and distributed top-k similarity joins use):
+  *  - CANDIDATES pair corpus rows with query rows (`query_id`): a
+  *    broadcast crossjoin (exact, SQ8, PQ), an equi-join on the LSH
+  *    bucket (single- or multi-probe), or on the probed centroid (IVF,
+  *    IVF-PQ and their trained twins);
+  *  - a SCORE column per pair: exact cosine ([[cosineTopK]]), PQ
+  *    asymmetric distance ([[adcScored]]), squared L2 or SQ8 cosine;
+  *  - one RANK tail, [[topKPerQuery]], the family's only window.
   *
   * All vector math is `zip_with` + `aggregate` expressions (SURVEY brief:
   * functions, not UDFs), computed in DOUBLE so results are reproducible
@@ -133,10 +132,16 @@ object Similarity {
   def covarianceMatrix(df: DataFrame, vecCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
+    val c = covCells(df, vecCol)
+    (for (i <- c.indices; j <- c.indices) yield (i, j, c(i)(j)))
+      .toDF("i", "j", "cov")
+  }
+
+  /** cov = E[xy] − E[x]E[y] from covMoments, d×d (empty for no rows). */
+  private def covCells(df: DataFrame, vecCol: String): Array[Array[Double]] = {
     val (d, prods, sums, n) = covMoments(df, vecCol)
-    val rows = for (i <- 0 until d; j <- 0 until d) yield
-      (i, j, prods(i * d + j) / n - (sums(i) / n) * (sums(j) / n))
-    rows.toDF("i", "j", "cov")
+    Array.tabulate(d, d)((i, j) =>
+      prods(i * d + j) / n - (sums(i) / n) * (sums(j) / n))
   }
 
   /** Dominant principal axis by power iteration ON THE DRIVER against
@@ -149,25 +154,31 @@ object Similarity {
     * No extra cluster passes: the data was already reduced to C.
     */
   def pc1(df: DataFrame, vecCol: String, iters: Int = 20): Seq[Double] = {
-    val (d, prods, sums, n) = covMoments(df, vecCol)
-    if (d == 0 || n == 0L) return Seq.empty
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val c = Array.tabulate(d, d)((i, j) =>
-      r6(prods(i * d + j) / n - (sums(i) / n) * (sums(j) / n)))
-    var w = Array.fill(d)(1.0 / math.sqrt(d.toDouble))
-    var t = 0
-    while (t < iters) {
-      val nw = Array.tabulate(d) { i =>
-        var s = 0.0; var j = 0
-        while (j < d) { s += c(i)(j) * w(j); j += 1 }
-        s
-      }
-      w = nw; t += 1
-    }
+    val c = roundedCov(df, vecCol)
+    if (c.isEmpty) return Seq.empty
+    val w = powerIterate(c, iters)
     val nrm = math.sqrt(w.map(x => x * x).sum)
-    w.map(_ / nrm).toSeq
+    w.map(_ / nrm).toSeq // a zero norm leaves NaNs (pcK keeps zeros)
   }
+
+  private def roundedCov(df: DataFrame, vecCol: String): Array[Array[Double]] =
+    covCells(df, vecCol).map(_.map(r6))
+
+  private def r6(x: Double): Double =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** c·w, each row summed in ascending index order. */
+  private def matVec(c: Array[Array[Double]], w: Array[Double]): Array[Double] =
+    c.map { row =>
+      var s = 0.0; var j = 0
+      while (j < row.length) { s += row(j) * w(j); j += 1 }
+      s
+    }
+
+  /** `iters` steps of w ← c·w from the uniform unit vector. */
+  private def powerIterate(c: Array[Array[Double]], iters: Int): Array[Double] =
+    (1 to iters).foldLeft(Array.fill(c.length)(1.0 / math.sqrt(c.length.toDouble)))(
+      (w, _) => matVec(c, w))
 
   /** Projection of every vector onto the dominant principal axis —
     * pc1's weight vector broadcasts back as a literal array; the
@@ -199,25 +210,13 @@ object Similarity {
   def pcK(df: DataFrame, vecCol: String, k: Int,
           iters: Int = 20): Seq[Seq[Double]] = {
     require(k >= 1, "need k >= 1")
-    val (d, prods, sums, n) = covMoments(df, vecCol)
-    if (d == 0 || n == 0L) return Seq.empty
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    var c = Array.tabulate(d, d)((i, j) =>
-      r6(prods(i * d + j) / n - (sums(i) / n) * (sums(j) / n)))
-    def matVec(w: Array[Double]): Array[Double] =
-      Array.tabulate(d) { i =>
-        var s = 0.0; var j = 0
-        while (j < d) { s += c(i)(j) * w(j); j += 1 }
-        s
-      }
+    var c = roundedCov(df, vecCol)
+    val d = c.length
     (0 until math.min(k, d)).map { _ =>
-      var w = Array.fill(d)(1.0 / math.sqrt(d.toDouble))
-      var t = 0
-      while (t < iters) { w = matVec(w); t += 1 }
+      var w = powerIterate(c, iters)
       val nrm = math.sqrt(w.map(x => x * x).sum)
       if (nrm != 0.0) w = w.map(_ / nrm)
-      val cw = matVec(w)
+      val cw = matVec(c, w)
       var lam = 0.0
       var i = 0
       while (i < d) { lam += w(i) * cw(i); i += 1 }
@@ -242,6 +241,26 @@ object Similarity {
       }: _*)
   }
 
+  /** Rank each query's candidates by `order` (ties to the lower idCol),
+    * keep k, emit (query_id, rank, out*). Spark plans this shape as a
+    * per-partition WindowGroupLimit before the shuffle (ScaleSpec). */
+  private def topKPerQuery(scored: DataFrame, idCol: String, order: Column,
+                           k: Int)(out: Column*): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(order, col(idCol).asc)
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id") +: col("rank").cast("int").as("rank") +: out: _*)
+  }
+
+  /** Drop each query's own row, score cosine(vecCol, __qv) and keep the
+    * top k as (neighbor_id, cosine). */
+  private def cosineTopK(cands: DataFrame, idCol: String, vecCol: String,
+                         k: Int): DataFrame =
+    topKPerQuery(cands.filter(col(idCol) =!= col("query_id"))
+        .withColumn("cosine", cosine(col(vecCol), col("__qv"))),
+      idCol, col("cosine").desc, k)(
+      col(idCol).as("neighbor_id"), round(col("cosine"), 6).as("cosine"))
+
   /** Brute-force cosine top-k: for each query vector, the k nearest
     * corpus vectors. Queries are broadcast (BroadcastNestedLoopJoin —
     * the corpus never shuffles; only (nQueries × k)-sized results do).
@@ -249,16 +268,8 @@ object Similarity {
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                      vecCol: String, qIdCol: String, k: Int): DataFrame = {
     val q = queries.select(col(qIdCol).as("query_id"), col(vecCol).as("__qv"))
-    val scored = corpus.select(col(idCol), col(vecCol))
-      .crossJoin(broadcast(q))
-      .filter(col(idCol) =!= col("query_id"))
-      .withColumn("cosine", cosine(col(vecCol), col("__qv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col(idCol).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col(idCol).as("neighbor_id"), round(col("cosine"), 6).as("cosine"))
+    cosineTopK(corpus.select(col(idCol), col(vecCol)).crossJoin(broadcast(q)),
+      idCol, vecCol, k)
   }
 
   /** Exact L2 top-k — the ground truth under the SAME metric the PQ/IVF
@@ -277,12 +288,8 @@ object Similarity {
       .crossJoin(broadcast(q))
       .filter(col(idCol) =!= col("query_id"))
       .withColumn("__d", l2sq(col("__v"), col("__qv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("__d").asc, col(idCol).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col(idCol).as("neighbor_id"), round(col("__d"), 6).as("dist"))
+    topKPerQuery(scored, idCol, col("__d").asc, k)(
+      col(idCol).as("neighbor_id"), round(col("__d"), 6).as("dist"))
   }
 
   /** Hard-negative mining for contrastive training: for each query, the
@@ -301,13 +308,9 @@ object Similarity {
       .crossJoin(broadcast(q))
       .filter(col(labelCol) =!= col("__ql"))
       .withColumn("cosine", cosine(col(vecCol), col("__qv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col(idCol).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col(idCol).as("negative_id"), col(labelCol).as("negative_label"),
-        round(col("cosine"), 6).as("cosine"))
+    topKPerQuery(scored, idCol, col("cosine").desc, k)(
+      col(idCol).as("negative_id"), col(labelCol).as("negative_label"),
+      round(col("cosine"), 6).as("cosine"))
   }
 
   /** Scalar-quantized (SQ8) cosine top-k — the memory-bound scale path
@@ -360,13 +363,9 @@ object Similarity {
     val scored = rc.crossJoin(broadcast(rq))
       .filter(col(idCol) =!= col("query_id"))
       .withColumn("approx_cosine", cosine(col("__rv"), col("__qrv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx_cosine").desc, col(idCol).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col(idCol).as("neighbor_id"),
-        round(col("approx_cosine"), 6).as("approx_cosine"))
+    topKPerQuery(scored, idCol, col("approx_cosine").desc, k)(
+      col(idCol).as("neighbor_id"),
+      round(col("approx_cosine"), 6).as("approx_cosine"))
   }
 
   /** Two-stage retrieval: SQ8 coarse shortlist → EXACT re-rank — the
@@ -396,12 +395,8 @@ object Similarity {
       .join(broadcast(approx), Seq("neighbor_id"))
       .join(broadcast(exactQ), Seq("query_id"))
       .withColumn("cosine", cosine(col("__cv"), col("__qv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col("neighbor_id"), round(col("cosine"), 6).as("cosine"))
+    topKPerQuery(scored, "neighbor_id", col("cosine").desc, k)(
+      col("neighbor_id"), round(col("cosine"), 6).as("cosine"))
   }
 
   /** Random-hyperplane LSH signature: `bits` sign bits; plane p's
@@ -550,8 +545,12 @@ object Similarity {
   private def unitsOf(df: DataFrame, idCol: String,
                       vecCol: String): DataFrame =
     FrameCache.persist(df.select(col(idCol).as("__id"),
-      transform(col(vecCol),
-        x => floor(x.cast("double") * lit(1e6)).cast("long")).as("__u")))
+      quantizeUnits(col(vecCol)).as("__u")))
+
+  /** ⌊x·1e6⌋ per element as longs: the integer units of the exact
+    * k-means, trained-IVF routing and streaming drift monitor. */
+  private[graft] def quantizeUnits(vec: Column): Column =
+    transform(vec, x => floor(x.cast("double") * lit(1e6)).cast("long"))
 
   /** Train (or memo-hit) the integer-unit Lloyd centroids. A
     * NON-MEMOIZABLE input (nondeterministic plan — rand()/sample/uuid
@@ -625,17 +624,34 @@ object Similarity {
     */
   private def assignExprs(df: DataFrame, u: Column,
                           cent: Array[Array[Long]]): DataFrame = {
-    val un2 = dot(u, u)
-    val dists: Column = array(cent.indices.map { c =>
-      val cn2 = cent(c).map(v => v.toDouble * v).sum // exact: ints < 2^53
-      un2 - lit(2.0) * dot(u, typedlit(cent(c).toSeq)) + lit(cn2)
-    }: _*)
+    val dists: Column = array(unitDists(u, cent): _*)
     df.withColumn("__dm", array_min(dists))
       .withColumn("__cid",
         (array_position(dists, col("__dm")) - 1).cast("int"))
       .withColumn("__d2", col("__dm").cast("long"))
       .drop("__dm")
   }
+
+  /** d²(u, c) = |u|² − 2·u·c + |c|² to each centroid, in cid order —
+    * integer-valued doubles, exact as [[assignExprs]] explains. */
+  private def unitDists(u: Column, cent: Array[Array[Long]]): Seq[Column] = {
+    val un2 = dot(u, u)
+    cent.toSeq.map { c =>
+      val cn2 = c.map(v => v.toDouble * v).sum // exact: ints < 2^53
+      un2 - lit(2.0) * dot(u, typedlit(c.toSeq)) + lit(cn2)
+    }
+  }
+
+  /** Trained-IVF probe routing by the exact long d² to the quantized
+    * query; `qv` rides along as __qv for scoring. */
+  private def unitProbes(queries: DataFrame, qIdCol: String, vecCol: String,
+                         qv: Column, cent: Array[Array[Long]],
+                         nprobe: Int): DataFrame =
+    probeBest(queries.select(col(qIdCol).as("query_id"), qv.as("__qv"),
+        quantizeUnits(col(vecCol)).as("__qu")),
+      array(unitDists(col("__qu"), cent).zipWithIndex.map { case (d2, c) =>
+        struct(d2.cast("long").as("d2"), lit(c).as("cid"))
+      }: _*), math.min(nprobe, cent.length))
 
   /** Assign rows (batch OR stream) to FIXED centroids from
     * [[kmeansCentroids]]: the same quantize + exact argmin as training
@@ -646,9 +662,7 @@ object Similarity {
   def kmeansAssignWith(df: DataFrame, idCol: String, vecCol: String,
                        centroids: Array[Array[Long]]): DataFrame = {
     require(centroids.nonEmpty, "empty centroid model")
-    val u = transform(col(vecCol),
-      x => floor(x.cast("double") * lit(1e6)).cast("long"))
-    assignExprs(df, u, centroids)
+    assignExprs(df, quantizeUnits(col(vecCol)), centroids)
       .withColumnRenamed("__d2", "dist2_units")
       .withColumnRenamed("__cid", "cid")
   }
@@ -676,32 +690,10 @@ object Similarity {
     val lists = kmeansAssignWith(corpus.select(col(idCol), col(vecCol)),
       idCol, vecCol, centroids)
       .select(col(idCol), col(vecCol), col("cid"))
-    // probe ranking: exact long d² of the quantized query to every
-    // centroid (assignExprs' integer-exact identity), sorted (d2, cid)
-    // in-row, nprobe best exploded — queries carry their raw vector
-    // through for the verify-stage cosine
-    val qu = transform(col(vecCol),
-      x => floor(x.cast("double") * lit(1e6)).cast("long"))
-    val qn2 = dot(col("__qu"), col("__qu"))
-    val probed = queries
-      .select(col(qIdCol).as("query_id"), col(vecCol).as("__qv"), qu.as("__qu"))
-      .withColumn("__scored", sort_array(array(centroids.indices.map { c =>
-        val cn2 = centroids(c).map(v => v.toDouble * v).sum // exact: ints < 2^53
-        val d2 = qn2 - lit(2.0) * dot(col("__qu"), typedlit(centroids(c).toSeq)) + lit(cn2)
-        struct(d2.cast("long").as("d2"), lit(c).as("cid"))
-      }: _*)))
-      .select(col("query_id"), col("__qv"),
-        explode(slice(transform(col("__scored"), s => s.getField("cid")),
-          1, math.min(nprobe, centroids.length))).as("cid"))
-    val scored = lists.join(probed, Seq("cid"))
-      .filter(col(idCol) =!= col("query_id"))
-      .withColumn("cosine", cosine(col(vecCol), col("__qv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col(idCol).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col(idCol).as("neighbor_id"), round(col("cosine"), 6).as("cosine"))
+    // queries carry their raw vector through for the exact cosine
+    val probed = unitProbes(queries, qIdCol, vecCol, col(vecCol), centroids,
+      nprobe)
+    cosineTopK(lists.join(probed, Seq("cid")), idCol, vecCol, k)
   }
 
   /** Per-query probe routing shared by ivfTopK and ivfPqTopK: rank the
@@ -710,15 +702,18 @@ object Similarity {
                              qVec: Column,
                              centroids: Seq[(Int, Seq[Double])],
                              nprobe: Int): DataFrame =
-    queries
-      .select(col(qIdCol).as("query_id"), qVec.as("__qv"))
-      .withColumn("__scored", sort_array(transform(
-        centroidArray(centroids), c =>
-          struct((-(dot(col("__qv"), cVec(c)) / cNorm(c))).as("negsim"),
-            cCid(c).as("cid")))))
+    probeBest(queries.select(col(qIdCol).as("query_id"), qVec.as("__qv")),
+      transform(centroidArray(centroids), c =>
+        struct((-(dot(col("__qv"), cVec(c)) / cNorm(c))).as("negsim"),
+          cCid(c).as("cid"))), nprobe)
+
+  /** Sort each query's (score, cid) structs in-row, ties to the lowest
+    * cid, and explode the n best as (query_id, __qv, cid) probe rows. */
+  private def probeBest(q: DataFrame, scores: Column, n: Int): DataFrame =
+    q.withColumn("__scored", sort_array(scores))
       .select(col("query_id"), col("__qv"),
         explode(slice(transform(col("__scored"), s => s.getField("cid")),
-          1, nprobe)).as("cid"))
+          1, n)).as("cid"))
 
   /** ZERO-SHUFFLE centroid assignment: argmax via `array_max` over
     * (sim, -cid) structs — highest sim, ties to the lowest cid — all
@@ -760,16 +755,7 @@ object Similarity {
     val lists = assignToCentroids(
       corpus.select(col(idCol), col(vecCol)), vecCol, centroids)
     val probes = probeCentroids(queries, qIdCol, col(vecCol), centroids, nprobe)
-
-    val scored = lists.join(probes, Seq("cid"))
-      .filter(col(idCol) =!= col("query_id"))
-      .withColumn("cosine", cosine(col(vecCol), col("__qv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col(idCol).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col(idCol).as("neighbor_id"), round(col("cosine"), 6).as("cosine"))
+    cosineTopK(lists.join(probes, Seq("cid")), idCol, vecCol, k)
   }
 
   /** Embedding-cosine near-duplicate PAIRS (dedup use case, distinct
@@ -932,11 +918,16 @@ object Similarity {
   }
 
   /** LSH-bucketed ANN: probe only the query's bucket. Recall is traded
-    * for a 1/2^bits scan reduction; multi-probe = union over neighboring
-    * buckets (not needed at test scale). Because the signature is
-    * engine-independent (see lshSignature), the whole output — bucket
-    * routing included — is oracle-checkable.
+    * for a 1/2^bits scan reduction; [[lshTopKMultiProbe]] adds the
+    * neighboring buckets. Because the signature is engine-independent
+    * (see lshSignature), the whole output — bucket routing included —
+    * is oracle-checkable.
     */
+  def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
+              vecCol: String, qIdCol: String, k: Int, bits: Int = 8): DataFrame =
+    lshSearch(corpus, queries, idCol, vecCol, qIdCol, k, bits)(
+      _.withColumnRenamed("__qb", "__bucket"))
+
   /** Multi-probe LSH ANN: probe the query's bucket AND every bucket at
     * Hamming distance 1 from it (bits+1 probes) — the standard recall
     * lever when a near neighbor lands just across one hyperplane. The
@@ -949,22 +940,22 @@ object Similarity {
   def lshTopKMultiProbe(corpus: DataFrame, queries: DataFrame, idCol: String,
                         vecCol: String, qIdCol: String, k: Int,
                         bits: Int = 8): DataFrame = {
+    val masks = array((lit(0L) +: (0 until bits).map(i => lit(1L << i))): _*)
+    lshSearch(corpus, queries, idCol, vecCol, qIdCol, k, bits)(
+      _.withColumn("__bucket",
+        explode(transform(masks, m => col("__qb").bitwiseXOR(m)))))
+  }
+
+  /** Both LSH searches: `probes` turns the query side's signature __qb
+    * into __bucket probe rows, joined to the corpus's own bucket. */
+  private def lshSearch(corpus: DataFrame, queries: DataFrame, idCol: String,
+                        vecCol: String, qIdCol: String, k: Int, bits: Int)(
+                        probes: DataFrame => DataFrame): DataFrame = {
     val c = corpus.select(col(idCol), col(vecCol),
       lshSignature(col(vecCol), bits).as("__bucket"))
-    val masks = array((lit(0L) +: (0 until bits).map(i => lit(1L << i))): _*)
-    val q = queries.select(col(qIdCol).as("query_id"), col(vecCol).as("__qv"),
-        lshSignature(col(vecCol), bits).as("__qb"))
-      .withColumn("__bucket",
-        explode(transform(masks, m => col("__qb").bitwiseXOR(m))))
-    val scored = c.join(broadcast(q), Seq("__bucket"))
-      .filter(col(idCol) =!= col("query_id"))
-      .withColumn("cosine", cosine(col(vecCol), col("__qv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col(idCol).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col(idCol).as("neighbor_id"), round(col("cosine"), 6).as("cosine"))
+    val q = probes(queries.select(col(qIdCol).as("query_id"),
+      col(vecCol).as("__qv"), lshSignature(col(vecCol), bits).as("__qb")))
+    cosineTopK(c.join(broadcast(q), Seq("__bucket")), idCol, vecCol, k)
   }
 
   /** Squared L2 distance of two double-array columns, accumulated
@@ -976,31 +967,6 @@ object Similarity {
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
       lit(0d), (acc, v) => acc + v)
 
-  /** Product-quantization ANN (Jégou et al. 2011, "Product Quantization
-    * for Nearest Neighbor Search"): split each vector into `m`
-    * subspaces, quantize every subvector to one of `ksub` codewords,
-    * and answer queries with the asymmetric distance — the sum over
-    * subspaces of the exact distance from the query's subvector to the
-    * corpus row's CODEWORD. The corpus collapses from m·subdim floats
-    * to m byte-sized codes (64× compression at the default geometry),
-    * which is what makes billion-vector search RAM-resident.
-    *
-    * Codebooks are a deterministic hash-sample of the corpus itself
-    * (the `ksub` rows with the smallest portable md5 hash of their id,
-    * codeword index = hash rank) rather than a k-means fit: the sample
-    * IS the k-means init, every engine can replay it exactly (the
-    * DuckDB oracle rebuilds codebooks, codes, and distances
-    * bit-for-bit), and refining it with Lloyd iterations would only
-    * perturb constants the test cannot pin. Encoding is a per-row
-    * argmin over the broadcast codebook literal — ZERO shuffle, one
-    * corpus scan, exactly like `assignToCentroids`.
-    *
-    * Scale shape: encode = map-only scan (m·ksub·subdim flops/row);
-    * the query side ships as a broadcast literal-sized frame; the only
-    * shuffle is the per-query top-k reduction over n_queries·k rows.
-    * At cluster scale the codes frame is what you PERSIST (bytes, not
-    * floats); ADC against it never touches raw vectors again.
-    */
   /** Deterministic PQ codebook sample: the ksub lowest-portable-hash
     * corpus rows, hash rank = codeword index (see pqTopK scaladoc for
     * why a hash sample, not k-means). */
@@ -1058,6 +1024,20 @@ object Similarity {
           .getField("_2"), s)))
   }
 
+  /** Drop each query's own row and score the ADC distance __d of its
+    * __qv to the row's __codes. A query of the wrong dim scores null;
+    * those rows go, or the ascending rank would promote them. */
+  private def adcScored(cands: DataFrame, idCol: String, cbLit: Column,
+                        m: Int): DataFrame =
+    cands.filter(col(idCol) =!= col("query_id"))
+      .withColumn("__d", pqAdcDist(col("__qv"), col("__codes"), cbLit, m))
+      .filter(col("__d").isNotNull)
+
+  /** The ADC top-k tail: nearest first, (neighbor_id, approx_dist). */
+  private def adcTopK(scored: DataFrame, idCol: String, k: Int): DataFrame =
+    topKPerQuery(scored, idCol, col("__d").asc, k)(
+      col(idCol).as("neighbor_id"), round(col("__d"), 6).as("approx_dist"))
+
   private def pqEmptyResult(corpus: DataFrame, queries: DataFrame,
                             idCol: String, qIdCol: String): DataFrame =
     corpus.select(col(idCol)).limit(0)
@@ -1065,44 +1045,64 @@ object Similarity {
       .select(col("query_id"), lit(0).as("rank"),
         col(idCol).as("neighbor_id"), lit(0d).as("approx_dist"))
 
+  /** Product-quantization ANN (Jégou et al. 2011, "Product Quantization
+    * for Nearest Neighbor Search"): split each vector into `m`
+    * subspaces, quantize every subvector to one of `ksub` codewords,
+    * and answer queries with the asymmetric distance — the sum over
+    * subspaces of the exact distance from the query's subvector to the
+    * corpus row's CODEWORD. The corpus collapses from m·subdim floats
+    * to m byte-sized codes (64× compression at the default geometry),
+    * which is what makes billion-vector search RAM-resident.
+    *
+    * Codebooks are a deterministic hash-sample of the corpus itself
+    * (the `ksub` rows with the smallest portable md5 hash of their id,
+    * codeword index = hash rank) rather than a k-means fit: the sample
+    * IS the k-means init, every engine can replay it exactly (the
+    * DuckDB oracle rebuilds codebooks, codes, and distances
+    * bit-for-bit), and refining it with Lloyd iterations would only
+    * perturb constants the test cannot pin. Encoding is a per-row
+    * argmin over the broadcast codebook literal — ZERO shuffle, one
+    * corpus scan, exactly like `assignToCentroids`.
+    *
+    * Scale shape: encode = map-only scan (m·ksub·subdim flops/row);
+    * the query side ships as a broadcast literal-sized frame; the only
+    * shuffle is the per-query top-k reduction over n_queries·k rows.
+    * At cluster scale the codes frame is what you PERSIST (bytes, not
+    * floats); ADC against it never touches raw vectors again.
+    */
   def pqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
              vecCol: String, qIdCol: String, k: Int,
-             m: Int = 4, ksub: Int = 16): DataFrame = {
-    val cb = pqCodebook(corpus, idCol, vecCol, ksub)
-    pqSearchWith(corpus, queries, idCol, vecCol, qIdCol, k, m, cb)
-  }
+             m: Int = 4, ksub: Int = 16): DataFrame =
+    pqSearchWith(corpus, queries, idCol, vecCol, qIdCol, k, m,
+      pqCodebook(corpus, idCol, vecCol, ksub))
 
   /** Encode + ADC + per-query top-k under a GIVEN codebook — the
-    * search stage shared by [[pqTopK]] (hash-sampled codebook) and
-    * [[pqTrainedTopK]] (per-subspace Lloyd codebook).
+    * search stage of [[pqTopK]], [[pqTrainedTopK]] and [[ivfPqTopK]],
+    * whose `coarse` (centroids, nprobe; trained only for a non-empty
+    * codebook) routes each query to its probed lists.
     */
   private def pqSearchWith(corpus: DataFrame, queries: DataFrame,
                            idCol: String, vecCol: String, qIdCol: String,
-                           k: Int, m: Int,
-                           cb: Seq[(Int, Seq[Double])]): DataFrame = {
+                           k: Int, m: Int, cb: Seq[(Int, Seq[Double])],
+                           coarse: => Option[(Seq[(Int, Seq[Double])], Int)] =
+                             None): DataFrame = {
     val vecD = col(vecCol).cast("array<double>")
     if (cb.isEmpty) // empty corpus: the correctly-typed empty result
       return pqEmptyResult(corpus, queries, idCol, qIdCol)
     val dim = cb.head._2.length
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val cbLit = typedlit(cb) // array<struct<_1: int, _2: array<double>>>
-    val codes = corpus.select(col(idCol),
-      pqCodesCol(vecD, cbLit, m).as("__codes"))
-    val q = queries.select(col(qIdCol).as("query_id"), vecD.as("__qv"))
-    val scored = codes.crossJoin(broadcast(q))
-      .filter(col(idCol) =!= col("query_id"))
-      .withColumn("__d",
-        pqAdcDist(col("__qv"), col("__codes"), cbLit, m))
-      // a query vector whose length mismatches the codebook dim yields
-      // null ADC distances (zip_with pads with nulls) — drop them, or
-      // the ascending rank would promote garbage rows into the top-k
-      .filter(col("__d").isNotNull)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("__d").asc, col(idCol).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col(idCol).as("neighbor_id"), round(col("__d"), 6).as("approx_dist"))
+    val codes = pqCodesCol(vecD, cbLit, m).as("__codes")
+    val cands = coarse match {
+      case None => corpus.select(col(idCol), codes).crossJoin(broadcast(
+        queries.select(col(qIdCol).as("query_id"), vecD.as("__qv"))))
+      case Some((centroids, nprobe)) => // ONE corpus scan: cid + PQ codes
+        assignToCentroids(corpus.select(col(idCol), col(vecCol)), vecCol,
+            centroids).select(col(idCol), col("cid"), codes)
+          .join(broadcast(probeCentroids(queries, qIdCol, vecD, centroids,
+            nprobe)), Seq("cid"))
+    }
+    adcTopK(adcScored(cands, idCol, cbLit, m), idCol, k)
   }
 
   /** TRAINED PQ codebook (the FAISS IndexPQ `train()` step, completing
@@ -1146,10 +1146,9 @@ object Similarity {
     */
   def pqTrainedTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                     vecCol: String, qIdCol: String, k: Int,
-                    m: Int = 4, ksub: Int = 16, iters: Int = 2): DataFrame = {
-    val cb = pqTrainedCodebook(corpus, idCol, vecCol, m, ksub, iters)
-    pqSearchWith(corpus, queries, idCol, vecCol, qIdCol, k, m, cb)
-  }
+                    m: Int = 4, ksub: Int = 16, iters: Int = 2): DataFrame =
+    pqSearchWith(corpus, queries, idCol, vecCol, qIdCol, k, m,
+      pqTrainedCodebook(corpus, idCol, vecCol, m, ksub, iters))
 
   /** FULLY-trained IVF-PQ (the complete FAISS IndexIVFPQ train/add/
     * search split): a TRAINED coarse quantizer ([[kmeansCentroids]],
@@ -1165,12 +1164,10 @@ object Similarity {
                        idCol: String, vecCol: String, qIdCol: String,
                        k: Int, coarseK: Int, nprobe: Int,
                        m: Int = 4, ksub: Int = 16,
-                       iters: Int = 2): DataFrame = {
-    val cent = kmeansCentroids(corpus, idCol, vecCol, coarseK, iters)
-    val cb = pqTrainedCodebook(corpus, idCol, vecCol, m, ksub, iters)
-    ivfPqSearchWith(corpus, queries, idCol, vecCol, qIdCol, k, cent, cb,
-      nprobe, m)
-  }
+                       iters: Int = 2): DataFrame =
+    ivfPqSearchWith(corpus, queries, idCol, vecCol, qIdCol, k,
+      kmeansCentroids(corpus, idCol, vecCol, coarseK, iters),
+      pqTrainedCodebook(corpus, idCol, vecCol, m, ksub, iters), nprobe, m)
 
   /** The SERVE half of [[ivfPqTrainedTopK]] under FIXED models — the
     * cross-session deployment path (Models.ensureCentroids /
@@ -1188,14 +1185,8 @@ object Similarity {
       return pqEmptyResult(corpus, queries, idCol, qIdCol)
     // add: ONE zero-shuffle corpus scan → (id, cid, m byte codes)
     val lists = pqIndexRowsWith(corpus, idCol, vecCol, cent, cb, m)
-    val scored = ivfPqCandidatesWith(lists, queries, idCol, vecCol,
-      qIdCol, cent, cb, nprobe, m)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("__d").asc, col(idCol).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col(idCol).as("neighbor_id"), round(col("__d"), 6).as("approx_dist"))
+    adcTopK(ivfPqCandidatesWith(lists, queries, idCol, vecCol, qIdCol, cent,
+      cb, nprobe, m), idCol, k)
   }
 
   /** The candidate stage shared by the batch serve ([[ivfPqSearchWith]])
@@ -1217,32 +1208,15 @@ object Similarity {
     require(cent.nonEmpty && cb.nonEmpty, "empty model")
     val dim = cb.head._2.length
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
-    val vecD = col(vecCol).cast("array<double>")
     val cbLit = typedlit(cb)
     val lists = index.withColumnRenamed("codes", "__codes")
     // probe routing: q242's exact integer-unit ranking, query raw
     // vector carried as DOUBLES for the ADC stage
-    val qu = transform(col(vecCol),
-      x => floor(x.cast("double") * lit(1e6)).cast("long"))
-    val qn2 = dot(col("__qu"), col("__qu"))
-    val probed = queries
-      .select(col(qIdCol).as("query_id"), vecD.as("__qv"), qu.as("__qu"))
-      .withColumn("__scored", sort_array(array(cent.indices.map { c =>
-        val cn2 = cent(c).map(v => v.toDouble * v).sum // exact: ints < 2^53
-        val d2 = qn2 - lit(2.0) * dot(col("__qu"), typedlit(cent(c).toSeq)) + lit(cn2)
-        struct(d2.cast("long").as("d2"), lit(c).as("cid"))
-      }: _*)))
-      .select(col("query_id"), col("__qv"),
-        explode(slice(transform(col("__scored"), s => s.getField("cid")),
-          1, math.min(nprobe, cent.length))).as("cid"))
-    // join order: STATIC index joined WITH the (possibly streaming)
-    // probe side — Spark requires the streaming side on the left only
-    // for stateful join types; static-stream inner equi-join is fine
-    // either way, and keeping `lists` first preserves the batch plan
-    probed.join(lists, Seq("cid"))
-      .filter(col(idCol) =!= col("query_id"))
-      .withColumn("__d", pqAdcDist(col("__qv"), col("__codes"), cbLit, m))
-      .filter(col("__d").isNotNull)
+    val probed = unitProbes(queries, qIdCol, vecCol,
+      col(vecCol).cast("array<double>"), cent, nprobe)
+    // the (possibly streaming) probe side joins the STATIC index: a
+    // static-stream inner equi-join is supported on either side
+    adcScored(probed.join(lists, Seq("cid")), idCol, cbLit, m)
       .select(col("query_id"), col(idCol), col("__d"))
   }
 
@@ -1285,52 +1259,8 @@ object Similarity {
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                 vecCol: String, qIdCol: String, k: Int,
                 nCentroids: Int = 8, nprobe: Int = 8, iters: Int = 0,
-                m: Int = 4, ksub: Int = 16): DataFrame = {
-    val vecD = col(vecCol).cast("array<double>")
-    val cb = pqCodebook(corpus, idCol, vecCol, ksub)
-    if (cb.isEmpty)
-      return pqEmptyResult(corpus, queries, idCol, qIdCol)
-    val dim = cb.head._2.length
-    require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
-    val cbLit = typedlit(cb)
-    val centroids =
-      seedAndRefineCentroids(corpus, idCol, vecCol, nCentroids, iters)
-
-    // ONE corpus scan builds the whole index: routing cid + PQ codes
-    val index = assignToCentroids(
-      corpus.select(col(idCol), col(vecCol)), vecCol, centroids)
-      .select(col(idCol), col("cid"),
-        pqCodesCol(vecD, cbLit, m).as("__codes"))
-
-    val probes = probeCentroids(queries, qIdCol, vecD, centroids, nprobe)
-
-    val scored = index.join(broadcast(probes), Seq("cid"))
-      .filter(col(idCol) =!= col("query_id"))
-      .withColumn("__d",
-        pqAdcDist(col("__qv"), col("__codes"), cbLit, m))
-      .filter(col("__d").isNotNull)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("__d").asc, col(idCol).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col(idCol).as("neighbor_id"), round(col("__d"), 6).as("approx_dist"))
-  }
-
-  def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-              vecCol: String, qIdCol: String, k: Int, bits: Int = 8): DataFrame = {
-    val c = corpus.select(col(idCol), col(vecCol),
-      lshSignature(col(vecCol), bits).as("__bucket"))
-    val q = queries.select(col(qIdCol).as("query_id"), col(vecCol).as("__qv"),
-      lshSignature(col(vecCol), bits).as("__bucket"))
-    val scored = c.join(broadcast(q), Seq("__bucket"))
-      .filter(col(idCol) =!= col("query_id"))
-      .withColumn("cosine", cosine(col(vecCol), col("__qv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col(idCol).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col(idCol).as("neighbor_id"), round(col("cosine"), 6).as("cosine"))
-  }
+                m: Int = 4, ksub: Int = 16): DataFrame =
+    pqSearchWith(corpus, queries, idCol, vecCol, qIdCol, k, m,
+      pqCodebook(corpus, idCol, vecCol, ksub), Some((seedAndRefineCentroids(
+        corpus, idCol, vecCol, nCentroids, iters), nprobe)))
 }

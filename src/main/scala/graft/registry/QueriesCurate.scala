@@ -15,28 +15,34 @@ import graft.syntax._
 private[graft] object QueriesCurate {
   import QueryShared._
 
+  /** The deterministic synthetic link graph q278–q280 rank, as
+    * (nodes (id), edges (src, dst)): doc_ids are contiguous 0..N−1, so
+    * modular edge synthesis is total and SQL-reproducible; nodes with
+    * doc_id % 4 == 0 are DANGLING, exercising the leak variant;
+    * parallel edges are kept (multigraph). Runs one `nodes.count()`.
+    */
+  private def crawlGraph(docs: DataFrame): (DataFrame, DataFrame) = {
+    val nodes = docs.select(col("doc_id").as("id"))
+    val nCnt = nodes.count()
+    val edges = docs
+      .select(col("doc_id").as("src"),
+        explode(array(lit(1L), lit(2L), lit(3L))).as("j"))
+      .filter(col("j") <= col("src") % 4)
+      .select(col("src"),
+        ((col("src") * (col("j") + 2) + lit(17L) * col("j")) % nCnt)
+          .as("dst"))
+      .filter(col("dst") =!= col("src"))
+    (nodes, edges)
+  }
+
   def m: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // link-graph PageRank quality weighting (r16 — the crawl-curation
-    // step between ingest and mixing): a deterministic synthetic link
-    // graph over the doc-id universe (doc_ids are contiguous 0..N−1,
-    // so modular edge synthesis is total and SQL-reproducible; nodes
-    // with doc_id % 4 == 0 are DANGLING, exercising the leak variant;
-    // parallel edges are kept — multigraph). 5 fixed iterations,
-    // d = 0.85; the oracle unrolls the identical recursion with one
-    // MATERIALIZED step per iteration.
+    // step between ingest and mixing) over the synthetic crawl graph.
+    // 5 fixed iterations, d = 0.85; the oracle unrolls the identical
+    // recursion with one MATERIALIZED step per iteration.
     "q278_pagerank" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val nodes = docs.select(col("doc_id").as("id"))
-      val nCnt = nodes.count()
-      val edges = docs
-        .select(col("doc_id").as("src"),
-          explode(array(lit(1L), lit(2L), lit(3L))).as("j"))
-        .filter(col("j") <= col("src") % 4)
-        .select(col("src"),
-          ((col("src") * (col("j") + 2) + lit(17L) * col("j")) % nCnt)
-            .as("dst"))
-        .filter(col("dst") =!= col("src"))
+      val (nodes, edges) = crawlGraph(t(s, dir, "documents"))
       Graph.pageRank(nodes, edges, iters = 5, damping = 0.85)
         .select(col("id").as("doc_id"), round(col("rank"), 9).as("rank"))
         .orderBy(col("doc_id"))
@@ -47,16 +53,7 @@ private[graft] object QueriesCurate {
     // as an upweighting signal
     "q279_source_authority" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val nodes = docs.select(col("doc_id").as("id"))
-      val nCnt = nodes.count()
-      val edges = docs
-        .select(col("doc_id").as("src"),
-          explode(array(lit(1L), lit(2L), lit(3L))).as("j"))
-        .filter(col("j") <= col("src") % 4)
-        .select(col("src"),
-          ((col("src") * (col("j") + 2) + lit(17L) * col("j")) % nCnt)
-            .as("dst"))
-        .filter(col("dst") =!= col("src"))
+      val (nodes, edges) = crawlGraph(docs)
       val ranks = Graph.pageRank(nodes, edges, iters = 5, damping = 0.85)
       docs.select(col("doc_id"), col("source"))
         .join(ranks.withColumnRenamed("id", "doc_id"), Seq("doc_id"))
@@ -74,16 +71,8 @@ private[graft] object QueriesCurate {
     // non-seed islands decay to 0 instead of the global floor.
     "q280_focused_pagerank" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val nodes = docs.select(col("doc_id").as("id"))
-      val nCnt = nodes.count()
-      val edges = docs
-        .select(col("doc_id").as("src"),
-          explode(array(lit(1L), lit(2L), lit(3L))).as("j"))
-        .filter(col("j") <= col("src") % 4)
-        .select(col("src"),
-          ((col("src") * (col("j") + 2) + lit(17L) * col("j")) % nCnt)
-            .as("dst"))
-        .filter(col("dst") =!= col("src"))
+      val (nodes, links) = crawlGraph(docs)
+      val edges = links
         .withColumn("w", lit(1L) + (col("src") + col("dst")) % 3)
       val seeds = docs.filter(col("source") === "src0")
         .select(col("doc_id").as("id"))

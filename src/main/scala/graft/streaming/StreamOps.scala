@@ -300,12 +300,6 @@ object StreamOps {
         by.map(col)) :+ col("reason") :+ col("n"): _*)
   }
 
-  /** File-source stream over a parquet directory (for tests: feed the
-    * batch fixtures through the streaming engine via availableNow).
-    */
-  def eventsStream(spark: SparkSession, dir: String, schemaFrom: DataFrame): DataFrame =
-    spark.readStream.schema(schemaFrom.schema).parquet(dir)
-
   case class TopEntry(value: Double, id: Long)
   case class TopState(entries: List[TopEntry], seen: Long)
   case class TopKOut(user_id: Long, event_id: Long, value: Double,
@@ -878,8 +872,7 @@ object StreamOps {
                               watermarkDelay: String): DataFrame = {
     require(reference.nonEmpty, "empty reference centroid")
     val d = reference.length
-    val u = transform(col(vecCol),
-      x => floor(x.cast("double") * lit(1e6)).cast("long"))
+    val u = graft.operators.Similarity.quantizeUnits(col(vecCol))
     val sums = (0 until d).map(i =>
       sum(element_at(col("__u"), i + 1)).as(s"__s$i"))
     val agg = events

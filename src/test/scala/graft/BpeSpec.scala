@@ -223,28 +223,14 @@ class BpeSpec extends SparkSpec {
     }.distinct
     val corpus = words ++ words
     val docs = corpus.grouped(50).map(_.mkString(" ")).toSeq.toDF("text")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
     // pre-warm the word frame OUTSIDE the counted window so the
     // registry-persist scan (shared with every other consumer) isn't
     // charged to the training loop
     Bpe.bpeSegmentCounts(docs, "text", Seq(("a", "b"))).count()
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val m = Bpe.bpeMergesBatched(docs, "text", rounds = 1000,
-        batchCap = 256, lookahead = 8192)
-        .collect()
-      // listener events are async — poll until the count is stable
-      var last = -1
-      while (jobs.get() != last) { last = jobs.get(); Thread.sleep(200) }
-      assert(m.length === 1000, s"learned ${m.length} merges")
-      assert(jobs.get() <= 20, s"took ${jobs.get()} Spark jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (m, jobs) = jobsOf(Bpe.bpeMergesBatched(docs, "text", rounds = 1000,
+      batchCap = 256, lookahead = 8192).collect())
+    assert(m.length === 1000, s"learned ${m.length} merges")
+    assert(jobs <= 20, s"took $jobs Spark jobs")
   }
 
   test("non-ASCII words are excluded from the training slice") {

@@ -14,12 +14,6 @@ import graft.operators.{Bloom, Cluster, Dedup, Multimodal}
   */
 class FrameCacheSpec extends SparkSpec {
 
-  // the newest job id: the status tracker keeps only the most recent
-  // jobs (spark.ui.retainedJobs), so a count of them can fall
-  private def jobs(): Int =
-    spark.sparkContext.statusTracker.getJobIdsForGroup(null)
-      .foldLeft(-1)(math.max)
-
   test("bloom bitmaps of one frame keyed on different columns are " +
     "built separately") {
     val s = spark
@@ -55,15 +49,14 @@ class FrameCacheSpec extends SparkSpec {
     import s.implicits._
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("x", "y")
     val (first, rounds) = Cluster.connectedComponentsWithRounds(pairs, "x", "y")
-    val j0 = jobs()
-    val (hit, _) = Cluster.connectedComponentsWithRounds(pairs, "x", "y")
-    assert(jobs() === j0, "a repeat call before the clear must hit")
+    val ((hit, _), hitJobs) =
+      jobsOf(Cluster.connectedComponentsWithRounds(pairs, "x", "y"))
+    assert(hitJobs === 0, "a repeat call before the clear must hit")
     assert(hit eq first)
     FrameCache.clear()
-    val j1 = jobs()
-    val (rebuilt, rounds2) =
-      Cluster.connectedComponentsWithRounds(pairs, "x", "y")
-    assert(jobs() > j1, "the clear left the clustering cached")
+    val ((rebuilt, rounds2), rebuildJobs) =
+      jobsOf(Cluster.connectedComponentsWithRounds(pairs, "x", "y"))
+    assert(rebuildJobs > 0, "the clear left the clustering cached")
     assert(!(rebuilt eq first) && rounds2 === rounds)
     assert(rebuilt.orderBy("id").as[(Long, Long)].collect().toSeq ===
       Seq((1L, 1L), (2L, 1L), (3L, 1L), (7L, 7L), (8L, 7L)))

@@ -39,17 +39,12 @@ class PipelineR13Spec extends SparkSpec {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val first = graft.functions.Bpe.bpeMerges(docs, "text", rounds = 6)
       .collect().toSeq
-    val sc = spark.sparkContext
-    val statusStore = spark.sparkContext.statusTracker
-    val before = statusStore.getJobIdsForGroup(null).length
-    val second = graft.functions.Bpe.bpeMerges(docs, "text", rounds = 6)
-      .collect().toSeq
-    val after = statusStore.getJobIdsForGroup(null).length
+    val (second, jobs) = jobsOf(graft.functions.Bpe.bpeMerges(docs, "text",
+      rounds = 6).collect().toSeq)
     assert(second === first, "memoized table must equal the trained one")
     // the replay costs at most the one parallelize-collect job — the
     // pair-table collect chain (>= 1 job per driver round) must not run
-    assert(after - before <= 1,
-      s"memo miss: ${after - before} jobs ran on the repeat call")
+    assert(jobs <= 1, s"memo miss: $jobs jobs ran on the repeat call")
   }
 
   test("containmentPairs: bloom prefilter is a result-set identity on " +

@@ -69,13 +69,9 @@ class PipelineR14Spec extends SparkSpec {
       FrameCache.memo("bloomBitmap", k)(bits, 5)(
         graft.operators.Bloom.bitmapFor(k, "sh", bits, 5))
     val a = memoizedBitmap(keys, 1 << 12)
-    val jobsBefore = spark.sparkContext.statusTracker
-      .getJobIdsForGroup(null).length
-    val b = memoizedBitmap((1L to 500L).toDF("sh"), 1 << 12)
-    val jobsAfter = spark.sparkContext.statusTracker
-      .getJobIdsForGroup(null).length
+    val (b, jobs) = jobsOf(memoizedBitmap((1L to 500L).toDF("sh"), 1 << 12))
     assert(b eq a, "memo missed: a fresh bitmap was built")
-    assert(jobsAfter === jobsBefore, "memo hit must run zero jobs")
+    assert(jobs === 0, "memo hit must run zero jobs")
     // different geometry = different filter
     val c = memoizedBitmap(keys, 1 << 13)
     assert(!(c eq a))

@@ -196,6 +196,59 @@ class ScaleSpec extends SparkSpec {
         s"neighbor $nb of query $q outside the probed lists")
     }
   }
+
+  test("every ANN entry point keeps its per-query limit: the executed " +
+    "plan has a WindowGroupLimit below the top-k window") {
+    // Spark's InferWindowGroupLimit turns row_number + rank <= k into a
+    // partial per-partition limit before the shuffle; a tail shape it
+    // no longer recognizes would ship every candidate to the window
+    val rng = new scala.util.Random(21)
+    val corpus = (0 until 120).map { i =>
+      (i.toLong, Seq.fill(8)(rng.nextFloat() * 2 - 1), i % 3)
+    }.toDF("vec_id", "embedding", "label")
+    val queries = corpus.filter($"vec_id" < 3)
+    val (id, v, k) = ("vec_id", "embedding", 3)
+    val cent = Similarity.kmeansCentroids(corpus, id, v, k = 4, iters = 1)
+    val cb = Similarity.pqTrainedCodebook(corpus, id, v, m = 4, ksub = 8,
+      iters = 1)
+    val entries: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "bruteForceTopK" -> (() =>
+        Similarity.bruteForceTopK(corpus, queries, id, v, id, k)),
+      "bruteForceTopKL2" -> (() =>
+        Similarity.bruteForceTopKL2(corpus, queries, id, v, id, k)),
+      "hardNegatives" -> (() =>
+        Similarity.hardNegatives(corpus, queries, id, v, "label", id, k)),
+      "sq8TopK" -> (() => Similarity.sq8TopK(corpus, queries, id, v, id, k)),
+      "sq8RerankTopK" -> (() =>
+        Similarity.sq8RerankTopK(corpus, queries, id, v, id, k, shortlist = 6)),
+      "ivfTrainedTopK" -> (() =>
+        Similarity.ivfTrainedTopK(corpus, queries, id, v, id, k, cent, 2)),
+      "ivfTopK" -> (() => Similarity.ivfTopK(corpus, queries, id, v, id, k,
+        nCentroids = 4, nprobe = 2, iters = 1)),
+      "lshTopK" -> (() =>
+        Similarity.lshTopK(corpus, queries, id, v, id, k, bits = 2)),
+      "lshTopKMultiProbe" -> (() =>
+        Similarity.lshTopKMultiProbe(corpus, queries, id, v, id, k, bits = 2)),
+      "pqTopK" -> (() =>
+        Similarity.pqTopK(corpus, queries, id, v, id, k, m = 4, ksub = 8)),
+      "pqTrainedTopK" -> (() => Similarity.pqTrainedTopK(corpus, queries,
+        id, v, id, k, m = 4, ksub = 8, iters = 1)),
+      "ivfPqTopK" -> (() => Similarity.ivfPqTopK(corpus, queries, id, v, id,
+        k, nCentroids = 4, nprobe = 2, m = 4, ksub = 8)),
+      "ivfPqTrainedTopK" -> (() => Similarity.ivfPqTrainedTopK(corpus,
+        queries, id, v, id, k, coarseK = 4, nprobe = 2, m = 4, ksub = 8,
+        iters = 1)),
+      "ivfPqSearchWith" -> (() => Similarity.ivfPqSearchWith(corpus, queries,
+        id, v, id, k, cent, cb, nprobe = 2, m = 4)))
+    assert(entries.map(_._1).distinct.size === 14)
+    entries.foreach { case (name, build) =>
+      val df = build()
+      assert(df.collect().nonEmpty, s"$name returned no rows")
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("WindowGroupLimit"),
+        s"$name plans its top-k without a WindowGroupLimit:\n$plan")
+    }
+  }
 }
 
 case class Ev(user: Long, v: Double)

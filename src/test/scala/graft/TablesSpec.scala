@@ -1,10 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.lit
 
 /** Table resolution (Tables header doc): a base table's schema is
@@ -25,34 +22,6 @@ class TablesSpec extends SparkSpec {
       f.toFile.deleteOnExit()
     }
     dir.toString
-  }
-
-  private val MarkerKey = "graft.tablesspec.marker"
-
-  /** `body`'s value and the Spark jobs it ran, counted by a listener. A
-    * marker job after `body` flushes the listener bus: events arrive in
-    * order, so once the marker's start is seen, every job `body` started
-    * has been counted.
-    */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger(0)
-    val marker = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty(MarkerKey) != null))
-          marker.countDown()
-        else { jobs.incrementAndGet(); () }
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.setLocalProperty(MarkerKey, "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty(MarkerKey, null)
-      assert(marker.await(60, TimeUnit.SECONDS), "marker job never seen")
-      (out, jobs.get())
-    } finally sc.removeSparkListener(listener)
   }
 
   test("no call runs a job: not the first, a repeat, or the first after a clear") {
