@@ -29,11 +29,16 @@ count for neither), and the verdict:
 
 Each run's result line is appended to `--out` (JSON lines) as it
 finishes; `--report-only` prints the table from that file without
-running anything.
+running anything. Each run's stderr is kept next to it as
+`<out>.<workload>.<seed>.<side>.stderr`, with a copy of the harness
+JVM's log (`.bench_build/perfbench/run/spark.log`) as
+`<out>.<workload>.<seed>.<side>.spark.log`; a run that fails prints the
+tail of both and stops.
 """
 import argparse
 import json
 import os
+import shutil
 import subprocess
 import sys
 
@@ -46,13 +51,33 @@ def parse_seeds(text):
     return seeds
 
 
-def run_once(checkout, workload, seed, seconds):
+def tail(path, n=40):
+    try:
+        with open(path, errors="replace") as fh:
+            return "".join(fh.readlines()[-n:])
+    except OSError as e:
+        return f"({e})\n"
+
+
+def run_once(checkout, workload, seed, seconds, evidence):
+    """One run's result line. Its stderr goes to `<evidence>.stderr` and
+    the harness JVM's log is copied to `<evidence>.spark.log`; a failed
+    run prints the tail of both before exiting."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
-    proc = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE,
-                          stderr=subprocess.DEVNULL, text=True)
+    err_path = evidence + ".stderr"
+    with open(err_path, "w") as err:
+        proc = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE,
+                              stderr=err, text=True)
+    log_path = evidence + ".spark.log"
+    spark_log = os.path.join(checkout, ".bench_build", "perfbench", "run",
+                             "spark.log")
+    if os.path.exists(spark_log):
+        shutil.copyfile(spark_log, log_path)
     lines = [ln for ln in proc.stdout.splitlines() if ln.strip()]
     if proc.returncode != 0 or not lines:
+        for path in (err_path, log_path):
+            print(f"---- tail of {path}\n{tail(path)}", file=sys.stderr)
         raise SystemExit(f"perfpairs: run failed in {checkout} "
                          f"(seed {seed}, exit {proc.returncode})")
     return json.loads(lines[-1])
@@ -134,8 +159,9 @@ def main():
         for i, seed in enumerate(parse_seeds(args.seeds)):
             order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
             for side in order:
+                evidence = f"{args.out}.{args.workload}.{seed}.{side}"
                 result = run_once(sides[side], args.workload, seed,
-                                  args.seconds)
+                                  args.seconds, evidence)
                 row = {"workload": args.workload, "seed": seed, "side": side,
                        "first": order[0], "result": result}
                 with open(args.out, "a") as fh:

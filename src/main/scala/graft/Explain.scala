@@ -7,7 +7,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 /** Plan-inspection tool: prints the formatted physical plan of selected
   * queries (or all with arg "all") so scan pushdown, broadcast choices,
   * and whole-stage-codegen spans can be audited per query.
-  * Usage: runMain graft.Explain <sfDir> [+metrics|+final|+rules]
+  * Usage: runMain graft.Explain <sfDir> [+metrics|+final|+rules|+canon]
   * [queryName ... | all]
   *
   * Also hosts [[Explain.opMetrics]] — the MathLedger/rt_timers analog
@@ -61,6 +61,21 @@ object Explain {
     import spark.implicits._
     rows.toDF("op_id", "operator", "rows", "time_ms", "bytes")
   }
+
+  /** `plan` with the names that depend on what the JVM built before
+    * rewritten to fixed ones: expression ids, `plan_id`s, `x_N`/`y_N`
+    * lambda variables, Scala lambda object names, object identity
+    * hashes (`[J@1b2c3d`, a UDAF's `WeightedMean@4e5f`) and temp-dir
+    * names. Two builds' dumps of the same plan then compare equal.
+    */
+  def canonicalText(plan: String): String = plan
+    .replaceAll("#\\d+", "#")
+    .replaceAll("plan_id=\\d+", "plan_id=")
+    .replaceAll("\\b([xy])_\\d+", "$1_")
+    .replaceAll("\\$\\$Lambda[^\\s,)\\]]*", "\\$\\$Lambda")
+    .replaceAll("(?<=[\\w$\\]])@[0-9a-f]+\\b", "@")
+    .replaceAll("/tmp/[^\\s,)\\]]*", "/tmp/")
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val names = if (args.length > 1) args.drop(1).toSeq else Seq("q1_agg")
@@ -79,8 +94,12 @@ object Explain {
     // as the benchmark times it) and print the AQE-final executed plan.
     // "+rules": print which graft plan rules change the query's optimized
     // plan (re-optimized with each excluded in turn).
+    // "+canon": one line per query, its name and a hash of its
+    // optimized plan after `canonicalText` — diff two builds' outputs
+    // to see which queries' plans a change moved.
     val wantFinal = names.contains("+final")
     val wantRules = names.contains("+rules")
+    val wantCanon = names.contains("+canon")
     @volatile var written: QueryExecution = null
     spark.listenerManager.register(new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = written = qe
@@ -90,10 +109,16 @@ object Explain {
     val targets =
       if (qnames == Seq("all")) SparkEntry.queries.keys.toSeq.sorted else qnames
     targets.foreach { n =>
-      println(s"==== $n ====")
+      if (!wantCanon) println(s"==== $n ====")
       try {
         val df = SparkEntry.queries(n)(spark, sfDir)
-        if (wantMetrics) {
+        if (wantCanon) {
+          val text = canonicalText(df.queryExecution.optimizedPlan
+            .treeString(verbose = true, maxFields = Int.MaxValue))
+          val hash = java.security.MessageDigest.getInstance("SHA-256")
+            .digest(text.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+          println(s"canon $n $hash")
+        } else if (wantMetrics) {
           val t0 = System.nanoTime()
           df.collect()
           println(f"wall=${(System.nanoTime() - t0) / 1e9}%.2f s")
@@ -122,7 +147,7 @@ object Explain {
           println(s"rules=${changed.mkString(",")}")
         } else df.explain("formatted")
       } catch { case e: Throwable =>
-        println(s"EXPLAIN-ERROR: ${e.getClass.getSimpleName}: ${e.getMessage}") }
+        println(s"EXPLAIN-ERROR $n: ${e.getClass.getSimpleName}: ${e.getMessage}") }
     }
     spark.stop()
   }

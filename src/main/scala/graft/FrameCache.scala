@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sample}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
@@ -22,7 +23,17 @@ import org.apache.spark.storage.StorageLevel
   *  - a tag naming the operator;
   *  - every explicit parameter (column names, geometry, iterations).
   *    Parameters must have value equality — no arrays; pass an array
-  *    by content (`ArraySeq`).
+  *    by content (`ArraySeq`);
+  *  - the (path, length, modification time) of every file an input's
+  *    file scans list. A canonical plan names a scanned directory or
+  *    file by its root path only, so a file rewritten in place would
+  *    otherwise hit entries built over its old contents. The stamps
+  *    come from the read's own listing (no extra I/O). A lookup whose
+  *    stamp for a path differs from a held entry's drops that entry,
+  *    unpersisting its frame, so Spark's CacheManager stops serving the
+  *    old rows to plain queries over the new read as well. Scans whose
+  *    index does not hold a listing (catalog-partitioned tables) are
+  *    keyed by their plan alone.
   * A session-keyed artifact (the second `memo`) has no input frame, so
   * its session, tag and parameters are its whole key. `persist(df)`
   * keys the frame itself: its plan is the one input, under one fixed
@@ -61,7 +72,8 @@ object FrameCache {
 
   private final case class Key(session: SparkSession, tag: String,
                                plans: Seq[LogicalPlan],
-                               schemas: Seq[StructType], params: Seq[Any])
+                               schemas: Seq[StructType], params: Seq[Any],
+                               files: Map[String, (Long, Long)] = Map.empty)
 
   private sealed trait Entry
   private final case class Frame(df: DataFrame) extends Entry
@@ -119,8 +131,18 @@ object FrameCache {
     val plans = inputs.map(_.queryExecution.analyzed)
     if (plans.exists(nondeterministic)) None
     else Some(Key(inputs.head.sparkSession, tag, plans.map(_.canonicalized),
-      inputs.map(_.schema), params))
+      inputs.map(_.schema), params, plans.flatMap(fileStamps).toMap))
   }
+
+  /** (path, (length, modification time)) of every file the plan's file
+    * scans list, subqueries included. */
+  private def fileStamps(plan: LogicalPlan): Seq[(String, (Long, Long))] =
+    plan.collectWithSubqueries {
+      case LogicalRelation(HadoopFsRelation(index: PartitioningAwareFileIndex,
+          _, _, _, _, _), _, _, _, _) =>
+        index.allFiles().map(f =>
+          f.getPath.toString -> ((f.getLen, f.getModificationTime)))
+    }.flatten
 
   /** Persist `df` MEMORY_AND_DISK once per key and return the shared
     * frame: an equal frame persisted earlier is returned instead of
@@ -210,12 +232,27 @@ object FrameCache {
       }
   }
 
-  // callers hold the lock
+  // callers hold the lock. Drops the entries of stopped sessions, and
+  // every entry built over a file whose stamp differs from `key`'s.
   private def lookup(key: Key): Option[Entry] = {
+    val stale = scala.collection.mutable.ArrayBuffer.empty[Frame]
     entries.entrySet().removeIf { e =>
-      val dead = e.getKey.session.sparkContext.isStopped
-      if (dead && e.getValue.isInstanceOf[Frame]) frames -= 1
-      dead
+      val k = e.getKey
+      val stopped = k.session.sparkContext.isStopped
+      val rewritten = !stopped && k.files.exists { case (path, stamp) =>
+        key.files.get(path).exists(_ != stamp)
+      }
+      e.getValue match {
+        case f: Frame if stopped || rewritten =>
+          frames -= 1
+          if (rewritten) { unpersist(f.df); stale += f }
+        case _ => ()
+      }
+      stopped || rewritten
+    }
+    if (stale.nonEmpty) {
+      log.info(s"dropped ${stale.size} frame(s) built over rewritten files")
+      dropAliases(stale)
     }
     Option(entries.get(key))
   }

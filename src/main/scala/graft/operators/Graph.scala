@@ -15,6 +15,13 @@ import graft.FrameCache
   */
 object Graph {
 
+  /** The row count of `nodes`, counted once per node set while its
+    * [[FrameCache]] entry lives: a caller that sizes its edge synthesis
+    * by it and [[pageRank]]'s uniform teleport mass share one job.
+    */
+  def nodeCount(nodes: DataFrame): Long =
+    FrameCache.memo("Graph.nodeCount", nodes)()(nodes.count())
+
   /** Fixed-iteration PageRank over a directed multigraph.
     *
     * Semantics (the SIMPLIFIED variant, deliberately): starting from
@@ -31,15 +38,22 @@ object Graph {
     *
     * Scale shape (the 100 TB contract): `edges` pre-joins its
     * out-degree ONCE and registry-persists, found by (edges, src column,
-    * weight column) before its plan is built — partitioned by src from
-    * that join's shuffle, it never moves again; each of the `iters`
-    * rounds shuffles only the NODE-sized rank frame (to src for the
-    * contribution join, to dst for the sum), so per-iteration network
-    * cost is O(nodes + contribution pairs), never O(edges re-scan).
-    * The one driver action is `nodes.count()` — a scalar. Iterations
-    * are a fixed small constant (curation wants a stable score, not
-    * convergence guarantees), so the unpersisted lineage stays
-    * shallow and no checkpoint is needed.
+    * weight column) before its plan is built, so no iteration re-scans
+    * or re-aggregates the edge set; each of the `iters` rounds joins
+    * that persisted frame with the NODE-sized rank frame and sums the
+    * contributions per dst. (Spark picks each round's join strategy: at
+    * small scale it broadcasts the persisted edges in most rounds.)
+    * Iterations are a fixed small constant (curation wants a stable
+    * score, not convergence guarantees), so the lineage stays shallow
+    * and no checkpoint is needed.
+    *
+    * The output frame is registry-persisted too, found by its inputs
+    * (nodes, edges, seeds) and every parameter before the `iters`-deep
+    * plan is built: a repeat call over the same graph runs no driver job
+    * and returns the persisted ranks. A first call's driver actions are
+    * scalars: the node count ([[nodeCount]], shared with the caller
+    * that synthesized the edges) for the uniform teleport mass, or the
+    * seed count for the personalized one.
     *
     * Variants (r16, both standard in crawl curation):
     *  - WEIGHTED edges (`weightCol`): contribution is
@@ -67,39 +81,42 @@ object Graph {
                teleport: Option[DataFrame] = None): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters out of range: $iters")
     require(damping > 0.0 && damping < 1.0, s"bad damping: $damping")
-    val w = weightCol.map(col).getOrElse(lit(1L))
-    val withDeg = FrameCache.persist("Graph.pageRank.edges", edges)(
-        srcCol, weightCol)(
-      edges.join(
-        edges.groupBy(col(srcCol)).agg(sum(w).as("__od")),
-        Seq(srcCol)))
-    // the per-node teleport mass: node-sized, reused by every
-    // iteration's base term — registry-persisted like the edges
-    val pFrame = teleport match {
-      case Some(seeds) =>
-        val s = seeds.select(col(idCol)).distinct()
-        val ns = s.count().toDouble
-        require(ns > 0, "teleport seed set is empty")
-        FrameCache.persist(nodes.select(col(idCol))
-          .join(s.withColumn("__p", lit(1.0) / lit(ns)), Seq(idCol), "left")
-          .select(col(idCol), coalesce(col("__p"), lit(0.0)).as("__p")))
-      case None =>
-        val n = nodes.count().toDouble
-        nodes.select(col(idCol), (lit(1.0) / lit(n)).as("__p"))
+    FrameCache.persist("Graph.pageRank", nodes +: edges +: teleport.toSeq: _*)(
+        iters, damping, idCol, srcCol, dstCol, out, weightCol) {
+      val w = weightCol.map(col).getOrElse(lit(1L))
+      val withDeg = FrameCache.persist("Graph.pageRank.edges", edges)(
+          srcCol, weightCol)(
+        edges.join(
+          edges.groupBy(col(srcCol)).agg(sum(w).as("__od")),
+          Seq(srcCol)))
+      // the per-node teleport mass: node-sized, reused by every
+      // iteration's base term — registry-persisted like the edges
+      val pFrame = teleport match {
+        case Some(seeds) =>
+          val s = seeds.select(col(idCol)).distinct()
+          val ns = s.count().toDouble
+          require(ns > 0, "teleport seed set is empty")
+          FrameCache.persist(nodes.select(col(idCol))
+            .join(s.withColumn("__p", lit(1.0) / lit(ns)), Seq(idCol), "left")
+            .select(col(idCol), coalesce(col("__p"), lit(0.0)).as("__p")))
+        case None =>
+          val n = nodeCount(nodes).toDouble
+          nodes.select(col(idCol), (lit(1.0) / lit(n)).as("__p"))
+      }
+      var ranks = pFrame.select(col(idCol), col("__p").as(out))
+      for (_ <- 1 to iters) {
+        val contrib = withDeg
+          .join(ranks.withColumnRenamed(idCol, srcCol), Seq(srcCol))
+          .groupBy(col(dstCol))
+          .agg(sum(col(out) * w / col("__od")).as("__m"))
+          .withColumnRenamed(dstCol, idCol)
+        ranks = pFrame
+          .join(contrib, Seq(idCol), "left")
+          .select(col(idCol),
+            (lit(1.0 - damping) * col("__p") +
+              lit(damping) * coalesce(col("__m"), lit(0.0))).as(out))
+      }
+      ranks
     }
-    var ranks = pFrame.select(col(idCol), col("__p").as(out))
-    for (_ <- 1 to iters) {
-      val contrib = withDeg
-        .join(ranks.withColumnRenamed(idCol, srcCol), Seq(srcCol))
-        .groupBy(col(dstCol))
-        .agg(sum(col(out) * w / col("__od")).as("__m"))
-        .withColumnRenamed(dstCol, idCol)
-      ranks = pFrame
-        .join(contrib, Seq(idCol), "left")
-        .select(col(idCol),
-          (lit(1.0 - damping) * col("__p") +
-            lit(damping) * coalesce(col("__m"), lit(0.0))).as(out))
-    }
-    ranks
   }
 }

@@ -19,11 +19,13 @@ private[graft] object QueriesCurate {
     * (nodes (id), edges (src, dst)): doc_ids are contiguous 0..N−1, so
     * modular edge synthesis is total and SQL-reproducible; nodes with
     * doc_id % 4 == 0 are DANGLING, exercising the leak variant;
-    * parallel edges are kept (multigraph). Runs one `nodes.count()`.
+    * parallel edges are kept (multigraph). Sizes the edges by
+    * `Graph.nodeCount`, the node count `Graph.pageRank` shares: a first
+    * call counts the nodes once, a repeat call not at all.
     */
   private def crawlGraph(docs: DataFrame): (DataFrame, DataFrame) = {
     val nodes = docs.select(col("doc_id").as("id"))
-    val nCnt = nodes.count()
+    val nCnt = Graph.nodeCount(nodes)
     val edges = docs
       .select(col("doc_id").as("src"),
         explode(array(lit(1L), lit(2L), lit(3L))).as("j"))

@@ -195,4 +195,37 @@ class FrameCacheSpec extends SparkSpec {
     assert(!(second eq first) && first.storageLevel === StorageLevel.NONE)
     assert((FrameCache.stats.frames, FrameCache.stats.aliases) === ((0L, 0L)))
   }
+
+  test("a file rewritten at the same path misses every entry built over " +
+    "it, and plain queries stop reading the old rows") {
+    import java.nio.file.{Files, Path, StandardCopyOption}
+    val dir = Files.createTempDirectory("framecache-rewrite")
+    // one parquet file of x = 0 until n at dir/t.parquet, as Tables reads
+    def write(n: Int): Unit = {
+      val out = dir.resolve(s"w$n")
+      spark.range(n).toDF("x").coalesce(1).write.parquet(out.toString)
+      val part = Files.list(out).filter(_.toString.endsWith(".parquet"))
+        .findFirst().get()
+      Files.copy(part, dir.resolve("t.parquet"),
+        StandardCopyOption.REPLACE_EXISTING)
+    }
+    def read() = Tables.table(spark, dir.toString, "t")
+    def count(t: DataFrame) =
+      FrameCache.memo("spec.count", t)()(t.count())
+    def sum(t: DataFrame) =
+      FrameCache.persist("spec.sum", t)()(t.selectExpr("sum(x) AS s"))
+        .head().getLong(0)
+    FrameCache.clear()
+    write(10)
+    val before = read()
+    assert((count(before), sum(before)) === ((10L, 45L)))
+    write(20)
+    val after = read()
+    assert(count(after) === 20L, "the count memo served the old file")
+    assert(sum(after) === 190L, "the persisted sum served the old file")
+    assert(after.selectExpr("sum(x)").head().getLong(0) === 190L,
+      "Spark's cache still substitutes the frame built over the old file")
+    assert(FrameCache.stats.frames === 1L)
+    FrameCache.clear()
+  }
 }

@@ -1,12 +1,15 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Graph}
 
 /** PageRank (r16 — link-graph quality weighting for crawl curation):
   * the simplified (leaking-dangling) variant pinned against a
   * hand-computed reference on a small graph, plus the structural
-  * properties curation relies on.
+  * properties curation relies on, and the rank frame's cache key: a
+  * repeat call over the same inputs and parameters runs no job.
   */
 class GraphSpec extends SparkSpec {
   import spark.implicits._
@@ -86,7 +89,10 @@ class GraphSpec extends SparkSpec {
     val df = SparkEntry.queries("q278_pagerank")(spark,
       "/root/testdata/sf0.001")
     assert(df.count() > 0)
-    val plan = df.queryExecution.executedPlan.toString
+    // the ranks are a persisted frame: check the plan that built them
+    val plan = df.queryExecution.withCachedData
+      .collectFirst { case r: InMemoryRelation => r.cachedPlan.toString }
+      .getOrElse(fail("q278's rank frame is not persisted"))
     val scans = "InMemoryTableScan".r.findAllIn(plan).size
     assert(scans >= 5,
       s"expected >= 5 cached edge scans (one per iteration), got $scans:\n" +
@@ -102,9 +108,73 @@ class GraphSpec extends SparkSpec {
     Graph.pageRank(n, e, iters = 2).count()
     val hits0 = Dedup.registryHits
     val miss0 = Dedup.registryMisses
-    Graph.pageRank(n, e, iters = 2).count()
-    assert(Dedup.registryHits > hits0 && Dedup.registryMisses == miss0,
-      "second pageRank over the same graph must reuse the persisted " +
-        "degree-joined edges")
+    // iters = 3 misses the persisted ranks of iters = 2, so this call
+    // builds: its one hit is the edge frame, its one miss its own ranks
+    Graph.pageRank(n, e, iters = 3).count()
+    assert(Dedup.registryHits - hits0 === 1 &&
+      Dedup.registryMisses - miss0 === 1,
+      "a second pageRank over the same graph must reuse the persisted " +
+        "degree-joined edges and persist only its own ranks")
+  }
+
+  private val dir = "/root/testdata/sf0.001"
+
+  /** The persisted frames `df`'s plan reads, outermost first. */
+  private def cachedIn(df: DataFrame) =
+    df.queryExecution.withCachedData.collect { case r: InMemoryRelation =>
+      r.cacheBuilder }
+
+  test("a repeat construction of q278-q280 runs no Spark job and reads " +
+    "the same persisted ranks") {
+    Seq("q278_pagerank", "q279_source_authority", "q280_focused_pagerank")
+      .foreach { q =>
+        val first = SparkEntry.queries(q)(spark, dir)
+        val (again, jobs) = jobsOf(SparkEntry.queries(q)(spark, dir))
+        assert(jobs === 0, s"$q: a repeat construction ran $jobs job(s)")
+        assert(cachedIn(first).nonEmpty, s"$q reads no persisted frame")
+        assert(cachedIn(again).corresponds(cachedIn(first))(_ eq _), q)
+        assert(rows(again) === rows(first), q)
+      }
+  }
+
+  test("the rank frame is keyed by every parameter and the seed set") {
+    val wEdges = Seq((0L, 1L, 3L), (0L, 2L, 1L), (1L, 2L, 2L),
+      (2L, 0L, 1L), (3L, 0L, 5L)).toDF("src", "dst", "w")
+    def seeds(ids: Long*) = ids.toDF("id")
+    def run(iters: Int = 4, damping: Double = 0.85,
+            weightCol: Option[String] = None,
+            teleport: Option[DataFrame] = None) =
+      Graph.pageRank(nodes, wEdges, iters, damping, weightCol = weightCol,
+        teleport = teleport)
+    def ranks(df: DataFrame) =
+      df.orderBy("id").select("rank").as[Double].collect().toSeq
+    FrameCache.clear()
+    val variants = Seq[(String, () => DataFrame)](
+      ("base", () => run()),
+      ("iters", () => run(iters = 3)),
+      ("damping", () => run(damping = 0.5)),
+      ("weightCol", () => run(weightCol = Some("w"))),
+      ("teleport", () => run(teleport = Some(seeds(0L, 3L)))),
+      ("teleport seeds", () => run(teleport = Some(seeds(0L)))))
+    val built = variants.map { case (what, call) =>
+      val s0 = FrameCache.stats
+      val df = call()
+      assert(FrameCache.stats.misses > s0.misses, s"$what hit another key")
+      assert(call() eq df, s"$what: an equal call missed")
+      what -> df
+    }
+    built.combinations(2).foreach { case Seq((a, x), (b, y)) =>
+      assert(!(x eq y), s"$a and $b share a frame")
+      assert(ranks(x) !== ranks(y), s"$a and $b rank alike")
+    }
+  }
+
+  test("an empty teleport seed set is rejected, on every call") {
+    val none = Seq.empty[Long].toDF("id")
+    (1 to 2).foreach { _ =>
+      val e = intercept[IllegalArgumentException](
+        Graph.pageRank(nodes, edges, teleport = Some(none)))
+      assert(e.getMessage.contains("teleport seed set is empty"))
+    }
   }
 }

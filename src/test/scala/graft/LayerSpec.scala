@@ -99,6 +99,19 @@ class LayerSpec extends SparkSpec {
     assert(ops.forall(o => o._3 >= 0L && o._4 >= 0L))
   }
 
+  test("canonicalText erases the names a JVM's history picks and keeps " +
+    "the plan") {
+    def line(id: Int, pid: Int, x: Int, hash: String, tmp: String) =
+      s"Filter probe(sh#${id}L, [J@$hash, lambda x_${x}L) [plan_id=$pid] " +
+        s"graft.operators.Ema$$$$$$Lambda/0x00007f$hash@$hash " +
+        s"InMemoryFileIndex(1 paths)[file:/tmp/$tmp/t.parquet]"
+    val a = Explain.canonicalText(line(12, 357, 84, "4e8b0758", "spark-1a2b"))
+    val b = Explain.canonicalText(line(981, 1599, 80, "54514d20", "graft-9z"))
+    assert(a === b)
+    assert(Explain.canonicalText("Filter (v#3L > 5)") !==
+      Explain.canonicalText("Filter (v#3L > 6)"), "a literal was erased")
+  }
+
   test("winsorize clips exactly at the percentile bounds") {
     val df = (1 to 100).map(_.toDouble).toDF("v")
     val out = Stats.winsorize(df, "v", 0.1, 0.9, "w")
