@@ -17,6 +17,11 @@ beside it so the build cost stays visible.
 r16 (VERDICT r15 #5): q267's 1x twin prefers the data-proportional
 5k-image synthetic lane (sec_1x_syn) over the 32-image oracle fixture.
 
+Basis: bench_full.json's medians time the noop write
+("basis":"noop"), while bench_scale10.json's walls (and the sec_1x
+twins it recorded) still time count() until the next 10x reseat; a
+1x twin read from bench_full.json is on the noop basis.
+
 Usage:
   python3 scripts/scale_table.py
 """

@@ -1,6 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** The tripwire's confirmed/weather/error/state_loss decision (VERDICT
   * r11 #1 + r15 #1b), pure so BenchVerdictSpec can pin it: an `error`
@@ -82,58 +89,119 @@ final class BlockEvictionTracker {
   }
 }
 
-/** Benchmark main: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR and prints one JSON line (driver contract).
+/** Benchmark main: times every SparkEntry query against
+  * SPARK_GRAFT_SF_DIR (default sf0.1) on SPARK_GRAFT_CPUS local cores
+  * (default 4), writes the full result to bench_full.json and prints
+  * one JSON line of under 1,500 characters (the driver contract).
   *
-  * Harness design mirrors the reference (1 warmup + timed iters,
-  * riptable/benchmarks/bench_merge.py:100-186): a full warmup pass runs
-  * every query once so the timed pass measures steady-state cost —
-  * whole-stage-codegen compilation, parquet footers, and the JIT are all
-  * one-time costs that would otherwise dominate sub-second queries. Base
-  * tables are cached up front (they fit by construction at bench scale;
-  * the reference's arrays are likewise RAM-resident when benched).
+  * Every timed number comes from one unit, `call`: build the DataFrame,
+  * then write every row and column to Spark's noop sink — the unit
+  * perfbench's Harness.call times, so Catalyst cannot prune columns,
+  * aggregates or sorts out of it. Both outputs say so with
+  * `"basis":"noop"`. The harness follows the reference's one warm-up
+  * plus timed iterations (riptable/benchmarks/bench_merge.py:100-186):
+  *  - warm-up: one untimed call per query (JIT, codegen, page cache);
+  *  - sweep: per query, the registry is trimmed to zero, then three
+  *    timed calls; the median and min are reported, and call 1 pays
+  *    every registry frame build (`queries_reg.miss_by_run`);
+  *  - tripwire: a query whose median and min both exceed 1.25× its
+  *    baseline by more than 0.25 s, or whose median exceeds 2.5× it, is
+  *    re-run three times in isolation and given a [[BenchVerdict]];
+  *    confirmed slips print their top operators as `REGOP` lines on
+  *    stderr;
+  *  - cold lane: the memo/artifact families again, with the registry
+  *    and the pair table cleared before each call;
+  *  - `top_ops`: the top three operators of the five slowest queries.
   *
-  * Failures do NOT hide inside timings: a throwing query reports
-  * ok=false in the `failed` list and contributes its elapsed time, so a
-  * regression is visible in both places; an iso/cold-lane failure is
-  * recorded as verdict "error" / cold_failed instead of timing the
-  * exception path (ADVICE r11).
-  *
-  * Every query also reports executor-CPU seconds (SparkListener sum of
-  * taskMetrics.executorCpuTime): host contention inflates WALL while
-  * CPU stays flat, so the tripwire's confirmed/weather verdict compares
-  * the isolated re-run's wall/cpu ratio against the baseline's
-  * (VERDICT r11 #1 — the discriminator sustained box contention cannot
-  * fool). Driver-side planning time is deliberately outside cpu_sec;
-  * the ratio is only ever compared same-query, same-sf.
+  * Executor CPU seconds sit beside every wall time: host contention
+  * raises wall while CPU stays flat, which is what the verdict's
+  * wall/cpu test reads. The baseline is the per-query minimum over
+  * bench_full.json and the newest BENCH_r*.json that [[baseline]]
+  * accepts. A query that throws is listed in `failed`, a re-run that
+  * throws gets verdict `error`, and a cold run that throws lists its
+  * query in `cold_failed`; no failure is timed as a result.
+  * SPARK_GRAFT_ONLY=q1_agg,q3_join_inner times only the named queries,
+  * prints each of them, and leaves bench_full.json alone.
   */
 object Bench {
+  private type Query = (SparkSession, String) => DataFrame
+
+  /** The timed unit's name, written to both outputs. */
+  val Basis = "noop"
+
+  private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
+
+  /** (wall medians, cpu medians) of one baseline file's text: the root
+    * of bench_full.json, or the `parsed` object of a driver-committed
+    * BENCH_r*.json. Both maps are empty unless the run was at `sfDir` on
+    * the [[Basis]] basis, so a comparison never crosses scales or timed
+    * units. Names the run flagged `warm_suspect` (executor CPU far
+    * below wall and collapsed against its own previous seat: a
+    * registry-warm median) leave the walls and stay in the cpus.
+    */
+  def baseline(json: String, sfDir: String)
+      : (Map[String, Double], Map[String, Double]) = {
+    val none = (Map.empty[String, Double], Map.empty[String, Double])
+    try {
+      val root = mapper.readTree(json)
+      val b = if (root.has("parsed")) root.get("parsed") else root
+      if (b.path("sf").asText != sfDir || b.path("basis").asText != Basis) none
+      else {
+        def nums(key: String) = b.path(key).properties.asScala
+          .map(e => e.getKey -> e.getValue.asDouble).toMap
+        val suspect = b.path("warm_suspect").elements.asScala.map(_.asText).toSet
+        (nums("queries") -- suspect, nums("queries_cpu"))
+      }
+    } catch { case NonFatal(_) => none }
+  }
+
+  /** One timed call with the registry misses, registry evictions and
+    * cached-block losses it saw. */
+  private final case class Run(wall: Double, cpu: Double, ok: Boolean,
+                               misses: Long, evictions: Long, blockLoss: Long) {
+    def stateLoss: Boolean = misses + evictions + blockLoss > 0
+  }
+
+  /** One query's sweep: median and min wall, median cpu, all calls ok. */
+  private final case class Swept(name: String, med: Double, min: Double,
+                                 cpu: Double, ok: Boolean, ev: SweepEvidence)
+
+  /** A tripwire flag and its isolated re-runs, fastest first. */
+  private final case class Flag(q: Swept, prev: Double, kind: String,
+                                iso: Seq[Run], verdict: String)
+
+  private def r3(v: Double): Double = math.rint(v * 1000) / 1000
+
+  /** One representative per operator family: the queries the stdout
+    * line carries on a full run. */
+  private val headline = Set(
+    "q1_agg", "q3_join_inner", "q7_gb_quantiles", "q10_rolling",
+    "q15_asof_backward", "q22_pivot", "q28_jaccard", "q31_ann_brute",
+    "q38_ema_decay", "q62_ngroup", "q66_parquet_partitioned",
+    "q82_ann_ivf", "q86_tpch_q3", "q99_apply_groups", "q119_dup_clusters",
+    "q128_edit_distance", "q130_tfidf", "q146_tpch_q21", "q156_tpch_q2",
+    "q187_kmv_distinct", "q192_countmin_hh", "q198_pca_project",
+    "q200_curation_e2e", "q210_pair_artifact", "q250_ivfpq_trained",
+    "q255_bpe_artifact", "q262_contamination_report", "q265_crawl_ops",
+    "q272_ema_chunked", "q278_pagerank")
+
+  /** The memo/artifact families: their sweep times the warm consumer
+    * path, the cold lane the build a first caller pays. Model artifacts
+    * survive the cold reset, so cold q253 is the serve-from-artifact
+    * path and cold q250 a full retrain. */
+  private val coldFamily = Set("q210_pair_artifact", "q232_train_classifier",
+    "q234_classifier_gate", "q237_kmeans", "q238_cluster_balanced_sample",
+    "q239_semdedup_kmeans", "q242_ivf_trained", "q250_ivfpq_trained",
+    "q253_model_artifact", "q254_classifier_artifact",
+    "q255_bpe_artifact", "q260_bloom_artifact", "q261_dsir_artifact",
+    "q225_bpe_merges", "q226_bpe_segments", "q243_bpe_fertility")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = RipSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
-    // Per-query executor CPU seconds (VERDICT r11 #1): host contention
-    // inflates WALL time while leaving CPU time flat, so cpu_sec beside
-    // wall is the discriminator the tripwire needs — the r11 committed
-    // bench carried 5 "confirmed" regressions that were pure box
-    // weather (none reproduced on a clean pass). One listener sums
-    // executorCpuTime across all tasks; per-query deltas are read after
-    // draining the (async) listener bus.
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong(0L)
-    // Flag-evidence counters (VERDICT r13 #3 — the recurring q29-family
-    // median-vs-isolation inflation needed per-flag evidence, not
-    // re-run archaeology): task GC time, spill bytes, and storage
-    // blocks leaving memory, all per-query-deltable like cpuNs. A
-    // med≫iso query whose sweep-run GC/spill/eviction deltas are ~0 is
-    // host weather by elimination; a fat delta names the mechanism.
-    val gcMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    val spillBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    val memDrops = new java.util.concurrent.atomic.AtomicLong(0L)
-    // NONE-update loss tracking (VERDICT r15 #2): the demotion counter
-    // below only sees memory→disk demotions, so a block FULLY evicted
-    // from memory (posted as StorageLevel.NONE) was invisible — the
-    // tracker counts non-deliberate NONE updates of previously-cached
-    // blocks, with the bench's own trim/clear teardown stamped out via
-    // `deliberately` windows.
+    // executor CPU, GC, spill and memory→disk demotions of cached RDD
+    // blocks, summed over tasks and read as deltas after a bus drain
+    val cpuNs, gcMs, spillBytes, memDrops = new java.util.concurrent.atomic.AtomicLong(0L)
     val evictTracker = new BlockEvictionTracker
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
@@ -148,21 +216,13 @@ object Bench {
         }
         override def onBlockUpdated(
             e: org.apache.spark.scheduler.SparkListenerBlockUpdated): Unit = {
-          val lvl = e.blockUpdatedInfo.storageLevel
-          // a cached RDD block DEMOTED out of memory to disk is the
-          // storage-eviction signature (registry frames persist
-          // MEMORY_AND_DISK — FrameCache.persist documents the
-          // invariant). Non-RDD blocks (broadcast/shuffle
-          // housekeeping) never count (ADVICE r14).
-          if (e.blockUpdatedInfo.blockId.isRDD && lvl.isValid &&
-              !lvl.useMemory) memDrops.incrementAndGet()
-          evictTracker.onUpdate(e.blockUpdatedInfo.blockId.isRDD,
-            lvl.isValid, lvl.useMemory, e.blockUpdatedInfo.blockId.name)
+          val (id, lvl) = (e.blockUpdatedInfo.blockId, e.blockUpdatedInfo.storageLevel)
+          if (id.isRDD && lvl.isValid && !lvl.useMemory) memDrops.incrementAndGet()
+          evictTracker.onUpdate(id.isRDD, lvl.isValid, lvl.useMemory, id.name)
         }
       })
-    // listenerBus.waitUntilEmpty is private[spark] (public in bytecode)
-    // — reflection keeps us source-compatible; losing the flush only
-    // blurs CPU attribution by a task tail, so the fallback is a nap.
+    // listenerBus.waitUntilEmpty is private[spark] (public in bytecode);
+    // losing the flush only blurs CPU attribution by a task tail
     def drainListenerBus(): Unit = try {
       val sc = spark.sparkContext
       val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
@@ -171,489 +231,175 @@ object Bench {
         .map(_.invoke(bus))
         .getOrElse(Thread.sleep(50))
     } catch { case _: Throwable => Thread.sleep(50) }
-    // one timed execution: (wall sec, cpu sec, ok)
-    def timedRun(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Double, Boolean) = {
+    /** The timed unit: (wall sec, executor cpu sec, ok). */
+    def call(fn: Query): (Double, Double, Boolean) = {
       drainListenerBus()
       val c0 = cpuNs.get()
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
+      val ok = try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
                catch { case _: Throwable => false }
       val dt = (System.nanoTime() - t0) / 1e9
       drainListenerBus()
       (dt, (cpuNs.get() - c0) / 1e9, ok)
     }
+    def instrumented(fn: Query): Run = {
+      val (s0, b0) = (FrameCache.stats, evictTracker.lost)
+      val (wall, cpu, ok) = call(fn)
+      val s1 = FrameCache.stats
+      Run(wall, cpu, ok, s1.misses - s0.misses, s1.evictions - s0.evictions,
+        evictTracker.lost - b0)
+    }
+    // teardown inside the deliberate window: the trim blocks and the bus
+    // drains before it closes, so only BlockManager-initiated loss counts
+    def deliberately(teardown: => Unit): Unit = evictTracker.deliberately {
+      teardown; System.gc(); drainListenerBus()
+    }
 
-    // warmup: JIT, then cache base tables, then one untimed pass of
-    // every query (codegen compile + shuffle-file warm)
     spark.range(1000000L).selectExpr("sum(id)").collect()
-    Tables.names.foreach { n =>
-      val t = Tables.table(spark, sfDir, n); t.cache(); t.count()
-    }
-    SparkEntry.queries.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
-    }
+    SparkEntry.queries.foreach { case (_, fn) => call(fn) }
 
-    // 3 timed iterations after the untimed warmup pass; report the
-    // MEDIAN per query (host noise on this shared box has shown 2-6x
-    // single-shot outliers — median-of-3 rejects one outlier per query
-    // where min-of-N hides genuine regressions) and the MIN alongside,
-    // so a judge can separate code cost (min) from host weather
-    // (median − min).
-    // SPARK_GRAFT_ONLY=q130_tfidf,q28_jaccard — optional comma-set for
-    // isolated re-timing of suspect queries (debug aid, not the contract)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    // Between-query registry CLEAR (VERDICT r16 #2, replacing the r14
-    // trim-to-K): the warmup pass builds every persisted registry frame,
-    // and with trimKeep above the working set NO timed run ever paid a
-    // frame build — "precomputation outside the timed region", which the
-    // r16 judge called gaming. The sweep now trims the registry to ZERO
-    // before each query's 3 timed runs, so run 1 pays the full build of
-    // every frame the query uses (recorded per-run in queries_reg as
-    // miss_by_run=[N,0,0]) and median-of-3 reports the steady-state cost
-    // of runs 2-3 — the rebuild is charged inside a timed, recorded run
-    // instead of hidden in warmup. Registry-driven cross-query warmth is
-    // gone by construction; any remaining `warm_suspect` flags come from
-    // sources outside the registry (driver-side artifacts in FrameCache,
-    // Spark's own caches, JIT and OS page-cache warmth). trimKeep
-    // stays env-tunable for debugging (SPARK_GRAFT_TRIM=96 restores the
-    // old basis for A/Bs) but defaults to 0 = honest.
-    val trimKeep =
-      try sys.env.getOrElse("SPARK_GRAFT_TRIM", "0").toInt
-      catch { case _: NumberFormatException => 0 }
-    // deliberate-teardown window (VERDICT r15 #2): blocking trim, then
-    // drain the listener bus BEFORE the window closes, so every
-    // trim-initiated NONE block update is stamped deliberate and only
-    // BlockManager-initiated loss counts outside it
-    def deliberateTrim(): Unit = evictTracker.deliberately {
-      FrameCache.trimTo(trimKeep, blocking = true)
-      System.gc()
-      drainListenerBus()
-    }
-    deliberateTrim() // shed the warmup pass's full set
-    FrameCache.resetPeak() // peak measures SWEEP demand
-    val regDebug = sys.env.contains("SPARK_GRAFT_REG_DEBUG")
-    // per-run (wall, cpu, ok, registry-miss Δ, registry-evict Δ,
-    // block-loss Δ): the state deltas turn "did the cached state
-    // survive into this run" into recorded evidence (VERDICT r15 #1a)
-    def instrumentedRun(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Double, Boolean, Long, Long, Long) = {
-      val (s0, b0) = (FrameCache.stats, evictTracker.lost)
-      val (dt, cpu, ok) = timedRun(fn)
-      val s1 = FrameCache.stats
-      val (mD, eD, bD) = (s1.misses - s0.misses,
-        s1.evictions - s0.evictions, evictTracker.lost - b0)
-      if (regDebug && dt > 0.5)
-        System.err.println(f"REGDBG $name%s $dt%.3f s hits+${s1.hits - s0.hits} miss+$mD evict+$eD blockloss+$bD")
-      (dt, cpu, ok, mD, eD, bD)
-    }
+    val fnByName = selected.toMap
+    deliberately(FrameCache.trimTo(0, blocking = true))
+    FrameCache.resetPeak() // the peak measures the sweep's demand
     val results = selected.map { case (name, fn) =>
-      // JMH-style hygiene: trim stale registry frames, then collect
-      // garbage BETWEEN queries (outside any timed window) so a heap
-      // built up by earlier queries' frames/allocations is not paid as
-      // a multi-second roaming GC pause inside query N+1's timings —
-      // observed as 3-20x min-of-3 spikes that MOVE between queries
-      // across otherwise-identical runs.
-      deliberateTrim()
-      val (g0, s0, d0) = (gcMs.get(), spillBytes.get(), memDrops.get())
+      // trim and collect garbage between queries, outside any timed call
+      deliberately(FrameCache.trimTo(0, blocking = true))
+      val (g0, sp0, d0) = (gcMs.get(), spillBytes.get(), memDrops.get())
       val (st0, b0) = (FrameCache.stats, evictTracker.lost)
-      val runs = (1 to 3).map(_ => instrumentedRun(name, fn))
-      val times = runs.map(_._1).sorted
-      val cpus = runs.map(_._2).sorted
+      val runs = Seq.fill(3)(instrumented(fn))
       val st1 = FrameCache.stats
-      val evidence = SweepEvidence(
-        gcMs.get() - g0, spillBytes.get() - s0, memDrops.get() - d0,
-        st1.hits - st0.hits, st1.misses - st0.misses,
-        st1.evictions - st0.evictions,
-        evictTracker.lost - b0,
-        runs.map(_._4))
-      (name, times(1), times.head, cpus(1), runs.forall(_._3), evidence)
+      val walls = runs.map(_.wall).sorted
+      Swept(name, walls(1), walls.head, runs.map(_.cpu).sorted.apply(1),
+        runs.forall(_.ok), SweepEvidence(gcMs.get() - g0,
+          spillBytes.get() - sp0, memDrops.get() - d0, st1.hits - st0.hits,
+          st1.misses - st0.misses, st1.evictions - st0.evictions,
+          evictTracker.lost - b0, runs.map(_.misses)))
     }
-    def fmt(v: Double): String = f"$v%.3f"
-    // Per-query regression tripwire (r7 verdict #5): q156 slipped 42%
-    // while the TOTAL improved — totals hide per-query slips. Diff this
-    // run's times against the previous round's committed bench_full.json
-    // BEFORE overwriting it. A query is flagged only when BOTH its
-    // median and its min exceed 1.25× the previous median by >0.25 s:
-    // median-only spikes are host weather (the min stays at code cost),
-    // and the absolute floor keeps 0.1 s queries from tripping on noise.
-    // The baseline is only comparable at the SAME scale factor: a
-    // committed sf0.01 baseline vs an sf0.1 run would flag every query
-    // (and the reverse would mask every real slip). Mismatched sf →
-    // no tripwire this run (the overwrite below re-seats the baseline).
-    // Extract `"queries":{...}` by brace counting, not a [^}]* regex —
-    // survives reordered keys / pretty-printing / nested values; a
-    // format drift that silently disabled the tripwire is what let the
-    // r8 q28 regression through (ADVICE r8).
-    def namedBlock(txt: String, key: String): Map[String, Double] = {
-      val at = txt.indexOf("\"" + key + "\":")
-      if (at < 0) Map.empty
-      else {
-        val open = txt.indexOf('{', at)
-        var i = open; var depth = 0
-        while (i < txt.length && (depth > 0 || i == open)) {
-          if (txt.charAt(i) == '{') depth += 1
-          else if (txt.charAt(i) == '}') depth -= 1
-          i += 1
-        }
-        val block = txt.substring(open + 1, math.max(open + 1, i - 1))
-        "\"([^\"]+)\"\\s*:\\s*([0-9.eE+-]+)".r.findAllMatchIn(block)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    }
-    // (wall medians, cpu medians) — cpu present only in bench_full.json
-    // baselines written from r12 on (the size-capped stdout line the
-    // driver commits never carried cpu)
-    def loadBaseline(path: java.nio.file.Path)
-        : (Map[String, Double], Map[String, Double]) = try {
-      val txt = new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
-      val prevSf = "\"sf\"\\s*:\\s*\"([^\"]*)\"".r
-        .findFirstMatchIn(txt).map(_.group(1))
-      if (!prevSf.contains(sfDir)) (Map.empty, Map.empty)
-      else {
-        val walls = namedBlock(txt, "queries")
-        val cpus = namedBlock(txt, "queries_cpu")
-        // Registry/cache-warm seats never become tripwire baselines
-        // (VERDICT r15 #1c): r15 committed q199 at 0.213 s wall /
-        // 0.066 s CPU — physically implausible for a token-explode +
-        // CM-sketch plan (its honest isolated cost is ~0.45 s / 2.4 s
-        // CPU), and the driver's honest recompute then tripped as a
-        // "confirmed regression". The SEATING run detects the
-        // signature (cpu ≪ wall AND cpu collapsed ≥3× vs the previous
-        // seat — a blanket cpu/wall rule would wrongly drop the ~36%
-        // of honest plan-dominated queries) and records the names in
-        // `warm_suspect`; here those entries leave the WALL baseline
-        // (cpu map stays — it only feeds same-seat ratio checks).
-        val suspect = {
-          val at = txt.indexOf("\"warm_suspect\":")
-          if (at < 0) Set.empty[String]
-          else {
-            val open = txt.indexOf('[', at)
-            val close = txt.indexOf(']', open)
-            if (open < 0 || close < 0) Set.empty[String]
-            else "\"([^\"]+)\"".r
-              .findAllMatchIn(txt.substring(open, close))
-              .map(_.group(1)).toSet
-          }
-        }
-        if (suspect.nonEmpty)
-          System.err.println("bench tripwire: ignoring " +
-            s"${suspect.size} registry/cache-warm baseline entries " +
-            s"(seated warm_suspect): ${suspect.toSeq.sorted.take(8).mkString(",")}")
-        (walls -- suspect, cpus)
-      }
-    } catch { case _: Throwable => (Map.empty, Map.empty) }
-    val (localBase, localBaseCpu) =
-      loadBaseline(java.nio.file.Paths.get("bench_full.json"))
-    // Second baseline: the newest driver-committed BENCH_r*.json — the
-    // r8 q28 slip was visible only in the DRIVER's numbers (the local
-    // baseline had already re-seated on a slow run). A query regresses
-    // if it slipped vs EITHER baseline.
-    val driverBase: Map[String, Double] = try {
-      import scala.jdk.CollectionConverters._
-      val dir = java.nio.file.Paths.get(".")
-      val benches = java.nio.file.Files.list(dir).iterator().asScala
-        .filter(_.getFileName.toString.matches("BENCH_r\\d+\\.json")).toSeq
-        .sortBy(_.getFileName.toString)
-      benches.lastOption.map(p => loadBaseline(p)._1).getOrElse(Map.empty)
-    } catch { case _: Throwable => Map.empty }
+
+    def read(p: Path): String = try Files.readString(p) catch { case NonFatal(_) => "" }
+    val (localBase, localBaseCpu) = baseline(read(Paths.get("bench_full.json")), sfDir)
+    val driverBase = Files.list(Paths.get(".")).iterator.asScala
+      .map(_.getFileName.toString).filter(_.matches("BENCH_r\\d+\\.json"))
+      .toSeq.sorted.lastOption
+      .fold(Map.empty[String, Double])(f => baseline(read(Paths.get(f)), sfDir)._1)
     if (localBase.isEmpty && driverBase.isEmpty)
       System.err.println("bench tripwire: NO baseline parsed " +
-        s"(bench_full.json/BENCH_r*.json missing, unparsable, or other sf than $sfDir) " +
-        "— regressions are NOT being checked this run")
-    val prevMedians: Map[String, Double] =
-      (localBase.keySet ++ driverBase.keySet).map { k =>
-        k -> math.min(localBase.getOrElse(k, Double.MaxValue),
-          driverBase.getOrElse(k, Double.MaxValue))
-      }.toMap
-    // Sweep-end registry observability (VERDICT r10 #7): evictions
-    // climbing while hits stall = the LRU cap is below the workload's
-    // reuse set (the r8 thrash signature) — surfaced here so the next
-    // one is a one-glance read instead of a round of timing forensics.
-    val registryJson = {
-      val st = FrameCache.stats
-      System.err.println(s"dedup registry: hits=${st.hits} " +
-        s"misses=${st.misses} evictions=${st.evictions} " +
-        s"entries=${st.frames} cap=${FrameCache.maxCached} " +
-        s"trims=${st.trims} " +
-        s"peak=${st.peakFrames} trimKeep=$trimKeep " +
-        s"blockLoss=${evictTracker.lost}")
-      // machine-readable in bench_full.json: evictions>0 during a sweep
-      // is the thrash signature (VERDICT r12 #1) — the judge and the
-      // next round's tripwire can now read it without log archaeology.
-      // trims = deliberate between-query hygiene (NOT thrash);
-      // peak_entries/trim_keep record the resident-set demand
-      // (VERDICT r15 #8);
-      // block_loss = BlockManager-initiated cached-block removals,
-      // deliberate teardown excluded (VERDICT r15 #2).
-      s"""{"hits":${st.hits},"misses":${st.misses},"evictions":${
-        st.evictions},"entries":${st.frames},"cap":${FrameCache.maxCached},"trims":${
-        st.trims},"peak_entries":${
-        st.peakFrames},"trim_keep":$trimKeep,"block_loss":${
-        evictTracker.lost}}"""
-    }
-    // Weather-proofing (VERDICT r10 #1, upgraded per r11 #1): every
-    // tripwire flag AND every median-only >2.5× spike is RE-RUN in
-    // isolation (fresh GC, 3 runs, after the sweep's contention window)
-    // and annotated:
-    //  - `error`     = the re-run THREW — a crash's time-to-failure is
-    //                  fast and must not launder a real breakage into
-    //                  "weather" (ADVICE r11);
-    //  - `weather`   = isolation restores the old cost, OR the isolated
-    //                  wall/cpu ratio blew past 1.5× the baseline run's
-    //                  ratio (wall rose, cpu flat ⇒ the box was busy,
-    //                  not the code — the discriminator sustained
-    //                  contention cannot fool, which is how r11's 5
-    //                  false "confirmed" flags got through);
-    //  - `confirmed` = the isolated min still exceeds the slip
-    //                  thresholds at a normal wall/cpu ratio (code cost
-    //                  really rose).
-    // The cpu-ratio check needs a baseline cpu (bench_full.json from
-    // r12 on); without one it falls back to wall-only confirmation.
-    val fnByName = selected.toMap
-    val flagged = results.flatMap { case (name, med, mn, _, _, ev) =>
-      prevMedians.get(name).collect {
-        case prev if med > prev * 1.25 && med - prev > 0.25 &&
-          mn > prev * 1.25 && mn - prev > 0.25 =>
-          (name, prev, med, "tripwire", ev)
-        case prev if med > prev * 2.5 && med - prev > 0.25 =>
-          (name, prev, med, "median_spike", ev)
+        s"(bench_full.json/BENCH_r*.json missing, unparsable, other sf than $sfDir or other basis than $Basis) " +
+        "- regressions are NOT being checked this run")
+    val prevMedians = (localBase.keySet ++ driverBase.keySet)
+      .map(k => k -> (localBase.get(k) ++ driverBase.get(k)).min).toMap
+
+    /** The top `n` operators by time of one more execution of `name`.
+      * collect(), not count(): count() plans a separate query and
+      * leaves `df`'s own SQLMetrics at zero. */
+    def topOps(name: String, n: Int): Seq[ListMap[String, Any]] = try {
+      val df = fnByName(name)(spark, sfDir)
+      df.collect()
+      Explain.opMetrics(df).orderBy(col("time_ms").desc).limit(n).collect()
+        .toSeq.map(r => ListMap("op" -> r.getString(1), "rows" -> r.getLong(2),
+          "time_ms" -> r.getLong(3), "bytes" -> r.getLong(4)))
+    } catch { case NonFatal(_) => Nil }
+
+    def slipped(v: Double, prev: Double, by: Double) = v > prev * by && v - prev > 0.25
+    val flags = results.flatMap { q =>
+      prevMedians.get(q.name).collect {
+        case p if slipped(q.med, p, 1.25) && slipped(q.min, p, 1.25) => (q, p, "tripwire")
+        case p if slipped(q.med, p, 2.5) => (q, p, "median_spike")
       }
-    }
-    val confirmations = flagged.map { case (name, prev, med, kind, ev) =>
+    }.map { case (q, prev, kind) =>
       System.gc()
-      val iso = (1 to 3).map(_ => instrumentedRun(name, fnByName(name)))
-      val byWall = iso.sortBy(_._1)
-      val (isoMin, isoMinCpu) = (byWall.head._1, byWall.head._2)
-      val isoMed = byWall(1)._1
-      // state-loss evidence (VERDICT r15 #1b): judged on the FASTEST
-      // isolated run only — the first re-run legitimately rebuilds
-      // frames the sweep trimmed since this query ran (min-of-3 already
-      // excludes that cost), but if even the fastest run was rebuilding
-      // registry state or had lost cached blocks, the measured cost is
-      // state-dependent, not plan cost
-      val minLoss = (byWall.head._4, byWall.head._5, byWall.head._6)
-      val stateLoss = minLoss._1 + minLoss._2 + minLoss._3 > 0
-      val prevCpu = localBaseCpu.get(name)
-      val verdict = BenchVerdict.of(prev, prevCpu, isoMin, isoMinCpu,
-        anyError = iso.exists(!_._3), stateLoss = stateLoss)
-      // CONFIRMED slips get operator-level attribution (VERDICT r12 #9:
-      // the rt_timers/MathLedger analog): one more execution, then the
-      // top-5 operators by time from the executed plan's SQLMetrics —
-      // so the next regression forensics starts from "which operator"
-      // instead of a bare wall number.
-      if (verdict == "confirmed") try {
-        val df = fnByName(name)(spark, sfDir)
-        // collect(), NOT count(): count() runs a SEPARATE QueryExecution
-        // (groupBy().count()), leaving df's own executedPlan unexecuted
-        // and every SQLMetric at 0 (ADVICE r13). Registry results are
-        // bounded, so a full collect is cheap.
-        df.collect()
-        Explain.opMetrics(df)
-          .orderBy(org.apache.spark.sql.functions.col("time_ms").desc)
-          .limit(5).collect().foreach { r =>
-            System.err.println(s"REGOP $name op=${r.getString(1)} " +
-              s"rows=${r.getLong(2)} time_ms=${r.getLong(3)} " +
-              s"bytes=${r.getLong(4)}")
-          }
-      } catch { case _: Throwable => () }
-      (name, prev, med, isoMed, isoMin, isoMinCpu,
-        prevCpu.getOrElse(-1.0), verdict, kind, ev, minLoss)
-    }
-    // compact form for the size-capped stdout line: CONFIRMED slips and
-    // ERRORS only (weather flags are, by verdict, not regressions —
-    // they'd also blow the driver's 2000-char stdout cap on a noisy
-    // run); the full annotation set lands in bench_full.json below
-    val weatherFlags = confirmations.count(_._8 == "weather")
-    val regJson = confirmations.filter(c => c._8 != "weather").take(10).map {
-      case (k, prev, med, _, isoMin, isoCpu, _, verdict, _, _, _) =>
-        "\"" + k + "\":[" + fmt(prev) + "," + fmt(med) + "," +
-          fmt(isoMin) + "," + fmt(isoCpu) + ",\"" + verdict + "\"]"
-    }.mkString("{", ",", "}")
-    // ... and the full annotation for bench_full.json — each flag
-    // carries {wall, cpu, verdict} as r11 #1 prescribes
-    val regJsonFull = confirmations.take(10).map {
-      case (k, prev, med, isoMed, isoMin, isoCpu, prevCpu, verdict, kind,
-            ev, (isoMiss, isoEvict, isoLoss)) =>
-        // per-flag sweep-run evidence (VERDICT r13 #3 + r15 #1a): GC
-        // ms, spill MB, storage-blocks-dropped, and the registry
-        // hit/miss/evict + cached-block-loss deltas accumulated across
-        // the query's 3 timed sweep runs, plus the ISOLATED min run's
-        // state deltas (the BenchVerdict state_loss inputs) — a
-        // med>>iso flag with ~0 everywhere is host weather by
-        // elimination, a fat value names the mechanism
-        s""""$k":{"prev":${fmt(prev)},"med":${fmt(med)},"iso_med":${
-          fmt(isoMed)},"iso_min":${fmt(isoMin)},"cpu":${fmt(isoCpu)},"prev_cpu":${
-          fmt(prevCpu)},"verdict":"$verdict","flag":"$kind","sweep_gc_ms":${ev.gcMs},"sweep_spill_mb":${
-          fmt(ev.spillBytes / 1048576.0)},"sweep_mem_drops":${ev.memDrops},"sweep_reg":[${
-          ev.regHits},${ev.regMisses},${ev.regEvictions},${ev.blockLoss}],"iso_min_reg":[$isoMiss,$isoEvict,$isoLoss]}"""
-    }.mkString("{", ",", "}")
-    // Cold-path lane (VERDICT r10 #3): the memo/artifact families bench
-    // their warm consumer path in the sweep — a production user also
-    // pays the build. Time those again with every memo, the dedup
-    // registry, and the pair-artifact table cleared before each run;
-    // report cold beside warm in bench_full.json. SPARK_GRAFT_COLD=1
-    // widens the lane to every query (full cold sweep).
-    val coldFamily = Set("q210_pair_artifact", "q232_train_classifier",
-      "q234_classifier_gate", "q237_kmeans", "q238_cluster_balanced_sample",
-      "q239_semdedup_kmeans", "q242_ivf_trained", "q250_ivfpq_trained",
-      "q253_model_artifact", "q254_classifier_artifact",
-      "q255_bpe_artifact", "q260_bloom_artifact", "q261_dsir_artifact",
-      // BPE trainers memo-hit after r13 — the cold lane keeps the
-      // driver-sequenced training cost measured
-      "q225_bpe_merges", "q226_bpe_segments", "q243_bpe_fertility")
-    val coldAll = sys.env.get("SPARK_GRAFT_COLD").contains("1")
-    def coldReset(): Unit = {
-      FrameCache.clear()
-      val pairTable = "graft_pairs_" + sfDir.replaceAll("[^a-zA-Z0-9]", "_")
-      try spark.sql(s"DROP TABLE IF EXISTS `$pairTable`")
-      catch { case _: Throwable => () }
-      // NOTE: model ARTIFACTS (Models.ensure*) survive the cold reset by
-      // design — cold q253 measures the serve-from-artifact path a fresh
-      // session pays (one tiny parquet read), vs cold q250's full
-      // retrain. The memo clears above make that split honest.
-    }
-    // A cold run that THROWS is recorded as a failure, not a timing —
-    // timing the exception path would hand queries_cold a bogus fast
-    // median (ADVICE r11).
-    val coldResults: Seq[(String, Option[Double])] = selected
-      .filter { case (n, _) => coldAll || coldFamily(n) }
-      .map { case (name, fn) =>
-        val runs = (1 to 3).map { _ =>
-          // cold resets unpersist everything — deliberate teardown,
-          // never BlockManager-initiated loss
-          evictTracker.deliberately { coldReset(); System.gc(); drainListenerBus() }
-          val (dt, _, ok) = timedRun(fn)
-          (dt, ok)
-        }
-        if (runs.forall(_._2)) (name, Some(runs.map(_._1).sorted.apply(1)))
-        else (name, None)
+      val iso = Seq.fill(3)(instrumented(fnByName(q.name))).sortBy(_.wall)
+      // state loss is judged on the fastest re-run: the first may rebuild
+      // frames the sweep trimmed since this query ran
+      val verdict = BenchVerdict.of(prev, localBaseCpu.get(q.name),
+        iso.head.wall, iso.head.cpu, anyError = iso.exists(!_.ok),
+        stateLoss = iso.head.stateLoss)
+      if (verdict == "confirmed") topOps(q.name, 5).foreach { op =>
+        System.err.println(s"REGOP ${q.name} " +
+          op.map { case (k, v) => s"$k=$v" }.mkString(" "))
       }
-    val coldJson = coldResults.collect { case (k, Some(med)) =>
-      "\"" + k + "\":" + fmt(med) }.mkString("{", ",", "}")
-    val coldFailed = coldResults.collect { case (k, None) => k }
-    val coldFailedJson =
-      coldFailed.take(10).map("\"" + _ + "\"").mkString("[", ",", "]")
-    // Per-query registry-state deltas, non-zero rows only (VERDICT r15
-    // #1a): a query whose timed sweep runs carried registry misses,
-    // evictions, or cached-block loss was measured REBUILDING state —
-    // the judge (and the next round's forensics) reads which timings
-    // are state-dependent without REGDBG log archaeology.
-    val queriesRegJson = results.collect {
-      case (k, _, _, _, _, ev)
-        if ev.regMisses + ev.regEvictions + ev.blockLoss > 0 =>
-        s""""$k":{"hits":${ev.regHits},"miss_by_run":[${
-          ev.missByRun.mkString(",")}],"evict":${ev.regEvictions},"block_loss":${
-          ev.blockLoss}}"""
-    }.mkString("{", ",", "}")
-    // Registry/cache-warm medians this run SEATED (VERDICT r15 #1c):
-    // flagged only on the q199 signature — executor CPU both far below
-    // wall (the work wasn't executed) AND collapsed ≥3× vs the query's
-    // OWN previous seat (r15 seated q199 at 0.066 s CPU vs its honest
-    // 2.4-4.2 s — a 40× collapse; honest plan-dominated queries have
-    // STABLE low cpu across rounds and never trip the collapse arm).
-    // The next run's loader drops exactly these from its wall baseline.
-    val warmSuspectJson = results.collect {
-      case (k, med, _, cpuMed, _, _)
-        if med > 0.15 && cpuMed < 0.35 * med &&
-          localBaseCpu.get(k).exists(pc => pc > 0 && cpuMed < 0.33 * pc) =>
-        "\"" + k + "\""
-    }.mkString("[", ",", "]")
-    val allQs = results.map { case (k, med, _, _, _, _) => "\"" + k + "\":" + fmt(med) }
-      .mkString("{", ",", "}")
-    val allMins = results.map { case (k, _, mn, _, _, _) => "\"" + k + "\":" + fmt(mn) }
-      .mkString("{", ",", "}")
-    val allCpus = results.map { case (k, _, _, cpu, _, _) => "\"" + k + "\":" + fmt(cpu) }
-      .mkString("{", ",", "}")
-    val failedNames = results.collect { case (k, _, _, _, false, _) => k }
-    val failed = failedNames.take(10).map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = results.map(_._2).sum
-    val totalMin = results.map(_._3).sum
-    val totalCpu = results.map(_._4).sum
-    // Cold-vs-warm surfaced in the driver contract line (VERDICT r11
-    // #5): lane total + the 5 biggest cold-minus-warm deltas — the
-    // build-cost shape a first-call production user pays, without
-    // blowing the stdout size cap.
-    val warmByName = results.map(r => r._1 -> r._2).toMap
-    val coldTotal = coldResults.flatMap(_._2).sum
-    val coldDeltas = coldResults
-      .collect { case (k, Some(med)) =>
-        (k, med - warmByName.getOrElse(k, 0.0)) }
-      .sortBy(-_._2).take(5)
-      .map { case (k, d) => "\"" + k + "\":" + fmt(d) }
-      .mkString("{", ",", "}")
-    val coldHeadline =
-      s"""{"total":${fmt(coldTotal)},"top_deltas":$coldDeltas}"""
-    // Operator-level attribution for the 5 slowest queries of EVERY
-    // full run (VERDICT r13 #7 — not only confirmed regressions): one
-    // extra warm execution each, then the top-3 operators by time from
-    // the executed plan's SQLMetrics. Makes the judge's plan audit of
-    // the expensive tail evidence-based at ~5 s cost per sweep.
-    val topOpsJson =
-      if (only.isDefined) "{}"
-      else results.sortBy(-_._2).take(5).map { case (name, _, _, _, _, _) =>
-        val ops = try {
-          val df = fnByName(name)(spark, sfDir)
-          df.collect() // same QueryExecution — populates its SQLMetrics
-          Explain.opMetrics(df)
-            .orderBy(org.apache.spark.sql.functions.col("time_ms").desc)
-            .limit(3).collect().map { r =>
-              s"""{"op":"${r.getString(1).replace("\"", "'")}","rows":${
-                r.getLong(2)},"time_ms":${r.getLong(3)},"bytes":${
-                r.getLong(4)}}"""
-            }.mkString("[", ",", "]")
-        } catch { case _: Throwable => "[]" }
-        "\"" + name + "\":" + ops
-      }.mkString("{", ",", "}")
-    // Full per-query detail for human/judge inspection — the stdout line
-    // below must stay short (the driver keeps only a 2000-char tail of
-    // stdout, and a 118-query map overflows it → BENCH parsed:null).
-    val fullJson = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","stat":"median_of_3","value_min":${fmt(totalMin)},"value_cpu":${fmt(totalCpu)},"nq":${results.size},"nfailed":${failedNames.size},"registry":$registryJson,"regressions":$regJsonFull,"top_ops":$topOpsJson,"queries":$allQs,"queries_min":$allMins,"queries_cpu":$allCpus,"queries_reg":$queriesRegJson,"warm_suspect":$warmSuspectJson,"queries_cold":$coldJson,"cold_failed":$coldFailedJson,"failed":$failed,"sf":"$sfDir"}"""
-    // partial (SPARK_GRAFT_ONLY) debug runs must NOT clobber the
-    // committed full-run file — it is the tripwire's baseline
+      Flag(q, prev, kind, iso, verdict)
+    }
+
+    val pairTable = "graft_pairs_" + sfDir.replaceAll("[^a-zA-Z0-9]", "_")
+    val cold = selected.filter(q => coldFamily(q._1)).map { case (name, fn) =>
+      val runs = Seq.fill(3) {
+        deliberately {
+          FrameCache.clear()
+          try spark.sql(s"DROP TABLE IF EXISTS `$pairTable`")
+          catch { case NonFatal(_) => () }
+        }
+        call(fn)
+      }
+      name -> Option.when(runs.forall(_._3))(runs.map(_._1).sorted.apply(1))
+    }
+    val coldMeds = cold.collect { case (k, Some(med)) => k -> med }
+    val warmByName = results.map(q => q.name -> q.med).toMap
+
+    val st = FrameCache.stats
+    val failed = results.filterNot(_.ok).map(_.name)
+    def perQuery(qs: Seq[Swept])(f: Swept => Double) = ListMap(qs.map(q => q.name -> r3(f(q))): _*)
+    val head = ListMap("metric" -> "total", "value" -> r3(results.map(_.med).sum),
+      "unit" -> "sec", "stat" -> "median_of_3",
+      "value_min" -> r3(results.map(_.min).sum),
+      "value_cpu" -> r3(results.map(_.cpu).sum),
+      "nq" -> results.size, "nfailed" -> failed.size,
+      // evictions > 0 is LRU-cap thrash; trims are the sweep's own;
+      // block_loss is BlockManager-initiated loss of cached blocks
+      "registry" -> ListMap("hits" -> st.hits, "misses" -> st.misses,
+        "evictions" -> st.evictions, "entries" -> st.frames,
+        "cap" -> FrameCache.maxCached, "trims" -> st.trims,
+        "peak_entries" -> st.peakFrames, "trim_keep" -> 0,
+        "block_loss" -> evictTracker.lost))
+    val tail = ListMap("failed" -> failed.take(10), "sf" -> sfDir, "basis" -> Basis)
+
+    val full = head ++ ListMap(
+      "regressions" -> ListMap(flags.take(10).map { f =>
+        val (m, ev) = (f.iso.head, f.q.ev)
+        f.q.name -> ListMap("prev" -> r3(f.prev), "med" -> r3(f.q.med),
+          "iso_med" -> r3(f.iso(1).wall), "iso_min" -> r3(m.wall),
+          "cpu" -> r3(m.cpu), "prev_cpu" -> r3(localBaseCpu.getOrElse(f.q.name, -1.0)),
+          "verdict" -> f.verdict, "flag" -> f.kind, "sweep_gc_ms" -> ev.gcMs,
+          "sweep_spill_mb" -> r3(ev.spillBytes / 1048576.0),
+          "sweep_mem_drops" -> ev.memDrops,
+          "sweep_reg" -> Seq(ev.regHits, ev.regMisses, ev.regEvictions, ev.blockLoss),
+          "iso_min_reg" -> Seq(m.misses, m.evictions, m.blockLoss))
+      }: _*),
+      "top_ops" -> (if (only.isDefined) ListMap.empty
+        else ListMap(results.sortBy(-_.med).take(5).map(q => q.name -> topOps(q.name, 3)): _*)),
+      "queries" -> perQuery(results)(_.med),
+      "queries_min" -> perQuery(results)(_.min),
+      "queries_cpu" -> perQuery(results)(_.cpu),
+      "queries_reg" -> ListMap(results.filter(q =>
+          q.ev.regMisses + q.ev.regEvictions + q.ev.blockLoss > 0).map { q =>
+        q.name -> ListMap("hits" -> q.ev.regHits, "miss_by_run" -> q.ev.missByRun,
+          "evict" -> q.ev.regEvictions, "block_loss" -> q.ev.blockLoss)
+      }: _*),
+      // seated registry-warm medians: cpu far below wall AND collapsed
+      // ≥3× against the query's own previous seat
+      "warm_suspect" -> results.filter(q => q.med > 0.15 && q.cpu < 0.35 * q.med &&
+        localBaseCpu.get(q.name).exists(pc => pc > 0 && q.cpu < 0.33 * pc)).map(_.name),
+      "queries_cold" -> ListMap(coldMeds.map { case (k, v) => k -> r3(v) }: _*),
+      "cold_failed" -> cold.collect { case (k, None) => k }.take(10)) ++ tail
     if (only.isEmpty)
-      try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("bench_full.json"), fullJson + "\n")
-      catch { case _: Throwable => () }
-    // Headline subset: one representative per operator family. Keep this
-    // line under ~1500 chars or the driver cannot parse it.
-    val headline = Set(
-      "q1_agg", "q3_join_inner", "q6_ismember", "q7_gb_quantiles",
-      "q10_rolling", "q15_asof_backward", "q22_pivot", "q28_jaccard",
-      "q29_minhash", "q31_ann_brute", "q38_ema_decay", "q47_simhash_near",
-      "q48_ann_lsh", "q62_ngroup", "q66_parquet_partitioned",
-      "q79_qcut_scale", "q82_ann_ivf", "q83_asof_exec", "q86_tpch_q3",
-      "q87_tpch_q5", "q91_simhash_verified", "q99_apply_groups",
-      "q119_dup_clusters", "q128_edit_distance", "q130_tfidf",
-      "q135_tpch_q6", "q136_tpch_q10", "q145_bday_shift", "q146_tpch_q21",
-      "q149_apply_batch", "q153_tpch_q17", "q156_tpch_q2",
-      "q185_incremental_dedup", "q187_kmv_distinct", "q192_countmin_hh",
-      "q195_dedup_clean", "q196_hist_quantiles", "q198_pca_project",
-      "q200_curation_e2e", "q210_pair_artifact", "q248_rank_methods",
-      "q249_pq_trained", "q250_ivfpq_trained", "q251_semantic_leakage",
-      "q252_decontam_spans", "q253_model_artifact",
-      "q254_classifier_artifact", "q255_bpe_artifact",
-      // r14 flagships: contamination report, release gate, crawl ops,
-      // chunk-parallel rolling
-      "q262_contamination_report", "q264_release_gate",
-      "q265_crawl_ops", "q266_rolling_chunked",
-      // r15: chunk-parallel EMA
-      "q272_ema_chunked",
-      // r16: RANGE-frame timewindow hatch + chunked ema_normal +
-      // filter/reset through the chunked EMA decomposition
-      "q274_timewindow_chunked", "q275_ema_normal_chunked",
-      "q276_ema_filtered_chunked", "q277_ema_normal_filtered_chunked",
-      "q278_pagerank", "q280_focused_pagerank")
-    // partial runs are small — print every timed query, not just the
-    // headline subset (the 1500-char stdout cap only binds full runs)
-    val qs = results.collect {
-      case (k, med, _, _, _, _) if headline(k) || only.isDefined =>
-        "\"" + k + "\":" + fmt(med) }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","stat":"median_of_3","value_min":${fmt(totalMin)},"value_cpu":${fmt(totalCpu)},"nq":${results.size},"nfailed":${failedNames.size},"registry":$registryJson,"regressions":$regJson,"weather_flags":$weatherFlags,"cold":$coldHeadline,"queries":$qs,"failed":$failed,"sf":"$sfDir"}""")
+      try Files.writeString(Paths.get("bench_full.json"), mapper.writeValueAsString(full) + "\n")
+      catch { case NonFatal(_) => () }
+
+    // the stdout line: confirmed slips and errors only (weather is, by
+    // verdict, no regression) and the headline queries, or every query
+    // of a SPARK_GRAFT_ONLY run
+    println(mapper.writeValueAsString(head ++ ListMap(
+      "regressions" -> ListMap(flags.filter(_.verdict != "weather").take(3).map { f =>
+        f.q.name -> Seq(r3(f.prev), r3(f.q.med), r3(f.iso.head.wall), r3(f.iso.head.cpu), f.verdict)
+      }: _*),
+      "weather_flags" -> flags.count(_.verdict == "weather"),
+      "cold" -> ListMap("total" -> r3(coldMeds.map(_._2).sum),
+        "top_deltas" -> ListMap(coldMeds.map { case (k, v) => k -> (v - warmByName.getOrElse(k, 0.0)) }
+          .sortBy(-_._2).take(5).map { case (k, d) => k -> r3(d) }: _*)),
+      "queries" -> perQuery(results.filter(q => headline(q.name) || only.isDefined))(_.med)) ++ tail))
     spark.stop()
   }
 }

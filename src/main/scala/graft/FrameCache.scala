@@ -96,11 +96,15 @@ object FrameCache {
     * the three current sizes and `peakFrames`.
     *
     * `peakFrames` is the resident-frame high-water mark since
-    * [[resetPeak]]. It is the demand signal: Bench's between-query trim
-    * clamps the end-of-sweep frame count at its keep, so only the peak
-    * shows demand above it. Bench records it as `peak_entries` beside
-    * `trim_keep`; RegistrySweepSpec pins that the peak sees every
-    * resident frame and that a reset restarts it at the current count.
+    * [[resetPeak]]. It is the demand signal: Bench trims the registry
+    * to zero between queries, so only the peak shows the sweep's
+    * demand. Bench records it as `peak_entries` beside `trim_keep`
+    * (always 0; kept because RegistrySweepSpec's committed-file check
+    * reads it) in bench_full.json, which is on the noop basis
+    * (`"basis":"noop"`, also on an sf0.001 smoke's stdout line; a
+    * smoke overwrites bench_full.json, so restore it afterwards).
+    * RegistrySweepSpec pins that the peak sees every resident frame and
+    * that a reset restarts it at the current count.
     */
   final case class Stats(hits: Long, misses: Long, evictions: Long,
                          trims: Long, peakFrames: Long, frames: Long,

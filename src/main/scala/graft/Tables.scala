@@ -155,33 +155,35 @@ object Tables {
       case Some(st) =>
         val schema = FrameCache.memo(spark, "Tables.schema")(
           st.getPath.toString, st.getLen, st.getModificationTime)(
-          footerSchema(spark, st))
+          footer(spark, st)._1)
         spark.read.schema(schema).parquet(path)
     }
     (epochNanosContract.get(name).fold(raw)(normalizeEpochNanos(raw, _)),
       file.map(_.getLen))
   }
 
-  /** The Spark schema of one parquet file, read from its footer on the
-    * driver with no Spark job — what schema inference computes for a
-    * single file, without the job: the schema Spark stored when it
-    * wrote the file if present, otherwise the footer's parquet schema
-    * converted under the session's conf (which carries `nanosAsLong`
-    * and the binary/int96 settings).
+  /** (Spark schema, row count) of one parquet file, read from its
+    * footer on the driver with no Spark job. The schema is what schema
+    * inference computes for a single file, without the job: the schema
+    * Spark stored when it wrote the file if present, otherwise the
+    * footer's parquet schema converted under the session's conf (which
+    * carries `nanosAsLong` and the binary/int96 settings).
     */
-  private def footerSchema(spark: SparkSession,
-                           st: org.apache.hadoop.fs.FileStatus): StructType = {
+  private def footer(spark: SparkSession,
+                     st: org.apache.hadoop.fs.FileStatus): (StructType, Long) = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
     val reader = ParquetFileReader.open(
       HadoopInputFile.fromStatus(st, spark.sessionState.newHadoopConf()))
-    val meta = try reader.getFooter.getFileMetaData finally reader.close()
-    Option(meta.getKeyValueMetaData.get(SparkRowMetadataKey))
+    val (meta, rows) = try (reader.getFooter.getFileMetaData, reader.getRecordCount)
+      finally reader.close()
+    val schema = Option(meta.getKeyValueMetaData.get(SparkRowMetadataKey))
       .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
       .collect { case t: StructType => t }
       .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
         .convert(meta.getSchema))
+    (schema, rows)
   }
 
   // ParquetReadSupport.SPARK_METADATA_KEY
@@ -309,15 +311,38 @@ object Tables {
   }
 
   /** sds_info / sds_tree analog (`riptable/rt_sds.py:1015,1026`):
-    * inspect a parquet dataset's schema + size from footers without a
-    * full load.
+    * inspect a parquet file's or dataset directory's schema and row
+    * count from footers on the driver, without a load or a Spark job.
+    * The schema is the first data file's; the count sums every file's.
     */
   def info(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val df = spark.read.parquet(path)
-    val nRows = df.count() // footer-only: count(*) reads no column data
-    df.schema.fields.map(f => (f.name, f.dataType.simpleString, f.nullable, nRows))
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = fs.listStatus(p).toSeq.filter(st => st.isFile &&
+      !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName)
+    require(files.nonEmpty, s"no parquet files at $path")
+    val footers = files.map(footer(spark, _))
+    val nRows = footers.map(_._2).sum
+    footers.head._1.fields.map(f => (f.name, f.dataType.simpleString, f.nullable, nRows))
       .toSeq.toDF("column", "dtype", "nullable", "n_rows")
+  }
+
+  /** A path for query `name`'s construction-time writes at scale `dir`
+    * (q65's CSV, q66's partitioned parquet, q201's z-ordered files,
+    * q236's slices). Every path lies under one temp directory made once
+    * per JVM and deleted at its exit, so two JVMs never overwrite each
+    * other's files and repeat builds reuse one directory. It sits under
+    * java.io.tmpdir (/tmp), which `Explain.canonicalText` normalizes.
+    */
+  def scratch(name: String, dir: String): String =
+    s"$scratchRoot/${name}_${dir.replaceAll("[^0-9.]", "")}"
+
+  private lazy val scratchRoot: String = {
+    val d = java.nio.file.Files.createTempDirectory("graft_scratch").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(d))
+    d.toString
   }
 
   /** Sentinel↔null IO compatibility shim (SURVEY §4.3). Riptable

@@ -60,17 +60,16 @@ object Models {
     df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(path)
 
   /** Committed-artifact read: only a directory carrying _SUCCESS (a
-    * completed write) is served; anything else — absent, partial from
-    * a crashed writer, unreadable — reads as None and the caller
-    * rebuilds. Collect is model-sized by construction. */
+    * completed write) is served; one without it — absent, or partial
+    * from a crashed writer — reads as None and the caller rebuilds. A
+    * committed artifact that cannot be read raises: retraining would
+    * silently overwrite it. Collect is model-sized by construction. */
   private def readRows(spark: SparkSession, path: String)
       : Option[Array[org.apache.spark.sql.Row]] = {
     val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      if (!fs.exists(marker)) None
-      else Some(spark.read.parquet(path).orderBy("idx").collect())
-    } catch { case _: Throwable => None }
+    if (!fs.exists(marker)) None
+    else Some(spark.read.parquet(path).orderBy("idx").collect())
   }
 
   // ---- k-means centroids (integer micro-units) -----------------------

@@ -386,7 +386,7 @@ private[graft] object QueriesCore {
     "q65_csv_roundtrip" -> ((s, dir) => {
       // load_csv_as_dataset analog (riptable/rt_csv.py:15): write the part
       // table to CSV, read it back with schema inference, aggregate.
-      val tmp = s"/tmp/graft_csv_${dir.replaceAll("[^0-9.]", "")}"
+      val tmp = Tables.scratch("q65", dir)
       t(s, dir, "part").write.mode("overwrite").option("header", "true").csv(tmp)
       s.read.option("header", "true").option("inferSchema", "true").csv(tmp)
         .groupBy(col("p_brand"))
@@ -398,7 +398,7 @@ private[graft] object QueriesCore {
       // save_sds/load_sds + PDataset analog (riptable/rt_sds.py:719,1855;
       // rt_pdataset.py:18): partitioned parquet write, read back with
       // partition pruning, per-partition aggregate.
-      val tmp = s"/tmp/graft_pq_${dir.replaceAll("[^0-9.]", "")}"
+      val tmp = Tables.scratch("q66", dir)
       t(s, dir, "orders").write.mode("overwrite")
         .partitionBy("o_orderstatus").parquet(tmp)
       s.read.parquet(tmp)

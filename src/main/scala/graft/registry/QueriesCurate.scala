@@ -338,7 +338,7 @@ private[graft] object QueriesCurate {
         .orderBy(col("source"), col("q"))),
 
     "q201_zorder_scan" -> ((s, dir) => {
-      val tmp = s"/tmp/graft_zord_${dir.replaceAll("[^0-9.]", "")}"
+      val tmp = Tables.scratch("q201", dir)
       Tables.writeZOrdered(
         t(s, dir, "events").select(col("event_id"), col("user_id"),
           col("value")),

@@ -698,8 +698,7 @@ private[graft] object QueriesTime {
     // base table, so the round trip (write → stacked read → tag) is
     // value-checked, not just row-counted
     "q236_stacked_load" -> ((s, dir) => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_stack").toString
+      val out = Tables.scratch("q236", dir)
       val o = t(s, dir, "orders")
       o.filter(col("o_orderkey") % 2 === 0)
         .write.mode("overwrite").parquet(out + "/even")

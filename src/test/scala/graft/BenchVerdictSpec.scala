@@ -78,3 +78,58 @@ class BenchVerdictSpec extends AnyFunSuite {
       stateLoss = true) === "error")
   }
 }
+
+/** Pins [[Bench.baseline]]: which files the tripwire compares against,
+  * and that a comparison never crosses scales or timed units. */
+class BenchBaselineSpec extends AnyFunSuite {
+  private val sf = "/root/testdata/sf0.1"
+  private val none = (Map.empty[String, Double], Map.empty[String, Double])
+
+  test("a pretty-printed bench_full.json with reordered keys parses") {
+    val json =
+      s"""{
+         |  "queries_cpu" : { "q1_agg" : 0.9, "q2_b" : 2.0 },
+         |  "basis" : "noop",
+         |  "top_ops" : { "q2_b" : [ { "op" : "Sort", "rows" : 3 } ] },
+         |  "queries" : {
+         |    "q2_b" : 1.5,
+         |    "q1_agg" : 0.25
+         |  },
+         |  "sf" : "$sf"
+         |}""".stripMargin
+    assert(Bench.baseline(json, sf) ===
+      ((Map("q1_agg" -> 0.25, "q2_b" -> 1.5), Map("q1_agg" -> 0.9, "q2_b" -> 2.0))))
+  }
+
+  test("the driver's {n, parsed} shape reads its parsed object") {
+    val json = s"""{"n":18,"rc":0,"sf":0.1,"tail":"…","parsed":""" +
+      s"""{"queries":{"q1_agg":0.5},"sf":"$sf","basis":"noop"}}"""
+    assert(Bench.baseline(json, sf) === ((Map("q1_agg" -> 0.5), Map.empty)))
+  }
+
+  test("warm_suspect names leave the walls and stay in the cpus") {
+    val json = s"""{"sf":"$sf","basis":"noop","warm_suspect":["q199_x"],""" +
+      """"queries":{"q199_x":0.2,"q1_agg":0.5},"queries_cpu":{"q199_x":0.07}}"""
+    assert(Bench.baseline(json, sf) ===
+      ((Map("q1_agg" -> 0.5), Map("q199_x" -> 0.07))))
+  }
+
+  test("another sf, a missing or other basis, or malformed text give " +
+    "empty maps") {
+    def file(sfv: String, basis: String) =
+      s"""{"sf":"$sfv"$basis,"queries":{"q1_agg":0.5}}"""
+    assert(Bench.baseline(file(sf, ""","basis":"noop""""), sf)._1.nonEmpty)
+    assert(Bench.baseline(file("/root/testdata/sf0.01", ""","basis":"noop""""), sf) === none)
+    assert(Bench.baseline(file(sf, ""), sf) === none)
+    assert(Bench.baseline(file(sf, ""","basis":"count""""), sf) === none)
+    assert(Bench.baseline("""{"sf":"/root/testdata/sf0.1","queries":{""", sf) === none)
+    assert(Bench.baseline("", sf) === none)
+    assert(Bench.baseline("""{"parsed":null}""", sf) === none)
+  }
+
+  test("the committed BENCH_r17.json (count basis) gives empty maps") {
+    val txt = java.nio.file.Files.readString(java.nio.file.Paths.get("BENCH_r17.json"))
+    assert(txt.contains("\"queries\""))
+    assert(Bench.baseline(txt, sf) === none)
+  }
+}

@@ -401,10 +401,33 @@ class LayerSpec extends SparkSpec {
   }
 
   test("Tables.info reports schema and row count from the footer") {
-    val inf = Tables.info(spark, "/root/testdata/sf0.001/region.parquet")
-      .collect().map(r => r.getString(0) -> (r.getString(1), r.getLong(3))).toMap
+    val (inf, jobs) = jobsOf(Tables.info(spark, "/root/testdata/sf0.001/region.parquet")
+      .collect().map(r => r.getString(0) -> (r.getString(1), r.getLong(3))).toMap)
     assert(inf("r_regionkey") === (("int", 5L)))
     assert(inf("r_name")._1 === "string")
+    assert(jobs === 0, "Tables.info ran a Spark job")
+  }
+
+  test("construction-time writes share one per-JVM scratch directory") {
+    val dir = "/root/testdata/sf0.001"
+    def stackDirs = java.nio.file.Files.list(java.nio.file.Paths.get("/tmp")).toArray
+      .count(_.toString.startsWith("/tmp/graft_stack"))
+    val before = stackDirs
+    def parents(q: String) = SparkEntry.queries(q)(spark, dir).inputFiles.toSeq
+      .map(f => new org.apache.hadoop.fs.Path(f).getParent.getParent.toUri.getPath).toSet
+    val first = parents("q236_stacked_load")
+    assert(parents("q236_stacked_load") === first)
+    assert(first.size === 1, s"q236 read from $first")
+    assert(stackDirs === before, "a q236 build made a temp directory")
+    val root = new java.io.File(Tables.scratch("q236", dir)).getParent
+    Seq("q65_csv_roundtrip", "q66_parquet_partitioned", "q201_zorder_scan",
+      "q236_stacked_load").foreach { q =>
+      SparkEntry.queries(q)(spark, dir).inputFiles.foreach { f =>
+        val path = new org.apache.hadoop.fs.Path(f).toUri.getPath
+        assert(path.startsWith(root + "/"), s"$q read $path")
+        assert(!path.matches("/tmp/graft_(csv|pq|zord)_.*"), s"$q read $path")
+      }
+    }
   }
 
   test("accumRatio divides matching pivot cells") {

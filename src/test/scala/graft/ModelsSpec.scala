@@ -228,4 +228,24 @@ class ModelsSpec extends SparkSpec {
     assert(Models.trains === t0 + 2, "uncommitted artifact must rebuild")
     assert(m1.map(_.toSeq).toSeq === m0.map(_.toSeq).toSeq)
   }
+
+  test("a committed artifact with a corrupt part file raises, never " +
+    "retrains over it") {
+    val dir = tmpStore()
+    val a = corpus(spark)
+    Models.ensureCentroids(a, "vec_id", "embedding", 4, 1, dir = dir)
+    val sub = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+      .findFirst().get()
+    val part = java.nio.file.Files.list(sub).filter(p =>
+      p.getFileName.toString.startsWith("part-")).findFirst().get()
+    java.nio.file.Files.write(part, "not parquet".getBytes("UTF-8"))
+    // the checksum sidecar would flag the rewrite first; drop it so the
+    // parquet reader itself meets the corrupt bytes
+    java.nio.file.Files.deleteIfExists(
+      sub.resolve("." + part.getFileName.toString + ".crc"))
+    val t0 = Models.trains
+    intercept[Exception](
+      Models.ensureCentroids(a, "vec_id", "embedding", 4, 1, dir = dir))
+    assert(Models.trains === t0, "a corrupt committed artifact was retrained")
+  }
 }

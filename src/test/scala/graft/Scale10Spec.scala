@@ -144,22 +144,11 @@ class Scale10Spec extends SparkSpec {
     * want at 100×" grade from inference into arithmetic).
     */
   private def oneXWalls: Map[String, Double] = try {
-    val txt = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("bench_full.json")), "UTF-8")
-    val at = txt.indexOf("\"queries\":")
-    if (at < 0) Map.empty
-    else {
-      val open = txt.indexOf('{', at)
-      var i = open; var depth = 0
-      while (i < txt.length && (depth > 0 || i == open)) {
-        if (txt.charAt(i) == '{') depth += 1
-        else if (txt.charAt(i) == '}') depth -= 1
-        i += 1
-      }
-      val block = txt.substring(open + 1, math.max(open + 1, i - 1))
-      "\"([^\"]+)\"\\s*:\\s*([0-9.eE+-]+)".r.findAllMatchIn(block)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    }
+    import scala.jdk.CollectionConverters._
+    new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(java.nio.file.Files.readString(java.nio.file.Paths.get("bench_full.json")))
+      .path("queries").properties.asScala
+      .map(e => e.getKey -> e.getValue.asDouble).toMap
   } catch { case _: Throwable => Map.empty }
 
   test("flagship pipelines at 10x sf0.1: rows flow, per-task shuffle " +
